@@ -497,6 +497,31 @@ def test_graph_params_honored(spark, built_index):
     )
 
 
+def test_graph_seeds_only_returns_beam_per_segment(spark, built_index):
+    """max_iters=0 means seeds only, on both entry points: 4 segments ×
+    beam 2 PQ seeds = 8 candidates, so k=10 returns exactly 8 rows per
+    query (ef=20 stays below the 50-row segments, so no degenerate
+    all-rows pool)."""
+    idx, data, _ = built_index
+    qdf = _queries_df(spark, data, [0, 77, 150])
+    params = SearchParams(mode="GRAPH", ef=20, beam=2, max_iters=0)
+    for run in (idx.search, idx.search_join):
+        rows = run(qdf, k=10, params=params).collect()
+        assert _count_by(rows, "query_id") == {0: 8, 77: 8, 150: 8}, run.__name__
+
+
+def test_search_params_rejects_unknown_mode_and_seed_strategy():
+    """A misspelled mode or seed strategy fails at construction instead
+    of silently running another plan."""
+    with pytest.raises(ValueError, match="mode"):
+        SearchParams(mode="GARPH")
+    with pytest.raises(ValueError, match="seed_strategy"):
+        SearchParams(mode="GRAPH", seed_strategy="RANDOM")
+    for mode in ("AUTO", "BRUTE", "PQ", "GRAPH", "BEAM"):
+        SearchParams(mode=mode)
+    SearchParams(seed_strategy="RANDOM_PIVOTS")
+
+
 def _count_by(rows, key):
     out = {}
     for r in rows:
@@ -639,25 +664,33 @@ def test_cosine_graph_mode_recall(spark, cosine_index):
     assert hits / total >= 0.9
 
 
-def test_graph_traversal_broadcasts_frontier(spark, built_index):
-    """Scale contract: every traversal round probes adjacency/vectors
-    with a BROADCAST of the bounded frontier — the big tables are never
-    sort-merge shuffled (VERDICT r2 'What's wrong' #2)."""
-    from vectorsearch_spark.index import search as search_mod
-
-    idx, data, _ = built_index
-    qdf = _queries_df(spark, data, [0, 99])
-    search_mod._CAPTURE_TRAVERSAL_PLANS = True
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under a fresh Spark job group; return (result, number
+    of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        res = idx.search(qdf, k=10, params=SearchParams(mode="GRAPH"))
-        res.collect()
-        plans = list(search_mod._TRAVERSAL_PLANS)
+        out = fn()
     finally:
-        search_mod._CAPTURE_TRAVERSAL_PLANS = False
-    assert plans, "traversal ran at least one round"
-    for p in plans:
-        assert "BroadcastHashJoin" in p
-        assert "SortMergeJoin" not in p
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_graph_search_jobs_independent_of_max_iters(spark, built_index):
+    """GRAPH traversal runs inside the cogroup task: the number of
+    Spark jobs does not grow with the hop bound."""
+    idx, data, sealed = built_index
+    idx.codebooks_np(sealed)  # warm the driver cache: no codebook job
+    qdf = _queries_df(spark, data, [0, 99])
+    counts = {}
+    for hops in (1, 6):
+        params = SearchParams(mode="GRAPH", ef=20, max_iters=hops)
+        rows, counts[hops] = _jobs_launched(
+            spark, f"graph_hops_{hops}", lambda: idx.search(qdf, k=10, params=params).collect()
+        )
+        assert len(rows) == 2 * 10
+    assert counts[1] == counts[6] > 0, counts
 
 
 def test_codebook_cache_serves_and_invalidates(spark, built_index):
@@ -709,12 +742,13 @@ def test_create_or_open_round_trip(spark, tmp_path):
 
 def test_search_join_matches_brute(spark, built_index):
     """search_join ≡ mode=BRUTE search on the same batch, and the query
-    side reaches the executors through a broadcast join — never a
-    driver collect."""
+    side reaches the executors as a cogroup input — never a driver
+    collect: building the result launches no Spark job."""
     idx, data, _ = built_index
     qids = list(range(0, N, 3))
     qdf = _queries_df(spark, data, qids)
-    got = idx.search_join(qdf, k=5)
+    got, jobs = _jobs_launched(spark, "search_join_build", lambda: idx.search_join(qdf, k=5))
+    assert jobs == 0
     exact = idx.search(qdf, k=5, params=SearchParams(mode="BRUTE"))
 
     def key(rows):
@@ -725,7 +759,7 @@ def test_search_join_matches_brute(spark, built_index):
 
     assert key(got.collect()) == key(exact.collect())
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "FlatMapCoGroupsInPandas" in plan
 
 
 def test_search_join_derived_query_df_never_materialized(spark, built_index):
@@ -1046,17 +1080,19 @@ def test_search_join_graph_default_ef_recall_8_segments(spark, tmp_path_factory)
     assert len(built) == 8, built
     qids = list(range(0, 1000, 40))  # 25 self-queries
     qdf = _queries_df(spark, data, qids)
-    approx = idx.search_join(qdf, k=10, params=SearchParams(mode="GRAPH"))
-    exact = idx.search_join(qdf, k=10, params=SearchParams(mode="BRUTE"))
-    got = {}
-    for r in approx.collect():
-        got.setdefault(r["query_id"], set()).add(r["gid"])
-    hits = total = 0
-    for r in exact.collect():
-        total += 1
-        hits += r["gid"] in got.get(r["query_id"], set())
-    assert total == 25 * 10
-    assert hits / total >= 0.9, hits / total
+    exact = idx.search_join(qdf, k=10, params=SearchParams(mode="BRUTE")).collect()
+    # the default ef clamps to the 125-row segments; ef=30 prunes
+    for params in (SearchParams(mode="GRAPH"), SearchParams(mode="GRAPH", ef=30)):
+        approx = idx.search_join(qdf, k=10, params=params)
+        got = {}
+        for r in approx.collect():
+            got.setdefault(r["query_id"], set()).add(r["gid"])
+        hits = total = 0
+        for r in exact:
+            total += 1
+            hits += r["gid"] in got.get(r["query_id"], set())
+        assert total == 25 * 10
+        assert hits / total >= 0.9, (params, hits / total)
 
 
 def test_cosine_search_join_matches_brute_search(spark, cosine_index):

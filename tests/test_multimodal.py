@@ -403,6 +403,45 @@ def test_jpeg_rejects_corruption_and_unsupported():
         decode_jpeg(bytes(prog))
 
 
+def test_jpeg_rejects_dc_magnitude_above_16_in_dht():
+    """A corrupt DC Huffman table whose symbol (a magnitude category)
+    exceeds 16 is rejected while the DHT is parsed, with a JPEG error
+    — not a negative shift deep in the entropy decoder."""
+    import numpy as np
+    import pytest as _pytest
+
+    from vectorsearch_spark.functions.jpeg import decode_jpeg, encode_jpeg
+
+    # mid-gray level-shifts to DC 0: every block codes DC category 0
+    data = bytearray(encode_jpeg(np.full((16, 16), 128, dtype=np.uint8)))
+    dht = data.find(b"\xFF\xC4")
+    assert data[dht + 4] == 0x00  # first table: class 0 (DC), id 0
+    huffval = dht + 4 + 17
+    assert data[huffval] == 0  # the category-0 symbol, coded in every block
+    data[huffval] = 30
+    with _pytest.raises(ValueError, match="JPEG: corrupt DHT"):
+        decode_jpeg(bytes(data))
+
+
+def test_mjpeg_batched_encode_equals_per_frame_encode():
+    """The batched same-shape M-JPEG encoder is byte-identical to
+    concatenating per-frame ``encode_jpeg`` output — gray, 4:4:4 and
+    4:2:0 frames with odd dimensions (edge padding in both paths)."""
+    import numpy as np
+
+    from vectorsearch_spark.functions.jpeg import encode_jpeg, encode_mjpeg
+
+    rng = np.random.default_rng(11)
+    cases = [((13, 21), "4:4:4"), ((13, 21, 3), "4:4:4"), ((13, 21, 3), "4:2:0")]
+    for shape, sub in cases:
+        frames = [rng.integers(0, 256, shape, dtype=np.uint8) for _ in range(3)]
+        for quant in (None, 1):
+            expect = b"".join(
+                encode_jpeg(f, quant=quant, subsampling=sub) for f in frames
+            )
+            assert encode_mjpeg(frames, quant=quant, subsampling=sub) == expect, (shape, sub)
+
+
 def test_decode_media_dispatches_jpeg():
     import numpy as np
 

@@ -8,11 +8,13 @@ distance = 1 - similarity).
 
 Implementation stance: higher-order functions (``zip_with`` /
 ``aggregate``) over ``array<float>`` columns, accumulating in DOUBLE.
-These stay inside Catalyst/whole-stage-codegen — no Python round trip —
-so a 100 TB scan computes distances JVM-side at full speed. The
-reference's SIMD kernels (jdk.incubator.vector FMA) are replaced by
-codegen; bulk KNN uses the NumPy/GEMM path in ``operators/knn.py``
-instead, which is the batch-throughput equivalent.
+They run JVM-side with no Python round trip, but NOT inside
+whole-stage codegen: ``ZipWith``, ``ArrayAggregate`` and
+``ArrayTransform`` are ``CodegenFallback`` expressions (Spark 4.1.2), so
+they evaluate through the interpreted path inside a generated stage.
+Bulk KNN uses the NumPy/GEMM path in ``operators/knn.py`` instead,
+the batch-throughput equivalent of the reference's SIMD kernels
+(jdk.incubator.vector FMA).
 """
 
 from __future__ import annotations

@@ -197,15 +197,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, bits
 
 
-def _extend(bits: int, size: int) -> int:
-    # kept for reference; the decoder inlines this arithmetic
-    if size == 0:
-        return 0
-    if bits < (1 << (size - 1)):
-        return bits - (1 << size) + 1
-    return bits
-
-
 # ---------------------------------------------------------------------------
 # Encoder
 # ---------------------------------------------------------------------------
@@ -715,9 +706,17 @@ def _parse_jpeg_header(data: bytes) -> dict:
                 key = seg[p:p + 17 + nval]
                 lut = _DHT_LUT_CACHE.get(key)
                 if lut is None:
+                    huffval = list(seg[p + 17:p + 17 + nval])
+                    # a DC symbol is a magnitude category; baseline
+                    # coefficients need at most 16 bits (AC symbols
+                    # carry theirs in a 4-bit nibble, so cannot exceed it)
+                    if tc == 0 and huffval and max(huffval) > 16:
+                        raise ValueError(
+                            f"JPEG: corrupt DHT: DC magnitude category {max(huffval)} > 16"
+                        )
                     if len(_DHT_LUT_CACHE) > 64:
                         _DHT_LUT_CACHE.clear()
-                    lut = _huff_lut(list(seg[p + 1:p + 17]), list(seg[p + 17:p + 17 + nval]))
+                    lut = _huff_lut(list(seg[p + 1:p + 17]), huffval)
                     _DHT_LUT_CACHE[key] = lut
                 htables[(tc, th)] = lut
                 p += 17 + nval

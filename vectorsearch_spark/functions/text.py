@@ -52,54 +52,3 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-
-
-def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of the lowercased text."""
-    s = F.lower(_c(col))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1))),
-            lambda i: s.substr(i, F.lit(n)),
-        )
-    )
-
-
-def md5_hex(col: Column | str) -> Column:
-    return F.md5(_c(col).cast("string"))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as an array of ``num_hashes`` lowercase-hex
-    minima: sig[i] = min over shingles of md5(i || ':' || shingle).
-
-    The classic shingle→minhash construction with a portable salted-md5
-    hash family; lexicographic min of fixed-width hex ≡ numeric min.
-
-    CAVEAT (hot paths): any column that *re-references* this expression
-    (e.g. per-band slices) re-evaluates all num_hashes × |shingles| md5
-    calls each time — Catalyst does not hoist loop-invariant lambda
-    subexpressions. For bulk dedup use the explode→groupBy formulation
-    in ``operators.dedup.minhash_lsh_pairs``, which hashes each shingle
-    exactly once.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Banding: hash each contiguous ``rows_per_band`` slice of the
-    signature into one bucket key; docs sharing ANY band key are
-    candidate pairs."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            b.cast("string"),
-            F.lit("|"),
-            F.md5(F.concat_ws(",", F.slice(signature, b * rows_per_band + 1, rows_per_band))),
-        ),
-    )

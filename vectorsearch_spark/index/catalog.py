@@ -88,6 +88,7 @@ VECTORS_SCHEMA = T.StructType(
 
 PQ_SEED_ONLY = "PQ_SEED_ONLY"
 RANDOM_PIVOTS = "RANDOM_PIVOTS"
+SEARCH_MODES = ("AUTO", "BRUTE", "PQ", "GRAPH", "BEAM")
 
 
 @dataclass(frozen=True)
@@ -99,30 +100,51 @@ class SearchParams:
     (minHops), max_explore (maxExplore), pivots + seed_strategy
     (SearchParams.java:39-42, seeding at fdb/FdbVectorIndex.java:801-812),
     per_seg_limit (perSegmentLimitMultiplier resolved to an absolute
-    cap), normalize_on_read. Batch adaptations are documented at the
-    point of use in index/search.py.
+    cap), normalize_on_read. The comment on each field names the modes
+    that honor it; batch adaptations are documented in index/search.py.
+    An unknown ``mode`` or ``seed_strategy`` raises ``ValueError``.
     """
 
-    ef: int | None = None          # candidate pool for sealed path; None → auto
-    per_seg_limit: int | None = None  # None → max(k, k*oversample) (SearchParams.java:73-82)
-    # AUTO | BRUTE (exact everywhere) | GRAPH (best-first traversal) |
+    # PQ/GRAPH/BEAM: candidate pool per (query, sealed segment); None →
+    # auto. ef ≥ segment rows makes every row a candidate (exact).
+    ef: int | None = None
+    # every mode: per-segment result cap; None → max(k, k*oversample)
+    # (SearchParams.java:73-82)
+    per_seg_limit: int | None = None
+    # AUTO (PQ for search, BRUTE for search_join) | BRUTE (exact
+    # everywhere) | PQ (two-phase) | GRAPH (best-first traversal) |
     # BEAM (deprecated in the reference — WARN-once parity,
     # fdb/FdbVectorIndex.java:369-372 — but still served: a migrating
     # user's mode=BEAM queries keep working)
     mode: str = "AUTO"
     normalize_on_read: bool = False
-    beam: int | None = None        # GRAPH seed beam width; None → max(k, ef // 4)
-    max_iters: int = 6             # GRAPH frontier-expansion rounds (maxIters)
-    # minHops surface parity ONLY — no batch effect: the loop exits early
-    # only when a round finds NO new node, and an empty frontier makes
-    # further hops no-ops, so a minimum-hop floor cannot change results
+    # GRAPH: PQ seeds per (query, segment) under PQ_SEED_ONLY; BEAM:
+    # beam width. None → max(k, ef // 4)
+    beam: int | None = None
+    # GRAPH: hop bound — a node h hops from a seed is expanded only
+    # while h < max_iters (0 = seeds only); BEAM: expansion hops
+    max_iters: int = 6
+    # BEAM only: a hop that finds no new node ends the expansion only
+    # once min_hops hops have run
     min_hops: int = 0
-    max_explore: int | None = None  # cap on scored nodes per (query, segment) (maxExplore)
-    pivots: int = 8                # entry points per segment for RANDOM_PIVOTS
-    seed_strategy: str = PQ_SEED_ONLY  # PQ_SEED_ONLY | RANDOM_PIVOTS
-    # BEAM: pick the next frontier from newly∪frontier (True, the
+    # GRAPH/BEAM: cap on nodes visited per (query, segment), seeds included
+    max_explore: int | None = None
+    # GRAPH under RANDOM_PIVOTS, and BEAM: entry points per segment
+    pivots: int = 8
+    # GRAPH only: PQ_SEED_ONLY | RANDOM_PIVOTS (BEAM always uses pivots)
+    seed_strategy: str = PQ_SEED_ONLY
+    # BEAM only: pick the next frontier from newly∪frontier (True, the
     # reference default) or newly alone (SearchParams.java:25,45)
     refine_frontier: bool = True
+
+    def __post_init__(self) -> None:
+        if self.mode not in SEARCH_MODES:
+            raise ValueError(f"mode must be one of {SEARCH_MODES}; got {self.mode!r}")
+        if self.seed_strategy not in (PQ_SEED_ONLY, RANDOM_PIVOTS):
+            raise ValueError(
+                f"seed_strategy must be {PQ_SEED_ONLY!r} or {RANDOM_PIVOTS!r}; "
+                f"got {self.seed_strategy!r}"
+            )
 
 
 class VectorIndex:
@@ -489,8 +511,7 @@ class VectorIndex:
         params: SearchParams | None = None,
         filter_gids: DataFrame | None = None,
     ) -> DataFrame:
-        """Exhaustive-exact search with a DataFrame query side (never
-        collected) — for query batches beyond driver comfort."""
+        """``search`` whose ``mode="AUTO"`` is exhaustive-exact."""
         from vectorsearch_spark.index.search import search_join
 
         return search_join(

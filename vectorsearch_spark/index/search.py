@@ -1,41 +1,50 @@
-"""Batch KNN search with per-state dispatch: the Spark re-expression of
+"""Batch KNN search: the Spark re-expression of
 ``fdb/FdbVectorIndex.query`` (fdb/FdbVectorIndex.java:351-479).
 
-Plan per SURVEY §3.1, re-shaped for batch:
+``search`` and ``search_join`` are one pipeline. Both keep the query
+side a DataFrame (never collected to the driver); they differ only in
+what ``mode="AUTO"`` means — PQ two-phase for ``search``, exhaustive
+for ``search_join``. The pipeline has four steps:
 
-1. registry scan → seg_ids by state (F2 dispatch, WRITING excluded,
-   fdb/FdbVectorIndex.java:631-655);
-2. ACTIVE/PENDING → exact brute-force scan (filter deleted → score →
-   top-k; fdb/FdbVectorIndex.java:660-725) via the GEMM KNN operator;
-3. SEALED/COMPACTING → two-phase approx→exact:
-   a. PQ-code scan computing asymmetric LUT distances (L2² LUT,
-      fdb/FdbVectorIndex.java:1057-1079) with per-partition partial
-      top-ef — the batch equivalent of the BEST_FIRST traversal's
-      candidate pool (the reference itself seeds traversal from the
-      top-beam PQ scan; at batch scale the scan IS the search),
-   b. ef auto-tuned by segment size (adaptation of the √(nCodes/1000)
-      scaling at fdb/FdbVectorIndex.java:772-784),
-   c. exact re-rank: join candidates back to raw vectors, true-metric
-      rescore, filter tombstones (fdb/FdbVectorIndex.java:970-1046),
-      optional normalize-on-read (823-826);
-4. per-segment cap max(k, k·oversample) (api/SearchParams.java:73-82)
-   then global merge → top-k by score with gid tie-break
-   (fdb/FdbVectorIndex.java:432-437).
+1. registry dispatch → seg_ids by state (WRITING excluded,
+   fdb/FdbVectorIndex.java:631-655); ``mode="BRUTE"`` sends every
+   segment to step 2;
+2. one exact brute-force scan of the ACTIVE/PENDING segments (filter
+   deleted → score → per-segment top-k, fdb/FdbVectorIndex.java:660-725)
+   with the NumPy GEMM kernel of ``operators/knn.py``;
+3. one in-task candidate generator per mode for the SEALED/COMPACTING
+   segments, over the PQ codes (and the neighbor graph):
+   - PQ: asymmetric LUT distances over the whole segment (L2² LUT,
+     fdb/FdbVectorIndex.java:1057-1079), top-ef per (query, segment);
+   - GRAPH: best-first ef-search (fdb/FdbVectorIndex.java:911-968)
+     from PQ or random-pivot seeds (794-812);
+   - BEAM: the deprecated beam expansion (diskannExpand, 841-903);
+   ef is auto-tuned by segment size (adaptation of 772-784), and when
+   ef ≥ segment rows every row is a candidate — the degenerate rule
+   that makes every exhaustive twin equal brute force;
+4. one exact re-rank of the candidates (join back to raw vectors,
+   true-metric rescore, tombstone filter, fdb/FdbVectorIndex.java:
+   970-1046; optional normalize-on-read, 823-826), per-segment cap
+   max(k, k·oversample) (api/SearchParams.java:73-82), then the global
+   merge → top-k by score with gid tie-break (432-437).
 
-Scale: the codes scan reads only (seg_id, vec_id, codes) — column
-pruning leaves the embeddings un-read until re-rank, which touches
-only Q×S×ef rows. Both scans emit bounded candidate sets per
-partition, so no shuffle is ever O(N).
+Steps 2 and 3 share one fragment-and-replicate cogroup: the segment's
+rows are bucketed by hash(seg_id), so a segment lives in exactly one
+task, and the query DataFrame is replicated to every bucket. Both emit
+bounded candidate sets per (query, segment), so no shuffle past the
+scan is ever O(N); the codes scan never reads the embeddings, which
+only the re-rank touches, for ≤ Q×S×ef rows.
 """
 
 from __future__ import annotations
 
+import heapq
 import math
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearch_spark.config import (
@@ -48,11 +57,16 @@ from vectorsearch_spark.functions.distances import (
     normalize,
     score_from_distance,
 )
-from vectorsearch_spark.index.catalog import SearchParams, VectorIndex
-from vectorsearch_spark.operators.knn import _partial_topk_mapper
+from vectorsearch_spark.index.catalog import PQ_SEED_ONLY, SearchParams, VectorIndex
+from vectorsearch_spark.operators.knn import partial_topk
 from vectorsearch_spark.operators.pq import approx_distances, build_lut
 
-_CAND_SCHEMA = "query_id long, seg_id int, vec_id int, approx double"
+_CAND_SCHEMA = "query_id long, seg_id int, vec_id int"
+_HIT_SCHEMA = "query_id long, gid long, distance double"
+_RESULT_SCHEMA = (
+    "query_id long, gid long, distance double, score double, payload binary, rank int"
+)
+_PANDAS_TYPES = {"long": "int64", "int": "int32", "double": "float64"}
 
 
 def default_ef(k: int, oversample: int) -> int:
@@ -67,76 +81,6 @@ def tuned_ef(ef_base: int, k: int, n_codes: int) -> int:
     (fdb/FdbVectorIndex.java:772-784)."""
     scale = max(1.0, math.sqrt(n_codes / 100_000.0))
     return max(k, min(n_codes, int(round(ef_base * scale))))
-
-
-def _pq_scan_fn(
-    codebooks, queries: list[tuple[int, list[float]]],
-    ef_by_seg: dict[int, int], metric: Metric = Metric.L2,
-    rotations=None,
-):
-    """``codebooks``: {seg_id: (m,k,sub) ndarray} dict, or a Spark
-    Broadcast of one — broadcast ships it once per executor instead of
-    once per task closure (memory bound O(#segments × m·k·sub_dim) on
-    the driver + one copy per executor)."""
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb_map = codebooks.value if hasattr(codebooks, "value") else codebooks
-        rot_map = (
-            rotations.value if hasattr(rotations, "value") else (rotations or {})
-        )
-        luts: dict[tuple[int, int], np.ndarray] = {}
-        qvecs = {qid: np.asarray(v, dtype=np.float64) for qid, v in queries}
-        if metric == Metric.COSINE:
-            # codebooks were trained/encoded on unit vectors (build.py);
-            # normalizing the query makes the L2² LUT ranking exactly
-            # monotone in cosine distance (‖v̂−q̂‖² = 2−2·cos) —
-            # normalize-on-read analog, fdb/FdbVectorIndex.java:1006-1013
-            qvecs = {
-                qid: (v / n if (n := np.linalg.norm(v)) > 0.0 else v)
-                for qid, v in qvecs.items()
-            }
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for seg_id, grp in pdf.groupby("seg_id"):
-                seg_id = int(seg_id)
-                cb = cb_map.get(seg_id)
-                if cb is None:
-                    continue
-                m = cb.shape[0]
-                codes = np.frombuffer(
-                    b"".join(grp["codes"].to_numpy()), dtype=np.uint8
-                ).reshape(len(grp), m)
-                vec_ids = grp["vec_id"].to_numpy(dtype=np.int64)
-                ef = ef_by_seg[seg_id]
-                kk = min(ef, len(vec_ids))
-                for qid, qv in qvecs.items():
-                    key = (qid, seg_id)
-                    if key not in luts:
-                        # OPQ: codes were encoded in rotated space, so
-                        # the LUT is built from the rotated query
-                        rot = rot_map.get(seg_id)
-                        luts[key] = build_lut(cb, qv @ rot if rot is not None else qv)
-                    d = approx_distances(codes, luts[key])
-                    head = (
-                        np.argpartition(d, kk - 1)[:kk] if kk < len(d) else np.arange(len(d))
-                    )
-                    order = np.lexsort((vec_ids[head], d[head]))
-                    sel = head[order]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(kk, qid, dtype=np.int64),
-                                "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                                "vec_id": vec_ids[sel].astype(np.int32),
-                                "approx": d[sel],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return scan
 
 
 _BEAM_WARNED = False
@@ -155,174 +99,8 @@ def _warn_beam_once() -> None:
         warnings.warn(
             "Search mode BEAM is deprecated; prefer GRAPH (best-first).",
             DeprecationWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
-
-
-def _graph_traverse_candidates(
-    index: VectorIndex,
-    sealed_segs: list[int],
-    qlist: list[tuple[int, list[float]]],
-    seeds: DataFrame,
-    ef_by_seg: dict[int, int],
-    metric: Metric,
-    max_iters: int = 6,
-    min_hops: int = 0,
-    max_explore: int | None = None,
-) -> DataFrame:
-    """G5/J3: iterative frontier–adjacency expansion over the sealed
-    segments' neighbor graphs (the batch re-expression of BEST_FIRST,
-    fdb/FdbVectorIndex.java:911-968; frontier expansion 856-899).
-
-    Each iteration: join the frontier with adjacency on (seg_id,
-    vec_id), explode neighbor lists, anti-join the visited set, score
-    new nodes with the exact metric, keep the best ``ef`` per
-    (query, segment). Converges when an iteration adds no rows (or at
-    ``max_iters``, the reference's maxIters bound). Every iteration is
-    a bounded join — frontier ≤ Q × ef rows — so the traversal never
-    scans whole segments; it trades more rounds for less IO, exactly
-    the niche it has in the reference.
-
-    Batch adaptations of the per-query knobs (api/SearchParams.java:20-43):
-    ``min_hops`` is subsumed — the loop only exits early when an
-    iteration discovers NO new node, a strictly stronger condition than
-    the reference's "best list stopped improving after minHops";
-    ``max_explore`` caps cumulative scored nodes at max_explore per
-    (query, segment) on average (the batch analog of the per-traversal
-    visited cap).
-    """
-    spark = index.spark
-    adj = index.adjacency(sealed_segs).select("seg_id", "vec_id", "neighbor_ids")
-    vec = index.vectors(states=SEARCHABLE_SEALED).select(
-        "seg_id", "vec_id", "embedding"
-    )
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [(qid, v) for qid, v in qlist], "query_id long, qvec array<float>"
-        )
-    )
-    ef_df = F.broadcast(
-        spark.createDataFrame(list(ef_by_seg.items()), "seg_id int, ef int")
-    )
-    # Every iteration would otherwise auto-broadcast the adjacency and
-    # vector join sides afresh; broadcasts pile up on the driver heap
-    # across iterations. Disable auto-broadcast for the traversal —
-    # every action here runs inside this function (each round is
-    # materialized), explicit broadcast() hints above still apply, and
-    # shuffle joins on (seg_id, vec_id) are the scale-correct plan.
-    # SESSION-SCOPED WINDOW: the toggle is conf-level, so an UNRELATED
-    # query planned on this session concurrently with the traversal
-    # also loses auto-broadcast for that window (it regains it at the
-    # finally). Single-driver batch jobs — the intended deployment —
-    # are unaffected; concurrent-query apps should run traversal
-    # searches on their own spark.newSession() (shared context,
-    # isolated conf).
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        explore_budget = (
-            max_explore * len(qlist) * len(sealed_segs) if max_explore else None
-        )
-        return _traverse_loop(
-            adj, vec, qdf, ef_df, seeds, qlist, metric, max_iters, explore_budget
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-
-
-# Test/debug hook: physical plan of each traversal round's scoring join,
-# refreshed per _traverse_loop call. Lets tests assert the join strategy
-# (broadcast frontier probe, no full-table sort-merge) without exposing
-# internals in the public API. Capture is OFF by default: production
-# rounds should not pay py4j plan-stringification, and the module-global
-# list is not concurrency-safe — tests flip the flag around a search.
-_CAPTURE_TRAVERSAL_PLANS = False
-_TRAVERSAL_PLANS: list[str] = []
-
-
-def _traverse_loop(adj, vec, qdf, ef_df, seeds, qlist, metric, max_iters, explore_budget=None):
-    # visited/best state: (query_id, seg_id, vec_id, dist). Each round's
-    # plan embeds the previous state MULTIPLE times (union + anti-join),
-    # so without lineage truncation the logical plan grows exponentially
-    # and Catalyst analysis itself OOMs — localCheckpoint (eager) caps
-    # every round's plan at a leaf, the canonical iterative-join pattern.
-    _TRAVERSAL_PLANS.clear()
-    state = seeds.localCheckpoint()
-    frontier = state
-    explored = 0
-    for _ in range(max_iters):
-        # The frontier (≤ Q×S×ef rows) and visited state are the bounded
-        # sides; adjacency and vectors are the 100 TB sides. Broadcast
-        # the bounded sides EXPLICITLY (auto-broadcast is off here) so
-        # every iteration is a broadcast-hash probe of the big tables —
-        # zero full-table shuffles per hop, vs max_iters sort-merge
-        # shuffles of adjacency+vectors without the hints.
-        expanded = (
-            adj.join(
-                F.broadcast(frontier.select("query_id", "seg_id", "vec_id")),
-                ["seg_id", "vec_id"],
-            )
-            .select(
-                "query_id", "seg_id", F.explode("neighbor_ids").alias("vec_id")
-            )
-            .dropDuplicates(["query_id", "seg_id", "vec_id"])
-            .join(
-                F.broadcast(state.select("query_id", "seg_id", "vec_id")),
-                ["query_id", "seg_id", "vec_id"],
-                "left_anti",
-            )
-        )
-        scored = (
-            vec.join(F.broadcast(expanded), ["seg_id", "vec_id"])
-            .join(qdf, "query_id")
-            .select(
-                "query_id",
-                "seg_id",
-                "vec_id",
-                distance_for_metric(F.col("embedding"), F.col("qvec"), metric).alias("dist"),
-            )
-        )
-        if _CAPTURE_TRAVERSAL_PLANS:
-            _TRAVERSAL_PLANS.append(
-                scored._jdf.queryExecution().executedPlan().toString()
-            )
-        scored = scored.localCheckpoint()
-        n_new = scored.count()
-        if n_new == 0:
-            break
-        explored += n_new
-        # maxExplore cap: fold the final round's discoveries into the
-        # best list, then stop expanding
-        over_budget = explore_budget is not None and explored >= explore_budget
-        # bound state to top-ef per (query, segment): the best-list cap
-        w = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("dist").asc(), F.col("vec_id").asc()
-        )
-        # no checkpoint here: after scored's checkpoint, state(i+1)'s
-        # only un-truncated reference to state(i) is the union, so
-        # lineage depth grows LINEARLY in rounds. Saves a job per round.
-        state = (
-            state.unionByName(scored)
-            .withColumn("_rn", F.row_number().over(w))
-            .join(ef_df, "seg_id")
-            .filter(F.col("_rn") <= F.col("ef"))
-            .drop("_rn", "ef")
-        )
-        if over_budget:
-            break
-        # Best-first fidelity: expand only newly discovered nodes that
-        # SURVIVED the ef cut (the reference expands from the best list,
-        # fdb/FdbVectorIndex.java:911-968, not from every visited node).
-        # Nodes worse than the current ef-th candidate cannot improve
-        # the result through expansion in a well-linked graph; dropping
-        # them shrinks the frontier and ends the loop as soon as a round
-        # stops improving the best list — the reference's convergence.
-        frontier = scored.join(
-            F.broadcast(state.select("query_id", "seg_id", "vec_id")),
-            ["query_id", "seg_id", "vec_id"],
-            "left_semi",
-        )
-    return state
 
 
 def search(
@@ -333,249 +111,422 @@ def search(
     filter_gids: DataFrame | None = None,
 ) -> DataFrame:
     """Batch KNN: (query_id, embedding) → (query_id, gid, distance,
-    score, payload, rank) with exactly ≤k rows per query.
+    score, payload, rank) with ≤ k rows per query. ``mode="AUTO"`` is
+    the PQ two-phase plan over sealed segments.
 
     ``filter_gids`` (optional, a DataFrame with a ``gid`` column) is
     metadata-filtered ANN — the production vector-store feature where a
     predicate restricts the searchable set. The allow-list PRE-filters
-    the scans (brute vectors and the sealed PQ codes are semi-joined
-    before any scoring), so candidate pools are spent on allowed
-    vectors only — not post-filtered after top-k, which would underfill
-    selective filters. BRUTE and the degenerate-exact configs are
-    therefore EXACT over the filtered set. GRAPH traversal itself stays
-    unfiltered (the standard filtered-HNSW stance: disallowed nodes
-    remain traversable so allowed regions stay reachable through them)
-    and disallowed results are dropped at the exact re-rank; very
-    selective filters warrant a larger ef/oversample, the usual
-    pre-filter ANN trade.
+    the brute scan and the PQ codes scan (semi-joins before any
+    scoring), so candidate pools are spent on allowed vectors only —
+    not post-filtered after top-k, which would underfill selective
+    filters. BRUTE and the degenerate-exact configs are therefore EXACT
+    over the filtered set. GRAPH/BEAM traversal stays unfiltered (the
+    standard filtered-HNSW stance: disallowed nodes remain traversable
+    so allowed regions stay reachable through them) and disallowed
+    results are dropped at the exact re-rank; very selective filters
+    warrant a larger ef/oversample, the usual pre-filter ANN trade.
     """
-    params = params or SearchParams()
+    return _search(index, queries, k, params or SearchParams(), filter_gids, "PQ")
+
+
+def search_join(
+    index: VectorIndex,
+    queries: DataFrame,
+    k: int = 10,
+    params: SearchParams | None = None,
+    filter_gids: DataFrame | None = None,
+) -> DataFrame:
+    """``search`` with ``mode="AUTO"`` meaning exhaustive-exact: every
+    segment goes through the brute scan, so the result is exact without
+    opting in. PQ, GRAPH and BEAM run exactly as in ``search``."""
+    return _search(index, queries, k, params or SearchParams(), filter_gids, "BRUTE")
+
+
+def _search(
+    index: VectorIndex,
+    queries: DataFrame,
+    k: int,
+    params: SearchParams,
+    filter_gids: DataFrame | None,
+    auto_mode: str,
+) -> DataFrame:
+    mode = auto_mode if params.mode == "AUTO" else params.mode
+    if mode == "BEAM":
+        _warn_beam_once()
+    cfg = index.config
+    metric = Metric(cfg.metric)
     allowed = (
         filter_gids.select(F.col("gid").cast("long").alias("gid")).distinct()
         if filter_gids is not None
         else None
     )
-    if params.mode == "BEAM":
-        _warn_beam_once()
-    cfg = index.config
-    spark = index.spark
-    metric = Metric(cfg.metric)
-    qrows = queries.select("query_id", "embedding").collect()
-    empty = spark.createDataFrame(
-        [], "query_id long, gid long, distance double, score double, payload binary, rank int"
+    q = queries.select(
+        F.col("query_id").cast("long").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
     )
-    if not qrows:
-        return empty
-    qlist = [(int(r[0]), list(r[1])) for r in qrows]
+    emb = F.col("embedding")
+    if params.normalize_on_read:
+        emb = normalize(emb).cast("array<float>")
     per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
 
-    seg_rows = index.segments().collect()
+    # 1. dispatch: the registry is driver-side, O(#segments)
+    seg_rows = index._segment_rows()
     brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
     sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-    if params.mode == "BRUTE":
-        brute_segs = brute_segs + sealed_segs
-        sealed_segs = []
-    counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
+    if mode == "BRUTE":
+        brute_segs, sealed_segs = brute_segs + sealed_segs, []
 
-    candidate_parts: list[DataFrame] = []
-
+    parts: list[DataFrame] = []
     if brute_segs:
-        vec = index.vectors().filter(
-            F.col("seg_id").isin(brute_segs) & ~F.col("deleted")
+        parts.append(
+            _brute_scan(index, q, brute_segs, metric, emb, allowed, per_seg_limit)
         )
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        pruned = vec.select(F.col("gid").alias("id"), emb.alias("embedding"))
-        partial = pruned.mapInPandas(
-            _partial_topk_mapper(qlist, per_seg_limit, metric, "id", "embedding"),
-            schema="query_id long, id long, distance double",
-        )
-        candidate_parts.append(partial.select("query_id", F.col("id").alias("gid"), "distance"))
-
     if sealed_segs:
-        # driver codebook cache (SegmentCaches analog): no Spark job
-        # when the sealed set is unchanged since the last search
-        cbs = index.codebooks_np(sealed_segs)
-        # broadcast, not closure-capture: at 100k+ segments the codebook
-        # dict is O(#segments × m·k·sub_dim) — shipped once per executor
-        # as a broadcast instead of serialized into every task
-        cbs_bc = spark.sparkContext.broadcast(cbs)
-        rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
+        counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
         ef_base = params.ef or default_ef(k, cfg.oversample)
-        ef_by_seg = {s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs}
-        # phase a: approx scan over codes only (embeddings not read here)
-        codes_src = index.codes(sealed_segs)
-        if allowed is not None and params.mode != "GRAPH":
-            # pre-filter the approx scan: the candidate pool is spent on
-            # allowed vectors only. GRAPH keeps its scan unfiltered —
-            # seeds may legitimately sit outside the filter (module doc)
-            allowed_sv = (
-                index.vectors(states=SEARCHABLE_SEALED)
-                .join(allowed, "gid", "left_semi")
-                .select("seg_id", "vec_id")
+        ef_by_seg = {
+            s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
+        }
+        if mode == "PQ":
+            cand = _pq_cogroup_candidates(
+                index, q, sealed_segs, ef_by_seg, metric, allowed
             )
-            codes_src = codes_src.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
-        cand = codes_src.mapInPandas(
-            _pq_scan_fn(cbs_bc, qlist, ef_by_seg, metric, rotations=rots_bc),
-            _CAND_SCHEMA,
-        )
-        # merge per-partition partial top-ef into per-(query,segment) top-ef
-        w_seg = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("approx").asc(), F.col("vec_id").asc()
-        )
-        ef_df = F.broadcast(
-            spark.createDataFrame(list(ef_by_seg.items()), "seg_id int, ef int")
-        )
-        cand = (
-            cand.withColumn("rn", F.row_number().over(w_seg))
-            .join(ef_df, "seg_id")
-            .filter(F.col("rn") <= F.col("ef"))
-            .drop("rn", "ef")
-        )
-        # phase c: exact re-rank — fetch raw vectors for candidates only
-        vec = index.vectors(states=SEARCHABLE_SEALED).select(
-            "seg_id", "vec_id", "gid", "embedding", "deleted"
-        )
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(qid, v) for qid, v in qlist], "query_id long, qvec array<float>"
-            )
-        )
-        if params.mode == "GRAPH":
-            # G5 traversal: seeds → iterative frontier expansion over the
-            # neighbor graph; the traversal's best list replaces the PQ
-            # candidate pool before re-rank. Seed selection per
-            # SearchParams.seed_strategy (api/SearchParams.java:39-42):
-            # - PQ_SEED_ONLY: top-beam of the PQ approx scan (the
-            #   reference's default seeding, fdb/FdbVectorIndex.java:794-799)
-            # - RANDOM_PIVOTS: `pivots` deterministic pseudo-random entry
-            #   points per segment (fdb/FdbVectorIndex.java:801-812) —
-            #   hash-ordered vec_ids, shared across the query batch (the
-            #   batch adaptation of per-query random pivots), scored
-            #   exactly; no PQ information used for seeding.
-            if params.seed_strategy == "RANDOM_PIVOTS":
-                w_piv = Window.partitionBy("seg_id").orderBy(
-                    F.hash(F.col("vec_id"), F.lit(cfg.seed)).asc(), F.col("vec_id").asc()
-                )
-                piv_ids = (
-                    vec.select("seg_id", "vec_id")
-                    .withColumn("_rn", F.row_number().over(w_piv))
-                    .filter(F.col("_rn") <= max(1, params.pivots))
-                    .drop("_rn")
-                )
-                qid_df = F.broadcast(
-                    spark.createDataFrame([(qid,) for qid, _ in qlist], "query_id long")
-                )
-                seed_ids = piv_ids.crossJoin(qid_df).select(
-                    "query_id", "seg_id", "vec_id"
-                )
-            else:
-                beam_df = F.broadcast(
-                    spark.createDataFrame(
-                        [
-                            (s, params.beam or max(k, ef_by_seg[s] // 4))
-                            for s in sealed_segs
-                        ],
-                        "seg_id int, beam int",
-                    )
-                )
-                w_seed = Window.partitionBy("query_id", "seg_id").orderBy(
-                    F.col("approx").asc(), F.col("vec_id").asc()
-                )
-                seed_ids = (
-                    cand.withColumn("_rn", F.row_number().over(w_seed))
-                    .join(beam_df, "seg_id")
-                    .filter(F.col("_rn") <= F.col("beam"))
-                    .select("query_id", "seg_id", "vec_id")
-                )
-            seeds = (
-                vec.join(F.broadcast(seed_ids), ["seg_id", "vec_id"])
-                .join(qdf, "query_id")
-                .select(
-                    "query_id",
-                    "seg_id",
-                    "vec_id",
-                    distance_for_metric(F.col("embedding"), F.col("qvec"), metric).alias(
-                        "dist"
-                    ),
-                )
-            )
-            cand = _graph_traverse_candidates(
-                index,
-                sealed_segs,
-                qlist,
-                seeds,
-                ef_by_seg,
-                metric,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
-            ).select("query_id", "seg_id", "vec_id")
-        elif params.mode == "BEAM":
-            # deprecated beam expansion (WARN-once above) — served via
-            # the in-task cogroup searcher; the collected query batch
-            # just becomes its DataFrame query side
-            q_beam = spark.createDataFrame(
-                [(qid, v) for qid, v in qlist], "query_id long, __qvec array<float>"
-            )
+        else:
             cand = _graph_cogroup_candidates(
-                index,
-                q_beam,
-                sealed_segs,
-                ef_by_seg,
-                metric,
-                params.pivots,
-                mode="BEAM",
-                k=k,
-                beam=params.beam,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
-                refine_frontier=params.refine_frontier,
-            ).select("query_id", "seg_id", "vec_id")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        # candidate set is bounded (≤ Q×S×ef (seg_id, vec_id) triples) —
-        # broadcast it so the re-rank is a probe of the vectors table,
-        # not a shuffle of it
-        reranked = (
-            vec.join(F.broadcast(cand), ["seg_id", "vec_id"])
-            .filter(~F.col("deleted"))
-            .join(qdf, "query_id")
-            .withColumn("distance", distance_for_metric(emb, F.col("qvec"), metric))
-            .select("query_id", "seg_id", "gid", "distance")
+                index, q, sealed_segs, ef_by_seg, metric, params, mode, k
+            )
+        parts.append(
+            _exact_rerank(index, cand, q, metric, emb, allowed, per_seg_limit)
         )
-        if allowed is not None:
-            # drops traversal-surfaced disallowed nodes (GRAPH/BEAM);
-            # a no-op for the pre-filtered PQ path
-            reranked = reranked.join(allowed, "gid", "left_semi")
-        w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("distance").asc(), F.col("gid").asc()
-        )
-        capped = (
-            reranked.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= per_seg_limit)
-            .select("query_id", "gid", "distance")
-        )
-        candidate_parts.append(capped)
+    if not parts:
+        return index.spark.createDataFrame([], _RESULT_SCHEMA)
+    return _merge_and_attach(index, reduce(DataFrame.unionByName, parts), k, metric)
 
-    if not candidate_parts:
-        return empty
 
-    merged = candidate_parts[0]
-    for part in candidate_parts[1:]:
-        merged = merged.unionByName(part)
-    return _merge_and_attach(index, merged, k, metric)
+def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schema: str):
+    """Fragment-and-replicate cogroup shared by the brute scan and the
+    candidate generators: ``side`` rows (seg_id, vec_id, ...) bucket by
+    hash(seg_id), so a whole segment meets the queries in one task; the
+    query DF replicates to every bucket via ``explode(sequence(0,
+    B-1))`` — a Q×B-row shuffle of the SMALL side. Nothing is collected
+    to the driver; the big side shuffles once on the bucket key.
+
+    ``per_segment(seg_id, rows, qids, qmat)`` gets one segment's rows
+    sorted by vec_id (results must not depend on partition read order)
+    and the (Q, d) float64 query matrix, and returns a pandas frame of
+    ``schema`` or None. Task memory is one bucket's rows + Q query rows
+    (one bucket per segment, capped at 256 buckets)."""
+    n_buckets = min(max(n_segs, 1), 256)
+    side = side.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets)))
+    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
+    empty = pd.DataFrame(
+        {
+            name: pd.Series(dtype=_PANDAS_TYPES[typ])
+            for name, typ in (f.split() for f in schema.split(","))
+        }
+    )
+
+    def fn(side_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(side_pdf) == 0 or len(q_pdf) == 0:
+            return empty
+        qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
+        qmat = np.stack(q_pdf["__qvec"].to_numpy()).astype(np.float64)
+        side_pdf = side_pdf.sort_values(["seg_id", "vec_id"], kind="stable")
+        out = [
+            per_segment(int(seg_id), rows, qids, qmat)
+            for seg_id, rows in side_pdf.groupby("seg_id", sort=False)
+        ]
+        out = [o for o in out if o is not None]
+        return pd.concat(out, ignore_index=True) if out else empty
+
+    return side.groupBy("__b").cogroup(q_rep.groupBy("__b")).applyInPandas(fn, schema)
+
+
+def _brute_scan(index, q, segs, metric, emb: Column, allowed, limit: int) -> DataFrame:
+    """Step 2: exact per-segment top-``limit`` over the live rows of
+    ``segs`` with the GEMM kernel (``operators.knn.partial_topk``),
+    which re-scores its survivors with the direct formula."""
+    vec = index.vectors().filter(F.col("seg_id").isin(segs) & ~F.col("deleted"))
+    if allowed is not None:
+        vec = vec.join(allowed, "gid", "left_semi")
+    vec = vec.select("seg_id", "vec_id", "gid", emb.alias("embedding"))
+
+    def per_segment(seg_id, rows, qids, qmat):
+        vmat = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
+        gids = rows["gid"].to_numpy(dtype=np.int64)
+        hits = partial_topk(gids, vmat, qids, qmat, limit, metric)
+        return hits.rename(columns={"id": "gid"})
+
+    return _cogroup_scan(vec, q, len(segs), per_segment, _HIT_SCHEMA)
+
+
+def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> DataFrame:
+    """Step 3 frame shared by the generators: per (segment, query) the
+    candidate rows ``pick`` chooses, or every row when ef ≥ segment
+    rows. ``side`` holds artifact rows (seg_id, kind, vec_id, codes,
+    ...); ``pick(seg_id, rows, vec_ids, mat, ef, luts)`` sees the segment's
+    vec_id-sorted code matrix and one LUT per query, and returns one
+    array of row positions per query.
+
+    The codebooks (and OPQ rotations) ride a Spark broadcast from the
+    driver cache (SegmentCaches analog): shipped once per executor,
+    and no Spark job when the sealed set is unchanged since the last
+    search."""
+    sc = index.spark.sparkContext
+    cbs_bc = sc.broadcast(index.codebooks_np(sealed_segs))
+    rots_bc = sc.broadcast(index.rotations_np(sealed_segs))
+
+    def per_segment(seg_id, rows, qids, qmat):
+        cb = cbs_bc.value.get(seg_id)
+        codes = rows[rows["kind"] == "code"]
+        n = len(codes)
+        if cb is None or n == 0:
+            return None
+        vec_ids = codes["vec_id"].to_numpy(dtype=np.int64)
+        ef = ef_by_seg[seg_id]
+        if ef >= n:
+            picked = [np.arange(n)] * len(qids)
+        else:
+            mat = np.frombuffer(
+                b"".join(codes["codes"].to_numpy()), dtype=np.uint8
+            ).reshape(n, cb.shape[0])
+            qvecs = list(qmat)
+            if metric == Metric.COSINE:
+                # codebooks were trained/encoded on unit vectors
+                # (build.py); a unit query makes the L2² LUT ranking
+                # exactly monotone in cosine distance (‖v̂−q̂‖² = 2−2·cos)
+                # — normalize-on-read analog, fdb/FdbVectorIndex.java:1006-1013
+                qvecs = [(v / nrm if (nrm := np.linalg.norm(v)) > 0.0 else v) for v in qvecs]
+            # OPQ: codes were encoded in rotated space, so the LUT is
+            # built from the rotated query
+            rot = rots_bc.value.get(seg_id)
+            luts = [build_lut(cb, v @ rot if rot is not None else v) for v in qvecs]
+            picked = pick(seg_id, rows, vec_ids, mat, ef, luts)
+        sizes = [len(p) for p in picked]
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(qids, sizes),
+                "seg_id": np.full(sum(sizes), seg_id, dtype=np.int32),
+                "vec_id": vec_ids[np.concatenate(picked)].astype(np.int32),
+            }
+        )
+
+    return _cogroup_scan(side, q, len(sealed_segs), per_segment, _CAND_SCHEMA)
+
+
+def _pq_cogroup_candidates(index, q, sealed_segs, ef_by_seg, metric, allowed) -> DataFrame:
+    """PQ generator: LUT distances over every code row of the segment,
+    top-ef per (query, segment). Reads only (seg_id, vec_id, codes).
+    The allow-list pre-filters the codes side: the candidate pool is
+    spent on allowed vectors only."""
+    codes = (
+        index._artifacts()
+        .filter((F.col("kind") == "code") & F.col("seg_id").isin(sealed_segs))
+        .select("seg_id", "kind", "vec_id", "codes")
+    )
+    if allowed is not None:
+        allowed_sv = (
+            index.vectors(states=SEARCHABLE_SEALED)
+            .join(allowed, "gid", "left_semi")
+            .select("seg_id", "vec_id")
+        )
+        codes = codes.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
+
+    def pick(seg_id, rows, vec_ids, mat, ef, luts):
+        return [np.argpartition(approx_distances(mat, lut), ef - 1)[:ef] for lut in luts]
+
+    return _candidate_scan(index, q, codes, sealed_segs, ef_by_seg, metric, pick)
+
+
+def _graph_cogroup_candidates(
+    index, q, sealed_segs, ef_by_seg, metric, params: SearchParams, mode: str, k: int
+) -> DataFrame:
+    """GRAPH/BEAM generator: ONE scan of the unified artifacts table
+    serves codes AND adjacency rows (kind ∈ {code, adj}); the task
+    reassembles them, so no join materializes the (codes ⋈ adjacency)
+    pair. Task memory is one segment's codes (N·m bytes) + neighbor
+    lists (N·degree ints), within the segment-bounded build-task
+    contract.
+
+    Seeds per (query, segment), per ``params.seed_strategy``:
+    - PQ_SEED_ONLY (GRAPH): the top-``beam`` rows by LUT distance over
+      the segment's codes — the reference's default seeding
+      (fdb/FdbVectorIndex.java:794-799);
+    - RANDOM_PIVOTS (GRAPH; always for BEAM): ``pivots`` deterministic
+      pseudo-random rows seeded by (index seed, seg_id), shared across
+      the query batch (801-812), with LUT distances computed lazily
+      for visited nodes only.
+    Neighbors whose artifacts were vacuumed away are skipped;
+    tombstoned-but-unvacuumed nodes are filtered at the exact re-rank.
+    """
+    artifacts = index._artifacts().filter(
+        F.col("kind").isin("code", "adj") & F.col("seg_id").isin(sealed_segs)
+    ).select("seg_id", "kind", "vec_id", "codes", "neighbor_ids")
+    seed = index.config.seed
+    pq_seeds = mode == "GRAPH" and params.seed_strategy == PQ_SEED_ONLY
+
+    def pick(seg_id, rows, vec_ids, mat, ef, luts):
+        n = len(vec_ids)
+        adj = rows[rows["kind"] == "adj"]
+        nbrs: dict[int, np.ndarray] = {}
+        for v, nb in zip(adj["vec_id"].to_numpy(), adj["neighbor_ids"]):
+            nb = np.asarray(nb, dtype=np.int64)
+            at = np.minimum(np.searchsorted(vec_ids, nb), n - 1)
+            src = int(np.searchsorted(vec_ids, v))
+            if src < n and vec_ids[src] == v:
+                nbrs[src] = at[vec_ids[at] == nb]
+        beam = params.beam or max(k, ef // 4)
+        if not pq_seeds:
+            n_seeds = min(max(params.pivots, 1), n)
+            rng = np.random.default_rng((seed << 16) ^ seg_id)
+            pivots = rng.choice(n, size=n_seeds, replace=False)
+        cols = np.arange(mat.shape[1])
+        out = []
+        for lut in luts:
+            if pq_seeds:
+                full = approx_distances(mat, lut)
+                b = min(beam, n)
+                seeds = np.argpartition(full, b - 1)[:b] if b < n else np.arange(n)
+                dist = full.__getitem__
+            else:
+                seeds = pivots
+
+                def dist(idx, lut=lut):
+                    return lut[cols[None, :], mat[idx]].sum(axis=1)
+
+            if mode == "BEAM":
+                out.append(_beam_expand(dist, seeds, nbrs, n, ef, beam, params))
+            else:
+                out.append(
+                    _best_first(dist, seeds, nbrs, n, ef, params.max_iters, params.max_explore)
+                )
+        return out
+
+    return _candidate_scan(index, q, artifacts, sealed_segs, ef_by_seg, metric, pick)
+
+
+def _best_first(dist, seeds, nbrs, n, ef, max_iters, max_explore) -> np.ndarray:
+    """Best-first ef-search (fdb/FdbVectorIndex.java:911-968) over one
+    segment for one query: an ef-bounded best list, expansion of the
+    nearest unexpanded candidate, and the stop rule "nearest unexpanded
+    candidate is worse than the ef-th best". A node found h hops from a
+    seed is expanded only while h < ``max_iters`` (0 = seeds only), and
+    at most ``max_explore`` nodes are visited, seeds included (the seeds
+    themselves are never cut). Returns the best list's row positions."""
+    visited = np.zeros(n, dtype=bool)
+    visited[seeds] = True
+    hops = np.zeros(n, dtype=np.int64)
+    budget = (n if max_explore is None else max_explore) - len(seeds)
+    cand = [(float(d), int(i)) for d, i in zip(dist(seeds), seeds)]
+    heapq.heapify(cand)
+    # best list = max-heap of (-d, row)
+    best = [(-d, i) for d, i in cand]
+    heapq.heapify(best)
+    while len(best) > ef:
+        heapq.heappop(best)
+    while cand and budget > 0:
+        d, v = heapq.heappop(cand)
+        if len(best) >= ef and d > -best[0][0]:
+            break
+        if hops[v] >= max_iters or v not in nbrs:
+            continue
+        new = nbrs[v][~visited[nbrs[v]]][:budget]
+        if not len(new):
+            continue
+        visited[new] = True
+        hops[new] = hops[v] + 1
+        budget -= len(new)
+        for di, i in zip(dist(new), new):
+            di, i = float(di), int(i)
+            if len(best) < ef or di < -best[0][0]:
+                heapq.heappush(cand, (di, i))
+                heapq.heappush(best, (-di, i))
+                if len(best) > ef:
+                    heapq.heappop(best)
+    return np.fromiter((i for _, i in best), dtype=np.int64, count=len(best))
+
+
+def _beam_expand(dist, seeds, nbrs, n, ef, beam, params: SearchParams) -> np.ndarray:
+    """The reference's deprecated beam expansion (diskannExpand,
+    fdb/FdbVectorIndex.java:841-903) with its exact loop semantics: per
+    hop, score the UNVISITED neighbors of the whole frontier (additions
+    capped so the expanded list never exceeds ef/maxExplore, in
+    frontier-then-neighbor order), sort newly by approx distance, next
+    frontier = top ``beam`` of newly (or of newly ∪ frontier when
+    ``refine_frontier``); ONLY the chosen beam joins the expanded list.
+    Empty-newly hops repeat the frontier until ``min_hops``. Returns
+    the expanded list's row positions, ef-bounded."""
+    cap = min(ef, params.max_explore if params.max_explore is not None else n)
+    visited = np.zeros(n, dtype=bool)
+    visited[seeds] = True
+    # expanded starts as the seeds, sorted by approx for a deterministic cap order
+    frontier = sorted(zip(dist(seeds).tolist(), seeds.tolist()))
+    expanded = list(frontier)
+    for hop in range(params.max_iters):
+        if not frontier or len(expanded) >= cap:
+            break
+        room = cap - len(expanded)
+        found: list[int] = []
+        for _, a in frontier:
+            for nb in nbrs.get(a, ()):
+                if len(found) >= room:
+                    break
+                if not visited[nb]:
+                    visited[nb] = True
+                    found.append(int(nb))
+        newly = sorted(zip(dist(np.asarray(found)).tolist(), found)) if found else []
+        if not newly:
+            if hop + 1 < params.min_hops:
+                continue  # force minimum hops
+            break
+        pool = sorted(newly + frontier) if params.refine_frontier else newly
+        frontier = pool[:beam]
+        expanded.extend(frontier)
+    # dedupe (refine can re-pick frontier members), keep the best ef
+    seen: dict[int, float] = {}
+    for d, i in expanded:
+        seen.setdefault(i, d)
+    return np.asarray([i for _, i in sorted((d, i) for i, d in seen.items())[:ef]], dtype=np.int64)
+
+
+def _exact_rerank(index, cand, q, metric, emb: Column, allowed, limit: int) -> DataFrame:
+    """Step 4: candidates (≤ Q×S×ef (query_id, seg_id, vec_id) rows)
+    join back to the raw vectors on the composite key, drop tombstones,
+    attach the query vector and rescore with the true metric; then the
+    per-segment cap. No broadcast hints: at moderate Q the planner
+    broadcasts the bounded sides from their observed size, and at the
+    million-query scale a forced broadcast of the query relation would
+    be the memory wall."""
+    vec = index.vectors(states=SEARCHABLE_SEALED).select(
+        "seg_id", "vec_id", "gid", "embedding", "deleted"
+    )
+    reranked = (
+        vec.join(cand, ["seg_id", "vec_id"])
+        .filter(~F.col("deleted"))
+        .join(q, "query_id")
+        .select(
+            "query_id", "seg_id", "gid",
+            distance_for_metric(emb, F.col("__qvec"), metric).alias("distance"),
+        )
+    )
+    if allowed is not None:
+        # drops traversal-surfaced disallowed nodes (GRAPH/BEAM); a
+        # no-op for the pre-filtered PQ codes scan
+        reranked = reranked.join(allowed, "gid", "left_semi")
+    w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
+        F.col("distance").asc(), F.col("gid").asc()
+    )
+    return (
+        reranked.withColumn("rn", F.row_number().over(w_cap))
+        .filter(F.col("rn") <= limit)
+        .select("query_id", "gid", "distance")
+    )
 
 
 def _merge_and_attach(index: VectorIndex, merged: DataFrame, k: int, metric: Metric) -> DataFrame:
-    """T4 global merge + payload attach, shared by ``search`` (collected
-    query batch) and ``search_join`` (DataFrame query side): candidates
-    (query_id, gid, distance) → top-k with rank/score → payload."""
+    """Global merge + payload attach: candidates (query_id, gid,
+    distance) → top-k with rank/score → payload."""
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("gid").asc())
     topk = (
         merged.withColumn("rank", F.row_number().over(w))
@@ -619,589 +570,4 @@ def _merge_and_attach(index: VectorIndex, merged: DataFrame, k: int, metric: Met
     return (
         topk.join(F.broadcast(hits), "gid", "left")
         .select("query_id", "gid", "distance", "score", "payload", "rank")
-    )
-
-
-def _stream_topk_reducer(k: int):
-    """Per-partition streaming top-k over a (query_id, gid, distance)
-    stream: folds each Arrow batch into a running best-k per query, so
-    task memory is O(Q×k) regardless of partition size, and each
-    partition emits ≤ Q×k rows — the map-side combine that makes the
-    global merge shuffle O(partitions × Q × k), never O(N×Q)."""
-
-    def reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pool = pdf if best is None else pd.concat((best, pdf), ignore_index=True)
-            pool = pool.sort_values(
-                ["query_id", "distance", "gid"], kind="mergesort", ignore_index=True
-            )
-            best = pool.groupby("query_id", sort=False).head(k)
-        if best is not None:
-            yield best
-
-    return reduce
-
-
-def search_join(
-    index: VectorIndex,
-    queries: DataFrame,
-    k: int = 10,
-    params: SearchParams | None = None,
-    filter_gids: DataFrame | None = None,
-) -> DataFrame:
-    """Distributed index search for query batches too large to collect:
-    the query side stays a DataFrame end-to-end — no driver
-    materialization anywhere on the path (``search`` collects its batch
-    into the Arrow mapper closure, the widened form of the reference's
-    one-query API, fdb/FdbVectorIndex.java:351-479; this is the
-    million-query form).
-
-    Modes:
-
-    - ``AUTO`` / ``BRUTE`` — exhaustive-exact: visibility-filtered
-      vectors (state dispatch + tombstone filter, as in ``search``)
-      ⋈ BROADCAST(queries) — Catalyst builds the query-side hash
-      relation executor-side from the exchange — then the exact metric
-      distance in codegen, projected to a narrow (query_id, gid,
-      distance) stream BEFORE the Arrow pass, then a per-partition
-      streaming top-k reduce (O(Q×k) task memory) and the shared
-      global merge + payload attach. Exhaustive by construction, so
-      results are exact. (Unlike ``search``, AUTO here is exhaustive:
-      with no driver-seeded per-query state the exact plan is the
-      default; opt into PQ explicitly.)
-    - ``PQ`` — the distributed two-phase approx plan: sealed segments
-      go through the PQ-codes scan via a bucketed COGROUP (see
-      ``_pq_cogroup_candidates``) — the codes table and the replicated
-      query DF meet in ``applyInPandas`` with the codebooks as a Spark
-      broadcast, LUT distances per (query, segment), top-ef per
-      (query, segment) — then the exact re-rank joins candidates back
-      to raw vectors with the query DF broadcast. Brute-state segments
-      (ACTIVE/PENDING) are scored exhaustively and merged, exactly as
-      in ``search``. With ef ≥ segment size the candidate pool is the
-      whole segment and the result equals BRUTE — the hash-checkable
-      degenerate twin.
-
-    - ``GRAPH`` — distributed best-first traversal: the unified
-      artifacts scan (codes + adjacency in ONE relation, split by the
-      kind column in-task) cogroups with the replicated query DF; each
-      task runs the actual ef-search loop in NumPy per (query,
-      segment) — deterministic RANDOM_PIVOTS entry points, lazy LUT
-      distances only for expanded nodes (never the whole segment), the
-      best-first stop rule — then the shared exact re-rank. ``pivots ≥
-      segment size`` makes it exhaustive-exact (the hash-checkable
-      twin). Unlike ``search``'s collected path (driver-seeded
-      iterative joins — better when the traversal touches a tiny
-      fraction of huge segments and Q is small), the frontier state
-      here lives inside the task, so a million-query batch stays
-      distributed end-to-end.
-
-    ``filter_gids`` (optional ``gid`` allow-list DataFrame) behaves as
-    in ``search``: the exhaustive scans and the PQ cogroup's codes side
-    are PRE-filtered (semi-joins), GRAPH/BEAM traversal stays
-    unfiltered with disallowed results dropped at the exact re-rank.
-    """
-    params = params or SearchParams()
-    if params.mode not in ("AUTO", "BRUTE", "PQ", "GRAPH", "BEAM"):
-        raise ValueError(
-            f"search_join supports AUTO/BRUTE (exhaustive), PQ, GRAPH, and "
-            f"BEAM (deprecated); got mode={params.mode!r}"
-        )
-    if params.mode == "BEAM":
-        _warn_beam_once()
-    allowed = (
-        filter_gids.select(F.col("gid").cast("long").alias("gid")).distinct()
-        if filter_gids is not None
-        else None
-    )
-    metric = Metric(index.config.metric)
-    cfg = index.config
-    q = queries.select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("embedding").alias("__qvec"),
-    )
-    if params.mode in ("AUTO", "BRUTE"):
-        vec = index.vectors().filter(~F.col("deleted"))
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        scored = (
-            vec.select("gid", emb.alias("__vvec"))
-            .crossJoin(F.broadcast(q))
-            .select(
-                "query_id",
-                "gid",
-                distance_for_metric(F.col("__vvec"), F.col("__qvec"), metric).alias(
-                    "distance"
-                ),
-            )
-        )
-        partial = scored.mapInPandas(
-            _stream_topk_reducer(k), "query_id long, gid long, distance double"
-        )
-        return _merge_and_attach(index, partial, k, metric)
-
-    # -- PQ mode: two-phase over sealed segments + exhaustive brute part
-    spark = index.spark
-    per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
-    seg_rows = index.segments().collect()  # O(#segments) registry read
-    brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
-    sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-    counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
-    parts: list[DataFrame] = []
-
-    if brute_segs:
-        vec = index.vectors().filter(
-            F.col("seg_id").isin(brute_segs) & ~F.col("deleted")
-        )
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        scored = (
-            vec.select("gid", emb.alias("__vvec"))
-            .crossJoin(F.broadcast(q))
-            .select(
-                "query_id",
-                "gid",
-                distance_for_metric(F.col("__vvec"), F.col("__qvec"), metric).alias(
-                    "distance"
-                ),
-            )
-        )
-        parts.append(
-            scored.mapInPandas(
-                _stream_topk_reducer(per_seg_limit),
-                "query_id long, gid long, distance double",
-            )
-        )
-
-    if sealed_segs:
-        ef_base = params.ef or default_ef(k, cfg.oversample)
-        ef_by_seg = {
-            s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
-        }
-        if params.mode in ("GRAPH", "BEAM"):
-            cand = _graph_cogroup_candidates(
-                index,
-                q,
-                sealed_segs,
-                ef_by_seg,
-                metric,
-                params.pivots,
-                mode=params.mode,
-                k=k,
-                beam=params.beam,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
-                refine_frontier=params.refine_frontier,
-            )
-        else:
-            allowed_sv = None
-            if allowed is not None:
-                allowed_sv = (
-                    index.vectors(states=SEARCHABLE_SEALED)
-                    .join(allowed, "gid", "left_semi")
-                    .select("seg_id", "vec_id")
-                )
-            cand = _pq_cogroup_candidates(
-                index, q, sealed_segs, ef_by_seg, metric, allowed_sv=allowed_sv
-            )
-        # exact re-rank: candidates are ≤ Q×S×ef (seg_id, vec_id)
-        # triples — join raw vectors on the composite key, then attach
-        # the query vector and rescore with the true metric. NO
-        # broadcast hint on the query join: at moderate Q AQE picks
-        # broadcast from the observed size anyway, and at the
-        # million-query scale this mode exists for, a forced broadcast
-        # of the query relation would be the memory wall — the shuffle
-        # join on query_id is the correct fallback and both sides here
-        # are already bounded (candidates ≤ Q×S×ef, queries = Q).
-        vec = index.vectors(states=SEARCHABLE_SEALED).select(
-            "seg_id", "vec_id", "gid", "embedding", "deleted"
-        )
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        reranked = (
-            vec.join(cand, ["seg_id", "vec_id"])
-            .filter(~F.col("deleted"))
-            .join(q, "query_id")
-            .withColumn("distance", distance_for_metric(emb, F.col("__qvec"), metric))
-            .select("query_id", "seg_id", "gid", "distance")
-        )
-        if allowed is not None:
-            # drops traversal-surfaced disallowed nodes (GRAPH/BEAM);
-            # a no-op for the pre-filtered PQ cogroup path
-            reranked = reranked.join(allowed, "gid", "left_semi")
-        w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("distance").asc(), F.col("gid").asc()
-        )
-        parts.append(
-            reranked.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= per_seg_limit)
-            .select("query_id", "gid", "distance")
-        )
-
-    if not parts:
-        return spark.createDataFrame(
-            [],
-            "query_id long, gid long, distance double, score double, "
-            "payload binary, rank int",
-        )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return _merge_and_attach(index, merged, k, metric)
-
-
-def _graph_cogroup_candidates(
-    index: VectorIndex,
-    q: DataFrame,
-    sealed_segs: list[int],
-    ef_by_seg: dict[int, int],
-    metric: Metric,
-    pivots: int,
-    n_buckets: int | None = None,
-    mode: str = "GRAPH",
-    k: int = 10,
-    beam: int | None = None,
-    max_iters: int = 6,
-    min_hops: int = 0,
-    max_explore: int | None = None,
-    refine_frontier: bool = True,
-) -> DataFrame:
-    """Distributed GRAPH (best-first) candidate generation with a
-    DataFrame query side — the cogroup re-expression of BEST_FIRST
-    (fdb/FdbVectorIndex.java:911-968) that keeps a million-query batch
-    distributed end-to-end.
-
-    Same fragment-and-replicate shape as ``_pq_cogroup_candidates``,
-    with ONE scan feeding both inputs: the unified artifacts table
-    serves codes AND adjacency rows (kind ∈ {code, adj}) bucketed by
-    hash(seg_id), so no extra join materializes the (codes ⋈ adjacency)
-    pair — the task reassembles them from the kind column. Task memory
-    is one bucket's codes (N·m bytes) + neighbor lists (N·degree ints),
-    within the segment-bounded build-task contract.
-
-    Per (segment, query) the task runs the ACTUAL best-first loop in
-    NumPy: deterministic RANDOM_PIVOTS entry points (seeded by seg_id —
-    this mode exists to AVOID the full-codes scan, so PQ-top-beam
-    seeding is out of scope by construction; it belongs to mode=PQ,
-    which subsumes it at batch scale), LUT-approximate distances
-    computed lazily per expanded frontier (never for the whole
-    segment), an ef-bounded best list, and the stop rule "nearest
-    unexpanded candidate is worse than the ef-th best". ``pivots ≥
-    segment size`` seeds every node and the result degenerates to the
-    exact full ranking — the hash-checkable twin, mirroring the PQ
-    mode's ef=cap twin. Neighbors whose artifacts were vacuumed away
-    are skipped (the join-drop semantics of the driver-path traversal);
-    tombstoned-but-unvacuumed nodes are filtered at the exact re-rank
-    (F1), exactly as in mode=PQ.
-
-    ``mode="BEAM"`` runs the reference's deprecated beam expansion
-    instead (fdb/FdbVectorIndex.java diskannExpand:841-903) with its
-    exact loop semantics: per hop, score the UNVISITED neighbors of
-    the whole frontier (additions capped so the expanded list never
-    exceeds ef/maxExplore, in frontier-then-neighbor order), sort
-    newly by approx distance, next frontier = top ``beam`` of newly
-    (or of newly ∪ frontier when ``refine_frontier``), ONLY the chosen
-    beam joins the expanded candidate list; empty-newly hops repeat
-    the frontier until ``min_hops``. ``pivots ≥ segment size`` seeds
-    (and caps at ef ≥ n) every node → degenerate-exact, the same
-    hash-checkable-twin pattern as GRAPH.
-    """
-    spark = index.spark
-    B = n_buckets or min(max(len(sealed_segs), 1), 256)
-    cbs_bc = spark.sparkContext.broadcast(index.codebooks_np(sealed_segs))
-    rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
-    seed = index.config.seed
-
-    art = (
-        index._artifacts()
-        .filter(F.col("kind").isin("code", "adj") & F.col("seg_id").isin(sealed_segs))
-        .select("seg_id", "kind", "vec_id", "codes", "neighbor_ids")
-        .withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(B)))
-    )
-    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-
-    def fn(art_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        import heapq
-
-        empty = pd.DataFrame(
-            {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-        ).astype(
-            {"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"}
-        )
-        if len(art_pdf) == 0 or len(q_pdf) == 0:
-            return empty
-        cb_map = cbs_bc.value
-        qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
-        qvecs = [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-        if metric == Metric.COSINE:
-            qvecs = [
-                (v / n if (n := np.linalg.norm(v)) > 0.0 else v) for v in qvecs
-            ]
-        out = []
-        for seg_id, grp in art_pdf.groupby("seg_id"):
-            seg_id = int(seg_id)
-            cb = cb_map.get(seg_id)
-            if cb is None:
-                continue
-            m = cb.shape[0]
-            # sort by vec_id: row order (and thus heap tiebreaks) must
-            # not depend on partition read order
-            crows = grp[grp["kind"] == "code"].sort_values("vec_id")
-            arows = grp[grp["kind"] == "adj"]
-            if len(crows) == 0:
-                continue
-            vec_ids = crows["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.frombuffer(
-                b"".join(crows["codes"].to_numpy()), dtype=np.uint8
-            ).reshape(len(crows), m)
-            pos = {int(v): i for i, v in enumerate(vec_ids)}
-            nbrs: dict[int, np.ndarray] = {}
-            for v, nb in zip(arows["vec_id"], arows["neighbor_ids"]):
-                idx = [pos[int(x)] for x in nb if int(x) in pos]
-                nbrs[pos[int(v)]] = np.asarray(idx, dtype=np.int64)
-            n = len(vec_ids)
-            ef = min(ef_by_seg[seg_id], n)
-            # deterministic entry points: seeded by (index seed, seg_id),
-            # drawn over the row space — rerun/partitioning-stable
-            rng = np.random.default_rng((seed << 16) ^ seg_id)
-            n_seeds = min(max(pivots, 1), n)
-            seeds = (
-                np.arange(n)
-                if n_seeds >= n
-                else rng.choice(n, size=n_seeds, replace=False)
-            )
-            cols = np.arange(m)
-            beam_w = beam or max(k, ef // 4)
-            max_expl = max_explore if max_explore is not None else float("inf")
-            seg_rot = rots_bc.value.get(seg_id)
-            for qid, qv in zip(qids, qvecs):
-                lut = build_lut(cb, qv @ seg_rot if seg_rot is not None else qv)
-                dist = np.full(n, np.inf)
-                dist[seeds] = lut[cols[None, :], mat[seeds]].sum(axis=1)
-                visited = np.zeros(n, dtype=bool)
-                visited[seeds] = True
-                if mode == "BEAM":
-                    # diskannExpand loop, batch-faithful: expanded
-                    # starts as the seeds (sorted by approx for
-                    # deterministic cap order)
-                    frontier = sorted(
-                        ((float(dist[i]), int(i)) for i in seeds)
-                    )
-                    expanded = list(frontier)
-                    for hop in range(max_iters):
-                        if (
-                            not frontier
-                            or len(expanded) >= ef
-                            or len(expanded) >= max_expl
-                        ):
-                            break
-                        newly = []
-                        for _, a in frontier:
-                            for nb in nbrs.get(a, ()):
-                                nb = int(nb)
-                                if (
-                                    len(expanded) + len(newly) >= ef
-                                    or len(expanded) + len(newly) >= max_expl
-                                ):
-                                    break
-                                if visited[nb]:
-                                    continue
-                                visited[nb] = True
-                                d = float(lut[cols, mat[nb]].sum())
-                                dist[nb] = d
-                                newly.append((d, nb))
-                        newly.sort()
-                        if not newly:
-                            if hop + 1 < min_hops:
-                                continue  # force minimum hops
-                            break
-                        if refine_frontier:
-                            union = sorted(newly + frontier)
-                            nxt = union[: min(beam_w, len(union))]
-                        else:
-                            nxt = newly[: min(beam_w, len(newly))]
-                        expanded.extend(nxt)
-                        frontier = nxt
-                    # dedupe (refine can re-pick frontier members) and
-                    # keep the candidate pool ef-bounded like the
-                    # reference's expanded list
-                    seen: dict[int, float] = {}
-                    for d, i in expanded:
-                        if i not in seen:
-                            seen[i] = d
-                    take = sorted(
-                        ((d, vec_ids[i]) for i, d in seen.items())
-                    )[:ef]
-                    kk = len(take)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(kk, qid, dtype=np.int64),
-                                "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                                "vec_id": np.asarray(
-                                    [t[1] for t in take], dtype=np.int32
-                                ),
-                                "approx": np.asarray([t[0] for t in take]),
-                            }
-                        )
-                    )
-                    continue
-                # best list = max-heap of (-d, row); cand = min-heap
-                cand = [(dist[i], int(i)) for i in seeds]
-                heapq.heapify(cand)
-                best = [(-dist[i], int(i)) for i in seeds]
-                heapq.heapify(best)
-                while len(best) > ef:
-                    heapq.heappop(best)
-                while cand:
-                    d, v = heapq.heappop(cand)
-                    if len(best) >= ef and d > -best[0][0]:
-                        break  # nearest unexpanded worse than ef-th best
-                    new = nbrs.get(v)
-                    if new is None or not len(new):
-                        continue
-                    new = new[~visited[new]]
-                    if not len(new):
-                        continue
-                    visited[new] = True
-                    dist[new] = lut[cols[None, :], mat[new]].sum(axis=1)
-                    for i in new:
-                        di = float(dist[i])
-                        if len(best) < ef or di < -best[0][0]:
-                            heapq.heappush(cand, (di, int(i)))
-                            heapq.heappush(best, (-di, int(i)))
-                            while len(best) > ef:
-                                heapq.heappop(best)
-                take = sorted(((-nd, vec_ids[i]) for nd, i in best))
-                kk = len(take)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(kk, qid, dtype=np.int64),
-                            "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                            "vec_id": np.asarray([t[1] for t in take], dtype=np.int32),
-                            "approx": np.asarray([t[0] for t in take]),
-                        }
-                    )
-                )
-        if not out:
-            return empty
-        return pd.concat(out, ignore_index=True)
-
-    return (
-        art.groupBy("__b")
-        .cogroup(q_rep.groupBy("__b"))
-        .applyInPandas(fn, _CAND_SCHEMA)
-        .select("query_id", "seg_id", "vec_id")
-    )
-
-
-def _pq_cogroup_candidates(
-    index: VectorIndex,
-    q: DataFrame,
-    sealed_segs: list[int],
-    ef_by_seg: dict[int, int],
-    metric: Metric,
-    n_buckets: int | None = None,
-    allowed_sv: DataFrame | None = None,
-) -> DataFrame:
-    """Distributed PQ candidate generation with a DataFrame query side:
-    the replicated-join re-expression of ``search``'s closure-captured
-    codes scan (S3 + T1, fdb/FdbVectorIndex.java:1057-1079).
-
-    The codes table buckets by hash(seg_id) (a whole segment shares a
-    bucket so its LUT computes once per bucket); the query DF
-    replicates to every bucket via ``explode(sequence(0, B-1))`` — a
-    Q×B-row shuffle of the SMALL side, the classic replicated
-    (fragment-and-replicate) join — and the two sides meet in an
-    ``applyInPandas`` cogroup where NumPy builds per-(query, segment)
-    LUTs from the broadcast codebooks and emits top-ef candidates.
-    Nothing is collected to the driver; the big side (codes) shuffles
-    once on the bucket key.
-
-    Task memory is one bucket's codes (≈ N·m/B bytes) + Q query rows;
-    size ``n_buckets`` so a bucket's codes fit comfortably in executor
-    memory (default: one bucket per sealed segment, capped at 256)."""
-    spark = index.spark
-    B = n_buckets or min(max(len(sealed_segs), 1), 256)
-    cbs_bc = spark.sparkContext.broadcast(index.codebooks_np(sealed_segs))
-    rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
-
-    codes = index.codes(sealed_segs)
-    if allowed_sv is not None:
-        # filtered ANN: the candidate pool is spent on allowed vectors
-        codes = codes.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
-    codes = codes.withColumn(
-        "__b", F.pmod(F.hash("seg_id"), F.lit(B))
-    )
-    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-
-    def fn(codes_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(codes_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-            ).astype({"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"})
-        cb_map = cbs_bc.value
-        qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
-        qvecs = [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-        if metric == Metric.COSINE:
-            # unit-normalize queries so the L2² LUT ranking is exactly
-            # monotone in cosine distance (build normalizes stored
-            # vectors; see _pq_scan_fn)
-            qvecs = [
-                (v / n if (n := np.linalg.norm(v)) > 0.0 else v) for v in qvecs
-            ]
-        out = []
-        for seg_id, grp in codes_pdf.groupby("seg_id"):
-            seg_id = int(seg_id)
-            cb = cb_map.get(seg_id)
-            if cb is None:
-                continue
-            m = cb.shape[0]
-            mat = np.frombuffer(
-                b"".join(grp["codes"].to_numpy()), dtype=np.uint8
-            ).reshape(len(grp), m)
-            vec_ids = grp["vec_id"].to_numpy(dtype=np.int64)
-            ef = ef_by_seg[seg_id]
-            kk = min(ef, len(vec_ids))
-            seg_rot = rots_bc.value.get(seg_id)
-            for qid, qv in zip(qids, qvecs):
-                lut = build_lut(cb, qv @ seg_rot if seg_rot is not None else qv)
-                d = approx_distances(mat, lut)
-                head = (
-                    np.argpartition(d, kk - 1)[:kk] if kk < len(d) else np.arange(len(d))
-                )
-                order = np.lexsort((vec_ids[head], d[head]))
-                sel = head[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(kk, qid, dtype=np.int64),
-                            "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                            "vec_id": vec_ids[sel].astype(np.int32),
-                            "approx": d[sel],
-                        }
-                    )
-                )
-        if not out:
-            return pd.DataFrame(
-                {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-            ).astype({"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"})
-        return pd.concat(out, ignore_index=True)
-
-    return (
-        codes.groupBy("__b")
-        .cogroup(q_rep.groupBy("__b"))
-        .applyInPandas(fn, _CAND_SCHEMA)
-        .select("query_id", "seg_id", "vec_id")
     )

@@ -63,6 +63,55 @@ def _batch_distances(vmat: np.ndarray, qmat: np.ndarray, metric: Metric) -> np.n
     return 1.0 - sim
 
 
+def partial_topk(
+    ids: np.ndarray, vmat: np.ndarray, qids: np.ndarray, qmat: np.ndarray,
+    k: int, metric: Metric,
+) -> pd.DataFrame:
+    """Per-query top-k of one block of vectors: (query_id, id, distance)
+    rows, ≤ k per query, ordered by (distance, id). ``vmat`` (n, d) and
+    ``qmat`` (Q, d) are float64."""
+    dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
+    n = len(ids)
+    kk = min(k, n)
+    # per-query partial top-k: argpartition, then re-score the ≤k
+    # survivors with the direct formula in the oracle's operation
+    # order — the GEMM expansion carries ~1e-8 cancellation error
+    # (L2: exact matches would come out nonzero) and the batched
+    # cosine divides by the two norms SEQUENTIALLY, which differs
+    # from dot/(‖v‖·‖q‖) in the last ulp and can flip round(·,4)
+    # on a boundary value. Direct re-score is exact and cheap on
+    # k rows.
+    out_q, out_i, out_d = [], [], []
+    for j in range(len(qids)):
+        dj = dist[:, j]
+        head = np.argpartition(dj, kk - 1)[:kk] if kk < n else np.arange(n)
+        if metric == Metric.L2:
+            diff = vmat[head] - qmat[j]
+            dhead = np.sqrt(np.einsum("ij,ij->i", diff, diff))
+        else:
+            vh = vmat[head]
+            vn = np.linalg.norm(vh, axis=1)
+            qn = np.linalg.norm(qmat[j])
+            denom = vn * qn
+            sim = np.where(denom == 0.0, 0.0, (vh @ qmat[j]) / np.where(denom == 0.0, 1.0, denom))
+            # clamp: sim can exceed 1 by 1ulp on self-pairs; the
+            # raw −2e-16 distance would round to −0.0 in
+            # sign-preserving engines and break byte-level
+            # comparisons (distance is mathematically ≥ 0).
+            dhead = np.maximum(1.0 - sim, 0.0)
+        order = np.lexsort((ids[head], dhead))
+        out_q.append(np.full(kk, qids[j]))
+        out_i.append(ids[head[order]])
+        out_d.append(dhead[order])
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "id": np.concatenate(out_i),
+            "distance": np.concatenate(out_d),
+        }
+    )
+
+
 def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: str):
     qids, qmat = _query_matrix(queries)
 
@@ -72,46 +121,7 @@ def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: 
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             vmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
-            n = len(ids)
-            kk = min(k, n)
-            # per-query partial top-k: argpartition, then re-score the ≤k
-            # survivors with the direct formula in the oracle's operation
-            # order — the GEMM expansion carries ~1e-8 cancellation error
-            # (L2: exact matches would come out nonzero) and the batched
-            # cosine divides by the two norms SEQUENTIALLY, which differs
-            # from dot/(‖v‖·‖q‖) in the last ulp and can flip round(·,4)
-            # on a boundary value. Direct re-score is exact and cheap on
-            # k rows.
-            out_q, out_i, out_d = [], [], []
-            for j in range(len(qids)):
-                dj = dist[:, j]
-                head = np.argpartition(dj, kk - 1)[:kk] if kk < n else np.arange(n)
-                if metric == Metric.L2:
-                    diff = vmat[head] - qmat[j]
-                    dhead = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-                else:
-                    vh = vmat[head]
-                    vn = np.linalg.norm(vh, axis=1)
-                    qn = np.linalg.norm(qmat[j])
-                    denom = vn * qn
-                    sim = np.where(denom == 0.0, 0.0, (vh @ qmat[j]) / np.where(denom == 0.0, 1.0, denom))
-                    # clamp: sim can exceed 1 by 1ulp on self-pairs; the
-                    # raw −2e-16 distance would round to −0.0 in
-                    # sign-preserving engines and break byte-level
-                    # comparisons (distance is mathematically ≥ 0).
-                    dhead = np.maximum(1.0 - sim, 0.0)
-                order = np.lexsort((ids[head], dhead))
-                out_q.append(np.full(kk, qids[j]))
-                out_i.append(ids[head[order]])
-                out_d.append(dhead[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "id": np.concatenate(out_i),
-                    "distance": np.concatenate(out_d),
-                }
-            )
+            yield partial_topk(ids, vmat, qids, qmat, k, metric)
 
     return mapper
 

@@ -3909,10 +3909,10 @@ def _ensure_opq_index(spark: SparkSession, sf_dir: str):
 
 def index_search_opq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degenerate-exact twin on the OPQ-enabled index: ef ≥ segment
-    size makes the rotated-LUT candidate pool the whole segment, so
-    the exact re-rank restores brute-force results — the whole OPQ
-    path (rotation storage, rotated LUT, re-rank) is hash-checked
-    against the same brute oracle."""
+    size makes every row of the segment a candidate, so the exact
+    re-rank restores brute-force results — the OPQ index's search path
+    (codes cogroup, re-rank, merge) is hash-checked against the same
+    brute oracle."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_opq_index(spark, sf_dir)
@@ -3966,10 +3966,11 @@ FROM ranked WHERE rank <= {_KNN_K}
 
 
 def index_search_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed query-side search (index/search.py search_join): the
-    query batch stays a DataFrame end-to-end — broadcast-joined into
-    the vectors scan, per-partition streaming top-k reduce, shared
-    global merge. Exhaustive-exact, so the brute-force oracle applies
+    """Distributed query-side search (index/search.py search_join) at
+    AUTO, which is exhaustive: every segment goes through the brute
+    scan — the query DataFrame replicated into a cogroup with the
+    vectors bucketed by segment, NumPy GEMM per-segment top-k — then
+    the shared global merge. Exact, so the brute-force oracle applies
     unchanged."""
     idx = _ensure_index(spark, sf_dir)
     res = idx.search_join(_emb_queries(spark, sf_dir), k=_KNN_K)
@@ -4005,10 +4006,10 @@ def index_search_join_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed GRAPH (best-first) search with a DataFrame query
     side: one kind-split artifacts scan cogroups codes+adjacency with
     the replicated queries, the ef-search loop runs in-task per
-    (query, segment). pivots ≥ segment size seeds every node, so the
-    traversal degenerates to the exact full ranking and the whole
-    distributed path hash-checks against the brute oracle; default-
-    pivot recall is gated in tests/test_index_lifecycle.py."""
+    (query, segment). ef ≥ segment size makes every row a candidate,
+    so the whole distributed path (cogroup, re-rank, merge) hash-checks
+    against the brute oracle; default-ef recall is gated in
+    tests/test_index_lifecycle.py."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
@@ -4026,11 +4027,11 @@ def index_search_join_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def index_search_join_graph_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed GRAPH search at DEFAULT ef/beam/pivots over the
+    """Distributed GRAPH search at DEFAULT params over the
     10-sealed-segment sf index — the non-degenerate best-first cogroup
-    (real beam pruning, PQ-seeded entry points). Approximate → rows-
-    only driver check; recall ≥ 0.9 at 8 segments is gated in
-    tests/test_index_lifecycle.py::
+    (default ef 160 of 200 rows per segment, top-beam PQ seeds, hop
+    bound max_iters). Approximate → rows-only driver check; recall ≥
+    0.9 at 8 segments is gated in tests/test_index_lifecycle.py::
     test_search_join_graph_default_ef_recall_8_segments."""
     from vectorsearch_spark.index import SearchParams
 
@@ -4047,10 +4048,10 @@ def index_search_join_graph_default(spark: SparkSession, sf_dir: str) -> DataFra
 def index_search_join_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deprecated BEAM traversal (G4 — fdb/FdbVectorIndex.java
     diskannExpand:841-903, WARN-once parity at 369-372), served so a
-    migrating user's mode=BEAM queries keep working. pivots ≥ segment
-    size + ef = cap seeds every node and the expansion short-circuits
-    to the exact full ranking — hash-checked against the brute oracle;
-    default-param behavior is gated in tests/test_index_lifecycle.py."""
+    migrating user's mode=BEAM queries keep working. ef = cap makes
+    every row a candidate, so the result is the exact full ranking —
+    hash-checked against the brute oracle; default-param behavior is
+    gated in tests/test_index_lifecycle.py."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
@@ -4079,8 +4080,9 @@ def index_search_sealed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def index_search_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G5 graph-traversal search (iterative frontier–adjacency joins
-    over the Vamana graph; approximate → rows-only, recall gated in
+    """G5 graph-traversal search: in-task best-first ef-search over
+    each sealed segment's Vamana graph from PQ seeds, then the exact
+    re-rank (approximate → rows-only, recall gated in
     tests/test_index_lifecycle.py::test_graph_traversal_mode_recall)."""
     from vectorsearch_spark.index import SearchParams
 
@@ -4098,8 +4100,8 @@ def index_search_sealed_exhaustive(spark: SparkSession, sf_dir: str) -> DataFram
     """Degenerate-exact twin of ``index_search_sealed``: with ef ≥
     segment size the PQ candidate pool is the whole segment, so the
     exact re-rank sees every row and the result equals brute force —
-    every operator on the sealed path (codes scan, LUT distances,
-    re-rank join, per-seg cap, global merge) is hash-checked."""
+    every operator on the sealed path (codes cogroup, re-rank join,
+    per-seg cap, global merge) is hash-checked."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
@@ -4180,11 +4182,11 @@ def index_search_join_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def index_search_graph_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degenerate-exact twin of ``index_search_graph``: beam = ef =
-    segment size seeds the traversal with EVERY node, so the best list
-    is exact regardless of graph quality — the traversal joins
-    (adjacency expansion, visited anti-join, best-list cap) are all
-    exercised and the output is hash-checkable against brute force."""
+    """Degenerate-exact twin of ``index_search_graph``: ef = segment
+    size makes every row of every sealed segment a candidate, whatever
+    the seeds or the graph, so the GRAPH path (artifacts cogroup, exact
+    re-rank, per-seg cap, global merge) is hash-checkable against
+    brute force."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
