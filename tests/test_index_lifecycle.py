@@ -1397,3 +1397,183 @@ def test_filtered_search_join_all_modes(spark, built_index):
                 (r["gid"], round(r["distance"], 4))
             )
         assert got == exp, params
+
+
+# ---------------------------------------------------------------------------
+# traversal below the segment size: ef < segment rows, so the generators
+# run their traversal instead of the every-row-is-a-candidate rule
+# ---------------------------------------------------------------------------
+
+EF_BELOW = 20  # < CAP: ef ≥ segment rows would make every row a candidate
+
+
+def _recall_of(spark, idx, data, qids, params, run="search"):
+    qdf = _queries_df(spark, data, qids)
+    approx = getattr(idx, run)(qdf, k=10, params=params).collect()
+    exact = idx.search(qdf, k=10, params=SearchParams(mode="BRUTE")).collect()
+    hits, total = _recall(approx, exact)
+    assert total == len(qids) * 10
+    return hits / total, approx
+
+
+def test_graph_random_pivots_recall_below_segment_rows(spark, built_index):
+    """RANDOM_PIVOTS traversal with ef < segment rows holds the recall
+    gate and is deterministic (pivots seeded by index seed and seg_id)."""
+    idx, data, _ = built_index
+    qids = list(range(0, N, N // 15))[:15]
+    params = SearchParams(
+        mode="GRAPH", ef=EF_BELOW, seed_strategy="RANDOM_PIVOTS", pivots=8
+    )
+    recall, rows = _recall_of(spark, idx, data, qids, params)
+    assert recall >= 0.9, recall
+    _, again = _recall_of(spark, idx, data, qids, params)
+    key = lambda rs: sorted((r["query_id"], r["rank"], r["gid"]) for r in rs)
+    assert key(rows) == key(again)
+
+
+def test_graph_recall_below_segment_rows_l2_and_cosine(spark, built_index, cosine_index):
+    """Default GRAPH (PQ seeds) with ef < segment rows holds the recall
+    gate on both entry points, under L2 and under COSINE."""
+    qids = list(range(0, N, N // 15))[:15]
+    params = SearchParams(mode="GRAPH", ef=EF_BELOW)
+    for idx, data, _ in (built_index, cosine_index):
+        for run in ("search", "search_join"):
+            recall, _ = _recall_of(spark, idx, data, qids, params, run)
+            assert recall >= 0.9, (idx.config.metric, run, recall)
+
+
+def test_graph_max_explore_caps_visited_nodes(spark, built_index):
+    """GRAPH max_explore caps the nodes visited per (query, segment),
+    seeds included: 2 PQ seeds + 3 expanded neighbors = 5 candidates
+    per segment, so k=30 over 4 segments returns exactly 20 rows per
+    query; without the cap the same search fills k."""
+    idx, data, _ = built_index
+    qdf = _queries_df(spark, data, [0, 77, 150])
+    capped = SearchParams(mode="GRAPH", ef=EF_BELOW, beam=2, max_explore=5)
+    rows = idx.search(qdf, k=30, params=capped).collect()
+    assert _count_by(rows, "query_id") == {0: 20, 77: 20, 150: 20}
+    free = SearchParams(mode="GRAPH", ef=EF_BELOW, beam=2)
+    rows = idx.search(qdf, k=30, params=free).collect()
+    assert _count_by(rows, "query_id") == {0: 30, 77: 30, 150: 30}
+
+
+def test_beam_recall_below_segment_rows(spark, built_index):
+    """Deprecated BEAM with its default beam width and ef < segment rows
+    holds the recall gate on both entry points. ef=30, not EF_BELOW:
+    the expanded list starts as the 8 pivots and never grows past ef,
+    so at ef=20 it holds too few expanded nodes."""
+    import warnings
+
+    idx, data, _ = built_index
+    qids = list(range(0, N, N // 25))[:25]
+    params = SearchParams(mode="BEAM", ef=30)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", DeprecationWarning)
+        for run in ("search", "search_join"):
+            recall, _ = _recall_of(spark, idx, data, qids, params, run)
+            assert recall >= 0.9, (run, recall)
+
+
+def test_beam_hop_and_explore_bounds(spark, built_index):
+    """BEAM with ef < segment rows honors its bounds: max_iters=0 keeps
+    only the pivots (3 per segment → 12 rows at k=30); max_explore=5
+    stops expansion once 5 nodes are expanded (2 pivots + 3 found → 20
+    rows; refine_frontier=False, so no frontier member is expanded
+    twice); min_hops only repeats an exhausted frontier, which finds no
+    new node, so it leaves the result unchanged. Every row carries its
+    exact distance."""
+    import warnings
+
+    idx, data, _ = built_index
+    qids = [0, 77, 150]
+    qdf = _queries_df(spark, data, qids)
+    base = dict(mode="BEAM", ef=EF_BELOW, beam=4, refine_frontier=False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", DeprecationWarning)
+        seeds = idx.search(
+            qdf, k=30, params=SearchParams(**base, pivots=3, max_iters=0)
+        ).collect()
+        capped = idx.search(
+            qdf, k=30, params=SearchParams(**base, pivots=2, max_explore=5)
+        ).collect()
+        hops = idx.search(
+            qdf, k=30, params=SearchParams(**base, pivots=2, max_explore=5, min_hops=4)
+        ).collect()
+    assert _count_by(seeds, "query_id") == {0: 12, 77: 12, 150: 12}
+    assert _count_by(capped, "query_id") == {0: 20, 77: 20, 150: 20}
+    key = lambda rs: sorted((r["query_id"], r["rank"], r["gid"]) for r in rs)
+    assert key(hops) == key(capped)
+    for r in capped:
+        d = float(np.sqrt(((data[r["gid"]] - data[r["query_id"]]) ** 2).sum()))
+        assert abs(r["distance"] - d) < 1e-5
+
+
+def _shuffled_scans(plan, path: str, under_shuffle=False) -> list[str]:
+    """Scans of ``path`` that reach a shuffle exchange without first
+    passing a left-semi join, in a physical plan (AQE stages included)."""
+    name = plan.nodeName()
+    if name == "Exchange":
+        under_shuffle = True
+    elif "Join" in name and "LeftSemi" in plan.simpleString(100):
+        under_shuffle = False
+    if name.startswith("Scan") and path in plan.simpleString(400):
+        return [plan.simpleString(400)] if under_shuffle else []
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    for attr in ("plan", "child", "executedPlan"):  # stage / reuse / AQE leaves
+        if not kids and hasattr(plan, attr):
+            try:
+                kids = [getattr(plan, attr)()]
+            except Exception:
+                pass
+    return [s for kid in kids for s in _shuffled_scans(kid, path, under_shuffle)]
+
+
+def test_rerank_never_shuffles_the_vectors_scan(spark, built_index):
+    """The exact re-rank cuts the vectors scan to the candidate rows
+    (semi-join against the broadcast candidate pairs) before any
+    shuffle. With auto-broadcast off, as for a vectors table above the
+    broadcast threshold, a sort-merge re-rank join would otherwise
+    shuffle the embeddings of every sealed row."""
+    idx, data, _ = built_index
+    qdf = _queries_df(spark, data, [0, 77, 150])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for params in (SearchParams(), SearchParams(mode="GRAPH", ef=EF_BELOW)):
+            res = idx.search(qdf, k=10, params=params)
+            assert len(res.collect()) == 3 * 10
+            plan = res._jdf.queryExecution().executedPlan()
+            vectors = idx.vectors_path.split("://")[-1]
+            assert _shuffled_scans(plan, vectors) == [], params
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_query_blocks_leave_results_unchanged(spark, built_index):
+    """A cogroup task scores its segment against blocks of at most 1,024
+    queries; 1,100 queries span two blocks, and both scans (brute, and
+    PQ at ef = segment rows) still return the exact top-3 of every
+    query."""
+    idx, data, _ = built_index
+    n_q = 1100
+    vec = idx.vectors().select("gid", "embedding")
+    q = (
+        spark.range(n_q)
+        .select(F.col("id").alias("query_id"), (F.col("id") % N).alias("gid"))
+        .join(vec, "gid")
+        .select("query_id", "embedding")
+    )
+    exp = {}
+    for qid in range(N):
+        d = np.sqrt(((data.astype(np.float64) - data[qid]) ** 2).sum(axis=1))
+        exp[qid] = [int(g) for g in np.lexsort((np.arange(N), d))[:3]]
+    for run, params in (
+        (idx.search_join, SearchParams()),
+        (idx.search, SearchParams(mode="PQ", ef=CAP)),
+    ):
+        got = {}
+        for r in sorted(run(q, k=3, params=params).collect(), key=lambda r: r["rank"]):
+            got.setdefault(r["query_id"], []).append(r["gid"])
+        assert len(got) == n_q, params
+        assert all(got[qid] == exp[qid % N] for qid in got), params

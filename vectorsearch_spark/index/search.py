@@ -33,7 +33,8 @@ rows are bucketed by hash(seg_id), so a segment lives in exactly one
 task, and the query DataFrame is replicated to every bucket. Both emit
 bounded candidate sets per (query, segment), so no shuffle past the
 scan is ever O(N); the codes scan never reads the embeddings, which
-only the re-rank touches, for ≤ Q×S×ef rows.
+only the re-rank touches: it scans them once and cuts them to the
+candidate rows (a broadcast semi-join) before any shuffle.
 """
 
 from __future__ import annotations
@@ -67,6 +68,9 @@ _RESULT_SCHEMA = (
     "query_id long, gid long, distance double, score double, payload binary, rank int"
 )
 _PANDAS_TYPES = {"long": "int64", "int": "int32", "double": "float64"}
+# queries scored against one segment at a time inside a cogroup task:
+# bounds the dense (segment rows × queries) working set of the scans
+_Q_BLOCK = 1024
 
 
 def default_ef(k: int, oversample: int) -> int:
@@ -214,9 +218,13 @@ def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schem
 
     ``per_segment(seg_id, rows, qids, qmat)`` gets one segment's rows
     sorted by vec_id (results must not depend on partition read order)
-    and the (Q, d) float64 query matrix, and returns a pandas frame of
-    ``schema`` or None. Task memory is one bucket's rows + Q query rows
-    (one bucket per segment, capped at 256 buckets)."""
+    and one block of at most ``_Q_BLOCK`` queries as a (B, d) float64
+    matrix, and returns a pandas frame of ``schema`` or None; every
+    query's rows depend on that query alone, so blocking leaves the
+    output unchanged. Task memory is one bucket's rows (one bucket per
+    segment, capped at 256 buckets), the Q replicated query rows, and
+    one block's working set: the brute scan's (segment rows ×
+    ``_Q_BLOCK``) distance matrix, or ``_Q_BLOCK`` LUTs."""
     n_buckets = min(max(n_segs, 1), 256)
     side = side.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets)))
     q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
@@ -234,8 +242,9 @@ def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schem
         qmat = np.stack(q_pdf["__qvec"].to_numpy()).astype(np.float64)
         side_pdf = side_pdf.sort_values(["seg_id", "vec_id"], kind="stable")
         out = [
-            per_segment(int(seg_id), rows, qids, qmat)
+            per_segment(int(seg_id), rows, qids[i : i + _Q_BLOCK], qmat[i : i + _Q_BLOCK])
             for seg_id, rows in side_pdf.groupby("seg_id", sort=False)
+            for i in range(0, len(qids), _Q_BLOCK)
         ]
         out = [o for o in out if o is not None]
         return pd.concat(out, ignore_index=True) if out else empty
@@ -264,8 +273,9 @@ def _brute_scan(index, q, segs, metric, emb: Column, allowed, limit: int) -> Dat
 def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> DataFrame:
     """Step 3 frame shared by the generators: per (segment, query) the
     candidate rows ``pick`` chooses, or every row when ef ≥ segment
-    rows. ``side`` holds artifact rows (seg_id, kind, vec_id, codes,
-    ...); ``pick(seg_id, rows, vec_ids, mat, ef, luts)`` sees the segment's
+    rows. ``side`` holds code rows (seg_id, vec_id, codes), plus, with
+    a ``kind`` column, the adjacency rows the GRAPH generator reads;
+    ``pick(seg_id, rows, vec_ids, mat, ef, luts)`` sees the segment's
     vec_id-sorted code matrix and one LUT per query, and returns one
     array of row positions per query.
 
@@ -279,7 +289,7 @@ def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> Dat
 
     def per_segment(seg_id, rows, qids, qmat):
         cb = cbs_bc.value.get(seg_id)
-        codes = rows[rows["kind"] == "code"]
+        codes = rows[rows["kind"] == "code"] if "kind" in rows else rows
         n = len(codes)
         if cb is None or n == 0:
             return None
@@ -320,11 +330,7 @@ def _pq_cogroup_candidates(index, q, sealed_segs, ef_by_seg, metric, allowed) ->
     top-ef per (query, segment). Reads only (seg_id, vec_id, codes).
     The allow-list pre-filters the codes side: the candidate pool is
     spent on allowed vectors only."""
-    codes = (
-        index._artifacts()
-        .filter((F.col("kind") == "code") & F.col("seg_id").isin(sealed_segs))
-        .select("seg_id", "kind", "vec_id", "codes")
-    )
+    codes = index.codes(sealed_segs)
     if allowed is not None:
         allowed_sv = (
             index.vectors(states=SEARCHABLE_SEALED)
@@ -494,12 +500,27 @@ def _exact_rerank(index, cand, q, metric, emb: Column, allowed, limit: int) -> D
     """Step 4: candidates (≤ Q×S×ef (query_id, seg_id, vec_id) rows)
     join back to the raw vectors on the composite key, drop tombstones,
     attach the query vector and rescore with the true metric; then the
-    per-segment cap. No broadcast hints: at moderate Q the planner
-    broadcasts the bounded sides from their observed size, and at the
-    million-query scale a forced broadcast of the query relation would
-    be the memory wall."""
-    vec = index.vectors(states=SEARCHABLE_SEALED).select(
-        "seg_id", "vec_id", "gid", "embedding", "deleted"
+    per-segment cap.
+
+    The vectors scan is first cut to the candidate rows by a left-semi
+    join against a broadcast of the distinct (seg_id, vec_id) pairs
+    (≤ min(sealed rows, Q×S×ef) × 8 bytes), so the embeddings that
+    reach the shuffle of the re-rank join are those of candidates only,
+    never of every sealed row. The candidate frame is used twice, so it
+    is checkpointed lazily and the generator runs once, on first use
+    (under AQE, building the DataFrame already runs the generator's
+    two input shuffles; a shared exchange is not reused here, because
+    column pruning gives the two uses different plans). No other
+    broadcast hint: at moderate Q the planner broadcasts the
+    bounded sides from their observed size, and at the million-query
+    scale a forced broadcast of the query relation would be the memory
+    wall."""
+    cand = cand.localCheckpoint(eager=False)
+    pairs = cand.select("seg_id", "vec_id").distinct()
+    vec = (
+        index.vectors(states=SEARCHABLE_SEALED)
+        .select("seg_id", "vec_id", "gid", "embedding", "deleted")
+        .join(F.broadcast(pairs), ["seg_id", "vec_id"], "left_semi")
     )
     reranked = (
         vec.join(cand, ["seg_id", "vec_id"])
