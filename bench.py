@@ -287,6 +287,11 @@ EXTRA: dict = {
 }
 
 
+def entries() -> list[str]:
+    """Names of every timed entry, before the per-commit shuffle."""
+    return HEADLINE + list(EXTRA)
+
+
 def _micro_kernels(spark) -> dict:
     """Kernel-level micro-bench (parity with the reference's
     DistanceAndPqBenchmark.java:30-123): per-dim throughput of the
@@ -461,7 +466,7 @@ def main() -> None:
     order_seed = int(
         os.environ.get("SPARK_GRAFT_BENCH_SEED", zlib.crc32(commit.encode()))
     )
-    order = HEADLINE + list(EXTRA)
+    order = entries()
     random.Random(order_seed).shuffle(order)
     # debug-only subset filter (comma-separated names); the driver
     # never sets it, so recorded artifacts are always the full suite
