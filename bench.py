@@ -1,4 +1,6 @@
-"""Benchmark harness: runs the headline workload queries at
+"""Benchmark harness: runs every registry entry flagged ``bench=True``
+in ``workload.registry()`` plus the index build/maintenance entries in
+``EXTRA`` (``entries()``, 190 names, shuffled per commit) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line LAST:
 {"metric": ..., "value": total_sec, "unit": "sec", "sf": ..., "reps": ...}
@@ -32,203 +34,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from vectorsearch_spark import workload
 from vectorsearch_spark.session import get_spark
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q6_revenue_change",
-    "q4_order_priority",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q7_volume_shipping",
-    "q19_discount_revenue",
-    "q21_suppliers_kept_waiting",
-    "q13_customer_distribution",
-    "q22_inactive_customers",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q2_min_cost_supplier",
-    "q16_supplier_part_counts",
-    "q20_dominant_suppliers",
-    "q9_product_profit",
-    "q11_important_parts",
-    "revenue_rollup",
-    "sql_knn_topk",
-    "events_hourly_rollup",
-    "events_moving_avg",
-    "events_distinct_users",
-    "price_percentiles",
-    "events_type_pivot",
-    "events_gap_fill",
-    "events_interpolated",
-    "lineitem_unpivot",
-    "events_stratified_sample",
-    "events_funnel",
-    "events_cohort_retention",
-    "top_customers_per_nation",
-    "bloom_pruned_revenue",
-    "text_search_bm25",
-    "hybrid_search_rrf",
-    "label_centroids",
-    "corpus_vocab_stats",
-    "knn_l2_batch",
-    "knn_cosine_batch",
-    "knn_filtered_batch",
-    "top_tokens_per_lang",
-    "events_sliding_windows",
-    "events_next_purchase",
-    "customer_set_ops",
-    "event_type_gmean",
-    "mm_png_decode",
-    "mm_jpeg_decode",
-    "mm_mjpeg_frames",
-    "mm_wav_features",
-    "bucketed_revenue_join",
-    "bpe_encode_stats",
-    "doc_tfidf_top_terms",
-    "orders_validation",
-    "lineitem_price_drift",
-    "embedding_outliers",
-    "doc_ngram_diversity",
-    "mm_resize_pipeline",
-    "mm_audio_spectral",
-    "index_search_join_graph",
-    "orders_cube",
-    "corpus_splits",
-    "pipeline_pack_curated",
-    "doc_chunking",
-    "doc_lm_perplexity",
-    "events_variant_props",
-    "events_value_outliers",
-    "pipeline_chunk_shards",
-    "lineitem_corr_matrix",
-    "order_top_line_lateral",
-    "events_type_dow_chisq",
-    "embedding_pca",
-    "embedding_kmeans",
-    "dedup_semantic",
-    "part_reachability",
-    "ann_ivf_topk",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_incremental",
-    "dedup_clusters",
-    "dedup_simhash",
-    "doc_token_stats",
-    "doc_fingerprints",
-    "stream_window_rollup",
-    "events_session_windows",
-    "events_asof_attribution",
-    "events_scd2_history",
-    "events_incremental_rollup",
-    "customer_balance_ranks",
-    "documents_profile",
-    "part_zorder_values",
-    "part_copurchase_pairs",
-    "events_error_sessions",
-    "doc_repetition",
-    "pii_redaction",
-    "benchmark_contamination",
-    "mm_feature_extract",
-    "mm_image_decode",
-    "index_search_join",
-    "index_search_join_graph_default",
-    "passage_dedup",
-    "corpus_token_mix",
-    "knn_mmr_rerank",
-    "index_search_join_beam",
-    "embedding_pack_roundtrip",
-    "dedup_repeated_spans",
-    "dedup_span_cut",
-    "source_overlap_matrix",
-    "embedding_opq_quality",
-    "embedding_sq8_roundtrip",
-    "index_search_opq",
-    "doc_span_corruption",
-    "doc_fim_transform",
-    "ann_lsh_multiprobe",
-    "corpus_temperature_mix",
-    "corpus_importance_sample",
-    "quality_classifier_scores",
-    "corpus_ngram_lm",
-    "training_shuffle_shards",
-    "dedup_lines",
-    "token_heavy_hitters",
-    "corpus_quality_topfrac",
-    "ann_ivfpq_topk",
-    "tokenizer_unigram_vocab",
-    "tokenizer_unigram_encode",
-    "events_exact_quantiles",
-    "q12_shipmode_priority",
-    "stream_line_dedup_fold",
-    "training_pack_sequences",
-    "index_search_filtered",
-    "stream_token_heavy_hitters",
-    "tokenizer_unigram_vocab_chars",
-    "tokenizer_unigram_encode_chars",
-    "stream_value_quantiles",
-    "stream_type_quantiles",
-    "stream_distinct_users",
-    "stream_type_distinct_users",
-    "stream_token_heavy_hitters_exact",
-    "source_token_heavy_hitters",
-    "knn_mmr_maxrel",
-    "embedding_kmeans_assign",
-    "quality_classifier_onestep",
-    "embedding_pca_cov",
-    "bpe_pair_counts",
-    "knn_range_batch",
-    "knn_range_ivf",
-    # round-11 additions
-    "mm_image_neardup",
-    "mm_image_neardup_256",
-    "mm_image_neardup_256_capped",
-    "mm_video_scenecut",
-    "mm_video_neardup",
-    "doc_html_extract_bytes",
-    "warc_html_extract",
-    "pipeline_crawl_frontier",
-    "warc_wet_text",
-    "warc_wat_links",
-    "pipeline_crawl_expand",
-    "curate_robots_filter",
-    "frontier_sitemap_urls",
-    "frontier_politeness",
-    "mm_audio_dft_bins",
-    "training_length_batches_bpe",
-    "doc_url_canonicalize",
-    "dedup_url_exact",
-    "curate_host_cap",
-    "doc_quality_gopher",
-    "stream_url_dedup_fold",
-    "doc_c4_clean",
-    "curate_blocklist_filter",
-    "pipeline_web_curation",
-    "split_leakage_check",
-    "mm_audio_neardup",
-    "doc_repetition_gopher",
-    "doc_quality_fineweb",
-    # round-10 additions
-    "knn_range_ivf_distributed",
-    "knn_range_cosine",
-    "knn_range_ivf_cosine",
-    "dedup_semantic_exact",
-    "embedding_opq_identity",
-    "doc_html_extract",
-    "dedup_embedding_radius",
-    "doc_text_normalize",
-    "training_length_batches",
-    "mm_image_dhash",
-    # round-13 additions (r12 VERDICT #7: real user paths that were
-    # outside the HEADLINE set)
-    "index_search_brute",
-    "ann_lsh_topk",
-    "pipeline_c4_text",
-    # index_lifecycle_registry is a CORRECTNESS entry only: bench
-    # already times the same delete->vacuum->compact path end-to-end
-    # as index_maintenance; duplicating a ~6 s lifecycle here would
-    # bloat the suite without new signal
-]
 
 def _index_build(spark, sf_dir):
     """Fresh ingest + PQ/graph build of the embeddings index."""
@@ -280,16 +85,16 @@ def _index_maintenance(spark, sf_dir):
     return idx.segments()
 
 
+# timed entries that are not registry rows
 EXTRA: dict = {
     "index_build": _index_build,
     "index_maintenance": _index_maintenance,
-    "index_search_sealed": None,  # resolved from the workload registry
 }
 
 
 def entries() -> list[str]:
     """Names of every timed entry, before the per-commit shuffle."""
-    return HEADLINE + list(EXTRA)
+    return [e.fn.__name__ for e in workload.registry() if e.bench] + list(EXTRA)
 
 
 def _micro_kernels(spark) -> dict:
@@ -410,8 +215,7 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    registry = dict(workload.queries())
-    registry.update({k: v for k, v in EXTRA.items() if v is not None})
+    registry = {**workload.queries(), **EXTRA}
 
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     try:

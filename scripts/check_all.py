@@ -1,76 +1,57 @@
-"""Full driver-contract sweep: run EVERY registry query against its
-DuckDB oracle at sf0.01 (the same normalize/compare the external
-driver applies), printing one line per query and a final summary.
-Usage: python scripts/check_all.py [start] [end]"""
+"""Driver-contract sweep: run registry entries against their DuckDB
+oracles with the one compare in tests/oracle.py, printing one line per
+entry (the first differing rows on a mismatch) and a summary. Exits 1
+when any entry fails.
 
-import importlib.util
+Usage: python scripts/check_all.py [name ...]   (default: every entry)
+SPARK_GRAFT_SF_DIR picks the data (default /root/testdata/sf0.01) and
+SPARK_GRAFT_CPUS sizes local[N] (default: the CPUs this process may use).
+"""
+
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
-)
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
-
-import duckdb
-from pyspark.sql import SparkSession
+from tests.oracle import compare, duck_con
+from vectorsearch_spark import workload
+from vectorsearch_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
-def norm(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith("float"):
-            df[c] = df[c].round(6)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def main():
-    start = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    end = int(sys.argv[2]) if len(sys.argv) > 2 else 10**9
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "16")
-        .getOrCreate()
-    )
+def main() -> int:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    spark = get_spark("check_all", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    qs, osql = mod.queries(), mod.oracle_sql()
+    con = duck_con(SF)
+    qs, osql = workload.queries(), workload.oracle_sql()
     bad = []
-    for i, (name, fn) in enumerate(qs.items()):
-        if not (start <= i < end):
-            continue
+    for i, name in enumerate(sys.argv[1:] or qs):
         t0 = time.time()
         try:
-            got = norm(fn(spark, SF).toPandas())
+            got = qs[name](spark, SF).toPandas()
             if name not in osql:
                 print(f"{i:3d} {name}: rows-only rows={len(got)} ({time.time()-t0:.1f}s)", flush=True)
                 continue
-            exp = norm(con.sql(osql[name]).df())
-            ok = (
-                got.shape == exp.shape
-                and list(got.columns) == list(exp.columns)
-                and got.equals(exp)
+            v = compare(got, con.sql(osql[name]).df())
+            print(
+                f"{i:3d} {name}: rows={len(got)} match={v.ok} rows_match={v.rows_match} "
+                f"schema_match={v.schema_match} hash_match={v.hash_match} ({time.time()-t0:.1f}s)",
+                flush=True,
             )
-            print(f"{i:3d} {name}: rows={len(got)} match={ok} ({time.time()-t0:.1f}s)", flush=True)
-            if not ok:
+            if not v.ok:
+                print(f"  {v.detail}", flush=True)
                 bad.append(name)
-        except Exception as e:
+        except Exception as e:  # one entry's failure must not stop the sweep
             print(f"{i:3d} {name}: ERROR {type(e).__name__}: {e}", flush=True)
+            traceback.print_exc()
             bad.append(name)
     print("FAILED:" if bad else "ALL GREEN", bad, flush=True)
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

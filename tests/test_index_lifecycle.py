@@ -1000,6 +1000,53 @@ def test_delete_crash_mid_swap_recover_rerun(spark, tmp_path_factory):
     assert live == 120 - len(doomed)
 
 
+def test_build_crash_mid_swap_recover_rebuild(spark, tmp_path_factory):
+    """Kill a build inside its artifacts swap, after a live partition
+    moved to its backup: recover() restores the backup, and the rebuild
+    gives the same search result as a clean build. The first build
+    writes artifacts without sealing, so the crashed build re-writes
+    partitions that already exist (a build that died before its seal
+    and is re-run)."""
+    import os
+
+    from vectorsearch_spark import staging
+
+    clean, data = _fresh_idx(spark, tmp_path_factory)
+    qdf = _queries_df(spark, data, [3, 60, 110])
+
+    def result(index):
+        return sorted(
+            (r["query_id"], r["gid"], r["distance"])
+            for r in index.search(qdf, k=5).collect()
+        )
+
+    expected = result(clean)
+    idx = VectorIndex.create(spark, str(tmp_path_factory.mktemp("vsbuild")), clean.config)
+    idx.add(_gaussian_df(spark, 120, DIM, seed=77)[0], order_col="row_id")
+    assert idx.build(seal=False) == [0, 1]
+
+    class Boom(RuntimeError):
+        pass
+
+    def hook(stage, detail):
+        if stage == "backed_up":
+            raise Boom(f"injected at {stage}:{detail}")
+
+    staging._FAULT = hook
+    try:
+        with pytest.raises(Boom):
+            idx.build()
+    finally:
+        staging._FAULT = None
+    names = os.listdir(idx.artifacts_path)
+    assert ".swap_old_seg_id=0" in names and "seg_id=0" not in names
+
+    acts = idx.recover()
+    assert "restored:seg_id=0" in acts["swaps"]
+    assert idx.build() == [0, 1]
+    assert result(idx) == expected
+
+
 def test_compact_crash_before_registry_swap_recover_rerun(spark, tmp_path_factory):
     """Kill compaction between the data copy/build and the final
     registry swap: the half-built destination must stay invisible

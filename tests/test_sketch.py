@@ -883,3 +883,34 @@ def test_value_histogram_fold_empty_first_batch_and_inf(spark, tmp_path_factory)
     fold_group_value_histogram_batch(gmessy, 0, stg2, "g", "value", bins=16)
     r = read_group_quantile_state(spark, stg2, [1.0]).collect()[0]
     assert r["ub"] == 2.0
+
+
+@pytest.mark.parametrize(
+    "entry", ["stream_token_heavy_hitters_exact", "source_token_heavy_hitters"]
+)
+def test_exact_heavy_hitter_capacity_covers_lowercase_expansion(spark, tmp_path, entry):
+    """The two degenerate-exact heavy-hitter entries size capacity ≥ N
+    from the text. Both tokenize lower(text), and Spark's lower('İ') is
+    'i' + U+0307 — two tokens from one source char. Here one 6-char
+    document yields 7 distinct tokens; a capacity of Σ length(text) = 6
+    trims the summary, so the entry must size from the lowered text and
+    still return every token's exact count with lb = est = ub."""
+    import pandas as pd
+
+    from vectorsearch_spark import workload
+    from vectorsearch_spark.operators.text import BPE_PIECE_RE
+
+    pd.DataFrame(
+        {"doc_id": [0], "text": ["İ!#$%&"], "lang": ["tr"], "source": ["web"],
+         "n_chars": [6]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    toks = spark.read.parquet(str(tmp_path / "documents.parquet")).select(
+        F.explode(
+            F.regexp_extract_all(F.lower("text"), F.lit(BPE_PIECE_RE), F.lit(0))
+        ).alias("token")
+    )
+    exact = {r["token"]: r["count"] for r in toks.groupBy("token").count().collect()}
+    assert len(exact) == 7 and "\u0307" in exact
+    got = getattr(workload, entry)(spark, str(tmp_path)).collect()
+    assert {r["token"]: r["est"] for r in got} == exact
+    assert all(r["lb"] == r["est"] == r["ub"] for r in got)

@@ -344,6 +344,63 @@ def test_stream_recovery_crash_after_parquet_only(spark, tmp_path_factory):
     assert gids == list(range(18))  # exactly once after replay
 
 
+def test_build_and_orphan_scrub_leave_partition_overwrite_mode_alone(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The segment build and the streaming orphan scrub rewrite index
+    partitions through the staged swap, never by switching the
+    session-wide partitionOverwriteMode (which would change every other
+    write on the same session while set). Spies on RuntimeConfig.set
+    across a build, a scrub that rewrites a partially orphaned
+    partition, and the rebuild after it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from vectorsearch_spark.streaming.ingest import (
+        _write_intent,
+        recover_interrupted_epoch,
+    )
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    idx_path = str(tmp_path_factory.mktemp("nomode_idx"))
+    idx = VectorIndex.create(
+        spark, idx_path,
+        IndexConfig(name="nm", dimension=2, max_segment_size=10, pq_m=2, pq_k=4),
+    )
+    idx.add(
+        spark.createDataFrame([(i, [float(i), 0.0]) for i in range(15)], EMB_SCHEMA),
+        order_col="row_id", meta_extra={"applied_epochs": {"s": 0}},
+    )
+    assert idx.build() == [0]
+    meta_before = open(idx.meta_path).read()
+    segs_before = open(idx.segments_path).read()
+    _write_intent(idx, "s", 1)
+    idx.add(
+        spark.createDataFrame([(i, [float(i), 1.0]) for i in range(15, 28)], EMB_SCHEMA),
+        order_col="row_id", meta_extra={"applied_epochs": {"s": 1}},
+    )
+    # crash just after the parquet commit: seg 1 is half orphans
+    with open(idx.meta_path, "w") as f:
+        f.write(meta_before)
+    with open(idx.segments_path, "w") as f:
+        f.write(segs_before)
+    idx2 = VectorIndex.open(spark, idx_path)
+    assert recover_interrupted_epoch(idx2, "s", 1) == 13
+    assert sorted(r["gid"] for r in idx2.vectors().collect()) == list(range(15))
+    idx2.add(
+        spark.createDataFrame([(i, [float(i), 1.0]) for i in range(15, 28)], EMB_SCHEMA),
+        order_col="row_id", meta_extra={"applied_epochs": {"s": 1}},
+    )
+    assert idx2.build() == [1]
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys
+
+
 def test_stream_dedup_drops_replayed_rows(spark, tmp_path_factory):
     """At-least-once input (every event written TWICE, in two files so
     they can land in different micro-batches) → exactly-once output:

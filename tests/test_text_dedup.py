@@ -475,6 +475,28 @@ def test_bitstring_near_dup_boundary_and_width(spark):
     assert got1 == {1: 1, 2: 1, 3: 0}
 
 
+def test_bitstring_near_dup_builds_without_spark_jobs(spark):
+    """The (id, fingerprint) proxy is checkpointed lazily, so building
+    the near-dup DataFrame launches no Spark job; the first action on
+    the result computes it."""
+    from vectorsearch_spark.operators.dedup import bitstring_near_dup
+
+    df = spark.createDataFrame(
+        [(1, "0" * 40), (2, "1" * 3 + "0" * 37), (3, "1" * 40)],
+        "media_id long, dhash string",
+    )
+    sc = spark.sparkContext
+    group = "bitstring_near_dup_build"
+    sc.setJobGroup(group, group)
+    try:
+        out = bitstring_near_dup(df, n_bits=40, max_hamming=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land asynchronously
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert {r["media_id"]: r["keep"] for r in out.collect()} == {1: 1, 2: 0, 3: 1}
+
+
 def test_bitstring_near_dup_band_cap_prunes_hot_band_keeps_quiet_pairs(spark):
     """max_band_freq on bitstring_near_dup — the production lever for
     hot-band-bucket growth (correlated fingerprints share whole bands,

@@ -12,12 +12,14 @@ Spark shape: ONE ``applyInPandas`` task per segment computes all three
 artifacts (train → encode → graph) in a single pass — one shuffle of
 the segment vectors total, the same one-segment-per-worker contract as
 the reference (SegmentBuildService builds a whole segment in one
-worker). The tagged-union result lands in ONE dynamic-partition-
-overwrite write of the unified artifacts table (partitioned by
-(seg_id, kind) — see VectorIndex.artifacts_path), so a whole build is
-a single Spark job; rebuilds replace exactly the touched (seg_id,
-kind) partitions, staying idempotent. Rows are sorted by vec_id inside
-the task, making codebook training deterministic under shuffle
+worker). The tagged-union result lands in ONE staged write of the
+unified artifacts table (partitioned by (seg_id, kind) — see
+VectorIndex.artifacts_path) followed by the rename swap of
+vectorsearch_spark.staging, so a whole build is a single Spark job;
+rebuilds replace exactly the built segments' partitions, staying
+idempotent, and ``recover()`` rolls a crashed swap back or forward as
+for every other rewrite of the index tables. Rows are sorted by vec_id
+inside the task, making codebook training deterministic under shuffle
 nondeterminism. All segments build in parallel across the cluster in a
 single job.
 """
@@ -34,6 +36,7 @@ from vectorsearch_spark.index.catalog import VectorIndex
 from vectorsearch_spark.metrics import get_metrics
 from vectorsearch_spark.operators.graph import build_graph
 from vectorsearch_spark.operators.pq import encode, opq_train, train_codebook
+from vectorsearch_spark.staging import staged_partition_rewrite
 
 # the unified artifacts table: tagged union of the three artifact kinds
 # (kind ∈ {cb, code, adj}), partitioned by (seg_id, kind)
@@ -43,18 +46,6 @@ ARTIFACTS_SCHEMA = (
     "rotation array<double>"  # OPQ rotation (d*d flat), NULL when use_opq off
 )
 _STAGE_SCHEMA = ARTIFACTS_SCHEMA
-
-
-def _dynamic_overwrite(index: VectorIndex, df, path: str) -> None:
-    """Replace only the (seg_id, kind) partitions present in df
-    (rebuilds are idempotent; untouched segments keep their files)."""
-    spark = index.spark
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("seg_id", "kind").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def _build_segment_fn(cfg):
@@ -163,9 +154,9 @@ def build_segments(
         for sid in targets
     ):
         # ONE job: per-segment train+encode+graph (single shuffle of
-        # the vectors) written straight into the unified artifacts
-        # table — idempotent rebuild replaces exactly the touched
-        # (seg_id, kind) partitions
+        # the vectors) staged, then swapped into the unified artifacts
+        # table — idempotent rebuild replaces exactly the built
+        # segments' partitions (every group emits all three kinds)
         # (tasks/SegmentBuildServiceIdempotentTest.java behavior).
         # Explicit-count repartition by seg_id: the vectors shuffle is
         # tiny in BYTES (KBs) but heavy in CPU (Vamana per segment), so
@@ -182,7 +173,9 @@ def build_segments(
             .applyInPandas(_build_segment_fn(cfg), _STAGE_SCHEMA)
         )
         with get_metrics(index.spark).phase("index.build.write"):
-            _dynamic_overwrite(index, staged, index.artifacts_path)
+            staged_partition_rewrite(
+                index.spark, staged, index.artifacts_path, ["seg_id", "kind"]
+            )
 
     # seal — empty segments seal too (zero-codebook fallback,
     # SegmentBuildService.java:346-392: guarantees state transition)

@@ -16,8 +16,9 @@ Reference semantics:
   swap the registry — gids are stable across the move
   (tasks/MaintenanceService.java:248-417, api/GidCompactionStabilityTest.java).
 
-Spark shape: every rewrite is a *partition* rewrite using dynamic
-partition overwrite (only touched seg_id partitions are replaced);
+Spark shape: every rewrite is a *partition* rewrite through the staged
+swap of vectorsearch_spark.staging (only touched seg_id partitions are
+replaced);
 "atomic registry swap" is one overwrite of the tiny segments table,
 which is the single source of truth for visibility. Planner arithmetic
 is a pure DataFrame aggregation. Nothing driver-side ever holds row
@@ -155,7 +156,7 @@ def vacuum_segment(
         # in the same operation) — count==0 decides the fully-deleted
         # branch without an isEmpty() probe job
         if seg["count"] == 0:
-            # fully-deleted segment: dynamic partition overwrite writes
+            # fully-deleted segment: a partitioned write emits
             # NOTHING for an empty DataFrame (no partitions present in
             # the written data), leaving the tombstoned files on disk
             # forever — drop the partition directories directly instead

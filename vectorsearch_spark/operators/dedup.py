@@ -461,10 +461,12 @@ def bitstring_near_dup(
     # upstream fingerprint pipeline — for the mm_* entries a full
     # decode of every payload — once per reference (6 MapInPandas
     # chains in the r15-before plan). The checkpointed table is the
-    # tiny proxy (id + n_bits-char hash), never the payloads.
+    # tiny proxy (id + n_bits-char hash), never the payloads. Lazy, as
+    # in unigram_encode: it is computed by the first action on the
+    # result, so building the DataFrame launches no Spark job.
     rows = df.select(
         F.col(id_col).cast("long").alias(id_col), hash_col
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     g = rows.groupBy(hash_col).agg(F.min(id_col).alias("_g_min"))
 
     band_keys = F.array(

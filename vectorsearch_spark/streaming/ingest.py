@@ -19,7 +19,7 @@ checkpoint commit did not. Three pieces close that:
    write (``meta_extra``) — ONE atomic temp+rename commits rows'
    visibility and the epoch mark together. A replayed epoch ≤ the
    recorded one is skipped (``build()`` still runs: rebuild is an
-   idempotent dynamic-partition overwrite + seal).
+   idempotent staged partition rewrite + seal).
 2. **Write-ahead intent.** Before mutating anything, the epoch writes
    ``<root>/stream_intent.json`` = (stream_id, epoch_id, next_gid,
    registry snapshot). ``add``'s internal order is parquet-commit →
@@ -33,7 +33,9 @@ checkpoint commit did not. Three pieces close that:
    gids allocate from meta's counter, which never advanced). The scrub
    rewrites only the touched partitions (≤ one partial ACTIVE segment
    kept + whole orphan partitions removed), then the epoch re-runs
-   cleanly.
+   cleanly. The rewrite is the staged partition swap of
+   vectorsearch_spark.staging, so ``recover()`` repairs a crash inside
+   it as for every other rewrite of the index tables.
 
 Every state file write is atomic temp+rename; the vectors append is
 visible only at Spark job commit — so each crash point lands in exactly
@@ -57,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectorsearch_spark.index.catalog import VECTORS_SCHEMA, VectorIndex
+from vectorsearch_spark.staging import staged_partition_rewrite
 
 _APPLIED_KEY = "applied_epochs"  # meta.json: {stream_id: last_applied_epoch}
 
@@ -124,19 +127,8 @@ def _scrub_orphans(index: VectorIndex, min_gid: int) -> int:
         else:
             rewrite_segs.append(int(r["seg_id"]))
     if rewrite_segs:
-        # break lineage before overwriting the path being read
-        keep = (
-            raw.filter(F.col("seg_id").isin(rewrite_segs) & (F.col("gid") < min_gid))
-            .localCheckpoint()
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            keep.write.mode("overwrite").partitionBy("seg_id").parquet(
-                index.vectors_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        keep = raw.filter(F.col("seg_id").isin(rewrite_segs) & (F.col("gid") < min_gid))
+        staged_partition_rewrite(spark, keep, index.vectors_path, "seg_id")
     return removed
 
 
