@@ -100,23 +100,26 @@ def entries() -> list[str]:
 def _micro_kernels(spark) -> dict:
     """Kernel-level micro-bench (parity with the reference's
     DistanceAndPqBenchmark.java:30-123): per-dim throughput of the
-    HOF-expression distance path (JVM codegen — the per-row scoring
-    used in re-rank/filters) vs the NumPy/GEMM batch path (the bulk
-    KNN kernel), plus PQ encode + LUT build. Reported in BENCH_DETAIL
-    under "micro" so codegen regressions are visible independent of
-    query noise; excluded from the headline total."""
+    exact-distance kernel as a Column (the Arrow UDF the per-row
+    scoring in re-rank/filters uses) vs the GEMM batch path (the bulk
+    KNN kernel, ``knn_join``), both through Spark over the same
+    checkpointed frame so both pay the Spark↔Python handoff; plus PQ
+    encode + LUT build. Reported in BENCH_DETAIL under "micro";
+    excluded from the headline total."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from vectorsearch_spark.functions.distances import l2_squared
+    from vectorsearch_spark.operators.knn import knn_join
     from vectorsearch_spark.operators.pq import build_lut, encode, train_codebook
 
     out: dict[str, float] = {}
-    n = 50_000
+    n, nq = 50_000, 256
     for d in (128, 768):
         base = (
             spark.range(n)
             .select(
+                "id",
                 F.transform(
                     F.sequence(F.lit(1), F.lit(d)),
                     lambda i: (F.col("id") * 31 + i.cast("long")) % 997 / 997.0,
@@ -128,27 +131,20 @@ def _micro_kernels(spark) -> dict:
             )
             .localCheckpoint()  # time the kernel, not the generator
         )
-        # warm once so the timing sees the KERNEL, not whole-stage
-        # codegen compilation (one-shot timing put compile jitter on
-        # par with the 50k-row work itself — the r6→r8 0.33 vs 0.05
-        # "regression" was exactly that)
-        base.select(F.sum(l2_squared("a", "b")).alias("s")).collect()
-        t0 = time.time()
-        base.select(F.sum(l2_squared("a", "b")).alias("s")).collect()
-        hof = time.time() - t0
-        out[f"dist_hof_d{d}_mrows_s"] = round(n / hof / 1e6, 3)
-
-        rng = np.random.default_rng(42)
-        x = rng.normal(size=(n, d)).astype(np.float32)
-        q = rng.normal(size=(256, d)).astype(np.float32)
-        t0 = time.time()
-        # ‖x−q‖² = ‖x‖² + ‖q‖² − 2x·qᵀ — the knn.py GEMM identity
-        xn = (x * x).sum(axis=1)
-        qn = (q * q).sum(axis=1)
-        d2 = xn[:, None] + qn[None, :] - 2.0 * (x @ q.T)
-        d2.min(axis=1)
-        gemm = time.time() - t0
-        out[f"dist_gemm_d{d}_mpairs_s"] = round(n * len(q) / gemm / 1e6, 1)
+        queries = base.where(F.col("id") < nq).select(
+            F.col("id").alias("query_id"), F.col("b").alias("embedding")
+        )
+        # each arm runs once untimed, so the timing sees the kernel,
+        # not Python worker start-up or first-use compilation
+        for _ in range(2):
+            t0 = time.time()
+            base.select(F.sum(l2_squared("a", "b")).alias("s")).collect()
+            exact = time.time() - t0
+            t0 = time.time()
+            knn_join(base, queries, k=1, vec_col="a").agg(F.sum("distance")).collect()
+            gemm = time.time() - t0
+        out[f"dist_exact_d{d}_mrows_s"] = round(n / exact / 1e6, 3)
+        out[f"dist_gemm_d{d}_mpairs_s"] = round(n * nq / gemm / 1e6, 1)
 
     x = np.random.default_rng(7).normal(size=(20_000, 64)).astype(np.float32)
     cb = train_codebook(x, 8, 16, 3, 42)

@@ -1,14 +1,13 @@
-"""SQL-UDF surface tests: vs_* functions agree with the Column-expression
-implementations to float64 precision, including edge cases."""
+"""SQL-function surface tests: vs_* functions match an independent
+pure-Python float64 reference byte for byte, including edge cases."""
 
 from __future__ import annotations
 
-import math
+import struct
 
 import pytest
-from pyspark.sql import functions as F
 
-from vectorsearch_spark.functions.distances import cosine, dot, l2, norm
+from tests.distance_ref import ref
 from vectorsearch_spark.functions.sql import register_sql_functions
 
 VECS = [
@@ -26,22 +25,17 @@ def vdf(spark):
     return df
 
 
-def test_sql_matches_column_exprs(spark, vdf):
+def test_sql_matches_python_reference(spark, vdf):
     via_sql = spark.sql(
-        "SELECT vs_l2(a,b) AS l2, vs_dot(a,b) AS dot, vs_norm(a) AS n, "
-        "vs_cosine(a,b) AS cos, vs_cosine_distance(a,b) AS cosd "
-        "FROM vs_test_vectors"
+        "SELECT a, b, vs_l2(a,b) AS l2, vs_l2_squared(a,b) AS l2_squared, "
+        "vs_dot(a,b) AS dot, vs_norm(a) AS norm, vs_cosine(a,b) AS cosine, "
+        "vs_cosine_distance(a,b) AS cosine_distance FROM vs_test_vectors"
     ).collect()
-    via_col = vdf.select(
-        l2("a", "b").alias("l2"),
-        dot("a", "b").alias("dot"),
-        norm("a").alias("n"),
-        cosine("a", "b").alias("cos"),
-        (F.lit(1.0) - cosine("a", "b")).alias("cosd"),
-    ).collect()
-    for s, c in zip(via_sql, via_col):
-        for field in ("l2", "dot", "n", "cos", "cosd"):
-            assert math.isclose(s[field], c[field], rel_tol=1e-12), field
+    assert len(via_sql) == len(VECS)
+    for row in via_sql:
+        for op in ("l2", "l2_squared", "dot", "norm", "cosine", "cosine_distance"):
+            want = ref(op, row["a"], row["b"])
+            assert struct.pack("<d", row[op]) == struct.pack("<d", want), op
 
 
 def test_zero_norm_cosine_is_zero(spark, vdf):
@@ -102,8 +96,10 @@ def test_reregistration_replaces_foreign_definition(spark, vdf):
     functionExists."""
     from vectorsearch_spark.functions import sql as sqlmod
 
+    # Spark will not replace a Python UDF with a SQL function in place
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS vs_norm")
     spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION vs_norm(a ARRAY<FLOAT>) "
+        "CREATE TEMPORARY FUNCTION vs_norm(a ARRAY<FLOAT>) "
         "RETURNS DOUBLE RETURN -1D"
     )
     sqlmod._REGISTERED_SESSIONS.discard(spark)  # a fresh library sees a stale fn

@@ -4,7 +4,8 @@ Re-expresses the capabilities of the reference segmented ANN index
 (panghy/vectorsearch: DiskANN-style graphs + Product Quantization over
 FoundationDB) as idiomatic Spark DataFrame jobs:
 
-- ``functions``  : distance / scoring column expressions (whole-stage codegen)
+- ``functions``  : distance / scoring columns (one NumPy exact-distance kernel
+                   behind scalar Arrow UDFs and the ``vs_*`` SQL functions)
 - ``operators``  : KNN joins, PQ train/encode/scan, graph build, top-k,
                    dedup / text-analysis / similarity pipeline operators
 - ``index``      : segmented index lifecycle — ingest (gid/segment
@@ -13,8 +14,9 @@ FoundationDB) as idiomatic Spark DataFrame jobs:
 - ``streaming``  : Structured Streaming ingest into the segmented layout
 
 Design stance (100 TB first): tables not KV, batch jobs not task queues,
-built-in expressions not row UDFs, and per-segment bounded work so every
-job parallelizes across segments/partitions with O(segments) driver state.
+built-in expressions or Arrow-batched kernels, not row UDFs, and
+per-segment bounded work so every job parallelizes across
+segments/partitions with O(segments) driver state.
 """
 
 from vectorsearch_spark.config import IndexConfig, Metric

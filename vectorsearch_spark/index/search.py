@@ -255,7 +255,7 @@ def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schem
 def _brute_scan(index, q, segs, metric, emb: Column, allowed, limit: int) -> DataFrame:
     """Step 2: exact per-segment top-``limit`` over the live rows of
     ``segs`` with the GEMM kernel (``operators.knn.partial_topk``),
-    which re-scores its survivors with the direct formula."""
+    which re-scores its survivors with the exact kernel."""
     vec = index.vectors().filter(F.col("seg_id").isin(segs) & ~F.col("deleted"))
     if allowed is not None:
         vec = vec.join(allowed, "gid", "left_semi")

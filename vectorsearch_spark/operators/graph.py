@@ -23,13 +23,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from vectorsearch_spark.functions.distances import sq_l2_matrix
+
 
 def _pairwise_sq(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    d2 = (
-        np.einsum("ij,ij->i", x, x)[:, None]
-        - 2.0 * (x @ y.T)
-        + np.einsum("ij,ij->i", y, y)[None, :]
-    )
+    d2 = sq_l2_matrix(x, y)
     np.maximum(d2, 0.0, out=d2)
     return d2
 

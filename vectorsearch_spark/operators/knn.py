@@ -15,8 +15,8 @@ Scale story (the part that must survive 100 TB):
   SIMD kernels, Distances.java:15) and emits **at most Q×k rows per
   input partition** (partial top-k = map-side combine). The final exact
   merge therefore shuffles O(partitions × Q × k) rows, never O(N×Q).
-- ``knn_join_expr`` is the pure-Catalyst variant (zip_with/aggregate
-  exprs + window). It shuffles all Q×N scored pairs, so it is kept for
+- ``knn_join_expr`` is the cross-join variant (the ``distance_for_metric``
+  column + window). It shuffles all Q×N scored pairs, so it is kept for
   small inputs and as a cross-check oracle of the GEMM path.
 
 Determinism: ties broken by (distance asc, id asc) everywhere.
@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearch_spark.config import Metric
-from vectorsearch_spark.functions.distances import distance_for_metric, score_from_distance
+from vectorsearch_spark.functions.distances import (
+    distance_for_metric,
+    pair_distance,
+    score_from_distance,
+    sq_l2_matrix,
+)
 from vectorsearch_spark.functions.litarrays import lit_double_array
 
 _PAIR_SCHEMA = "query_id long, id long, distance double"
@@ -47,10 +52,7 @@ def _query_matrix(queries: list[tuple[int, list[float]]]) -> tuple[np.ndarray, n
 def _batch_distances(vmat: np.ndarray, qmat: np.ndarray, metric: Metric) -> np.ndarray:
     """(n_vectors, n_queries) distance matrix in double precision."""
     if metric == Metric.L2:
-        # ||v-q||² = ||v||² - 2 v·q + ||q||², then sqrt (clamped at 0)
-        v2 = np.einsum("ij,ij->i", vmat, vmat)[:, None]
-        q2 = np.einsum("ij,ij->i", qmat, qmat)[None, :]
-        d2 = v2 - 2.0 * (vmat @ qmat.T) + q2
+        d2 = sq_l2_matrix(vmat, qmat)
         np.maximum(d2, 0.0, out=d2)
         return np.sqrt(d2)
     # cosine distance = 1 - sim, zero-norm rows get sim 0 (Distances.java:149-153)
@@ -71,44 +73,24 @@ def partial_topk(
     rows, ≤ k per query, ordered by (distance, id). ``vmat`` (n, d) and
     ``qmat`` (Q, d) are float64."""
     dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
-    n = len(ids)
+    n, nq = len(ids), len(qids)
     kk = min(k, n)
-    # per-query partial top-k: argpartition, then re-score the ≤k
-    # survivors with the direct formula in the oracle's operation
-    # order — the GEMM expansion carries ~1e-8 cancellation error
-    # (L2: exact matches would come out nonzero) and the batched
-    # cosine divides by the two norms SEQUENTIALLY, which differs
-    # from dot/(‖v‖·‖q‖) in the last ulp and can flip round(·,4)
-    # on a boundary value. Direct re-score is exact and cheap on
-    # k rows.
-    out_q, out_i, out_d = [], [], []
-    for j in range(len(qids)):
-        dj = dist[:, j]
-        head = np.argpartition(dj, kk - 1)[:kk] if kk < n else np.arange(n)
-        if metric == Metric.L2:
-            diff = vmat[head] - qmat[j]
-            dhead = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-        else:
-            vh = vmat[head]
-            vn = np.linalg.norm(vh, axis=1)
-            qn = np.linalg.norm(qmat[j])
-            denom = vn * qn
-            sim = np.where(denom == 0.0, 0.0, (vh @ qmat[j]) / np.where(denom == 0.0, 1.0, denom))
-            # clamp: sim can exceed 1 by 1ulp on self-pairs; the
-            # raw −2e-16 distance would round to −0.0 in
-            # sign-preserving engines and break byte-level
-            # comparisons (distance is mathematically ≥ 0).
-            dhead = np.maximum(1.0 - sim, 0.0)
-        order = np.lexsort((ids[head], dhead))
-        out_q.append(np.full(kk, qids[j]))
-        out_i.append(ids[head[order]])
-        out_d.append(dhead[order])
+    # per-query partial top-k by the GEMM distances, then every
+    # survivor re-scored by the exact kernel: the GEMM expansion carries
+    # ~1e-8 cancellation error (exact L2 matches come out nonzero) and
+    # its cosine can differ in the last ulp, enough to flip round(·,4).
+    heads = np.concatenate(
+        [
+            np.argpartition(dist[:, j], kk - 1)[:kk] if kk < n else np.arange(n)
+            for j in range(nq)
+        ]
+    )
+    qpos = np.repeat(np.arange(nq), kk)
+    dhead = pair_distance(vmat[heads], qmat[qpos], metric)
+    hit_ids = ids[heads]
+    order = np.lexsort((hit_ids, dhead, qpos))
     return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "id": np.concatenate(out_i),
-            "distance": np.concatenate(out_d),
-        }
+        {"query_id": qids[qpos[order]], "id": hit_ids[order], "distance": dhead[order]}
     )
 
 
@@ -189,8 +171,8 @@ def knn_join_expr(
     query_id_col: str = "query_id",
     query_vec_col: str = "embedding",
 ) -> DataFrame:
-    """Pure-Catalyst exact KNN join (broadcast queries × vectors, HOF
-    distance expr, window top-k). Cross-check path for ``knn_join``;
+    """Cross-join exact KNN join (broadcast queries × vectors, the
+    ``distance_for_metric`` column, window top-k). Cross-check path for ``knn_join``;
     shuffles all scored pairs, so use only at modest N×Q.
     """
     metric = Metric(metric)

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from vectorsearch_spark.functions.distances import sq_l2_matrix
+
 
 def kmeans_subspace(
     x: np.ndarray, k: int, iters: int, rng: np.random.Generator
@@ -40,11 +42,7 @@ def kmeans_subspace(
         centroids = np.vstack([centroids, x[pad]])
     for _ in range(iters):
         # assign: argmin ||x - c||² via expansion (k is small: ≤256)
-        d2 = (
-            np.einsum("ij,ij->i", x, x)[:, None]
-            - 2.0 * (x @ centroids.T)
-            + np.einsum("ij,ij->i", centroids, centroids)[None, :]
-        )
+        d2 = sq_l2_matrix(x, centroids)
         assign = np.argmin(d2, axis=1)
         for c in range(k):
             members = x[assign == c]
@@ -86,11 +84,7 @@ def encode(vectors: np.ndarray, codebook: np.ndarray) -> np.ndarray:
     for s in range(m):
         xs = x[:, s * sub : (s + 1) * sub]
         c = codebook[s]  # (k, sub)
-        d2 = (
-            np.einsum("ij,ij->i", xs, xs)[:, None]
-            - 2.0 * (xs @ c.T)
-            + np.einsum("ij,ij->i", c, c)[None, :]
-        )
+        d2 = sq_l2_matrix(xs, c)
         codes[:, s] = np.argmin(d2, axis=1).astype(np.uint8)
     return codes
 

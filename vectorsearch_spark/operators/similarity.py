@@ -20,8 +20,8 @@ Two bucketing families:
 Scale design shared by both: the vector table is scanned once, narrow
 (id + embedding + bucket); queries are a small broadcast side; the
 bucket join is the only shuffle and it is keyed by bucket (bounded fan
--out), never a cross join. Candidate scoring stays JVM-side via the
-codegen distance expressions; final per-query top-k is a window over
+-out), never a cross join. Candidates are scored with the exact-distance
+columns (``functions/distances.py``); final per-query top-k is a window over
 candidates already pruned by bucketing.
 """
 
@@ -44,7 +44,11 @@ from vectorsearch_spark.config import Metric
 from vectorsearch_spark.functions.litarrays import lit_double_array, lit_int_array
 from vectorsearch_spark.functions.distances import (
     distance_for_metric,
+    l2,
+    l2_squared,
+    normalize,
     score_from_distance,
+    sq_l2_matrix,
 )
 from vectorsearch_spark.operators.guards import collect_bounded
 
@@ -61,12 +65,7 @@ def kmeans_fit(
     k = min(k, n)
     centroids = points[rng.choice(n, size=k, replace=False)].astype(np.float64)
     for _ in range(iters):
-        # (n, k) squared distances via GEMM expansion
-        d2 = (
-            np.einsum("ij,ij->i", points, points)[:, None]
-            - 2.0 * points @ centroids.T
-            + np.einsum("ij,ij->i", centroids, centroids)[None, :]
-        )
+        d2 = sq_l2_matrix(points, centroids)  # (n, k)
         assign = np.argmin(d2, axis=1)
         new = np.empty_like(centroids)
         for c in range(k):
@@ -190,16 +189,7 @@ def ivf_assign(
         )
     cents = _centroids_df(vectors.sparkSession, centroids)
     scored = pruned.crossJoin(F.broadcast(cents)).withColumn(
-        "_d2",
-        F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.col("centroid"),
-                lambda x, y: (x.cast("double") - y.cast("double")) ** 2,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+        "_d2", l2_squared(F.col(vec_col), F.col("centroid"))
     )
     w = Window.partitionBy(id_col).orderBy(F.col("_d2").asc(), F.col("bucket").asc())
     return (
@@ -260,16 +250,7 @@ def ivf_route(
         )
     cdf = _centroids_df(queries.sparkSession, cents)
     scored = pruned.crossJoin(F.broadcast(cdf)).withColumn(
-        "_d2",
-        F.aggregate(
-            F.zip_with(
-                F.col("_qvec"),
-                F.col("centroid"),
-                lambda x, y: (x.cast("double") - y.cast("double")) ** 2,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+        "_d2", l2_squared(F.col("_qvec"), F.col("centroid"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("_d2").asc(), F.col("bucket").asc()
@@ -293,11 +274,7 @@ def _route_queries(
     """(query_id, bucket) pairs for the nprobe nearest buckets — tiny,
     computed on the driver (Q × K distance matrix)."""
     qmat = np.array([q[1] for q in queries], dtype=np.float64)
-    d2 = (
-        np.einsum("ij,ij->i", qmat, qmat)[:, None]
-        - 2.0 * qmat @ centroids.T
-        + np.einsum("ij,ij->i", centroids, centroids)[None, :]
-    )
+    d2 = sq_l2_matrix(qmat, centroids)
     nprobe = min(nprobe, centroids.shape[0])
     out = []
     for j, (qid, _) in enumerate(queries):
@@ -333,11 +310,11 @@ def ann_ivf_join(
     the query side scales to arbitrary size) and scores candidates
     with the block-partitioned GEMM grid (``_blocked_candidates``:
     banded per-block top-k — a provable superset of the global top-k —
-    then the final window ranks codegen-re-scored survivors, ~blocks·k
+    then the final window ranks exactly re-scored survivors, ~blocks·k
     rows per query instead of every probed candidate),
     ``"auto"`` picks by one bounded count
     against ``max_driver_queries``. Both modes score candidates with
-    the same codegen distance; results are identical up to
+    the same exact distance; results are identical up to
     floating-point ties in coarse routing (the driver router sums the
     Q×K distances with NumPy GEMM, the distributed router with a
     codegen sequential fold — a near-tie between the nprobe-th and
@@ -1024,7 +1001,7 @@ def ivf_range_join(
     count / block_size shuffle rows), so the query side scales to the
     corpus itself (ε-dedup, the op's headline use). ``"auto"`` picks by
     one bounded count. Both modes make the FINAL keep decision with the
-    same exact codegen distance (the block pass only pre-filters with
+    same exact distance (the block pass only pre-filters with
     an fp band), and the cell-prune threshold carries fp slack
     (``_range_prune_threshold``), so both return the brute result set
     exactly — bit-identical distances included.
@@ -1047,8 +1024,6 @@ def ivf_range_join(
     aggregate for the cell radii. Returns (query_id, id, distance,
     score).
     """
-    from vectorsearch_spark.functions.distances import normalize
-
     metric = Metric(metric)
     r = float(radius)
     if not r >= 0.0:
@@ -1103,19 +1078,10 @@ def ivf_range_join(
     )
 
     # per-cell member radius IN THE ROUTING GEOMETRY: one bounded
-    # (≤ k rows) aggregate; the distance to the OWN centroid is a
-    # codegen expression over the bucket-indexed literal centroid array
+    # (≤ k rows) aggregate of the distance to the OWN centroid, read
+    # from the bucket-indexed literal centroid array
     cent_arr = F.array(*[lit_double_array(c) for c in cents])
-    own = F.element_at(cent_arr, F.col("bucket") + 1)
-    d_own = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col(geom_col), own, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    d_own = l2(F.col(geom_col), F.element_at(cent_arr, F.col("bucket") + 1))
     cell_stats = assigned.groupBy("bucket").agg(
         F.max(d_own).alias("rmax"), F.count("*").alias("n")
     ).collect()
@@ -1141,12 +1107,7 @@ def ivf_range_join(
             norms = np.linalg.norm(qmat, axis=1)
             qgeo = qmat / np.where(norms == 0.0, 1.0, norms)[:, None]
         # d(q̂, c) for all (query, cell): Q×k GEMM on the driver
-        d2 = (
-            np.einsum("ij,ij->i", qgeo, qgeo)[:, None]
-            - 2.0 * qgeo @ cents.T
-            + np.einsum("ij,ij->i", cents, cents)[None, :]
-        )
-        dqc = np.sqrt(np.maximum(d2, 0.0))
+        dqc = np.sqrt(np.maximum(sq_l2_matrix(qgeo, cents), 0.0))
         pairs = [
             (qids[qi], int(b), [float(x) for x in qmat[qi]])
             for qi in range(len(qids))
@@ -1213,20 +1174,7 @@ def ivf_range_join(
             scored = (
                 pruned.withColumn("_qgeo", qgeo_expr)
                 .crossJoin(F.broadcast(cdf))
-                .withColumn(
-                    "_d",
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("_qgeo"),
-                                F.col("centroid"),
-                                lambda x, y: (x.cast("double") - y.cast("double")) ** 2,
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        )
-                    ),
-                )
+                .withColumn("_d", l2(F.col("_qgeo"), F.col("centroid")))
             )
             # the fallback route is a crossJoin + filter (a real
             # shuffle); the blocked scorer consumes it twice (qcount +
@@ -1296,11 +1244,11 @@ def _blocked_candidates(
     the routed-query side into ⌈n_q/B⌉ salts; every (vsalt, qsalt)
     block meets in ONE cogrouped Arrow task of ≤ 2B rows, which scores
     its ≤ B×B pairs with the NumPy GEMM kernel (the ``knn_join`` batch
-    path — ~100× the per-row HOF rate) and emits the pairs
+    path — far above the per-row exact-kernel rate) and emits the pairs
     ``select_pairs(d_matrix, noise) -> (vi, qi)`` chooses (within-radius+band,
     or per-query banded top-k). With ``carry_vectors=True`` survivors
     carry BOTH vectors so the caller can re-score them with the SAME
-    codegen distance expression the driver mode uses — block selection
+    exact distance column the driver mode uses — block selection
     noise cannot change final results as long as select_pairs keeps a
     band-superset. With ``carry_vectors=False`` survivors are bare
     (query_id, id) pairs — the caller re-joins the vectors by id before
@@ -1446,7 +1394,7 @@ def _blocked_range_score(
     carry_vectors: bool = True,
 ) -> DataFrame:
     """Radius instance of ``_blocked_candidates``: keep pairs within
-    r plus an fp band, re-score survivors with the exact codegen
+    r plus an fp band, re-score survivors with the exact
     distance and filter ≤ r — driver ≡ distributed bit-identity.
     The band is magnitude-aware (``_gemm_noise`` from the block's
     actual row norms), not a fixed constant — large-norm inputs carry
