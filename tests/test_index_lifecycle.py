@@ -1624,3 +1624,40 @@ def test_query_blocks_leave_results_unchanged(spark, built_index):
             got.setdefault(r["query_id"], []).append(r["gid"])
         assert len(got) == n_q, params
         assert all(got[qid] == exp[qid % N] for qid in got), params
+
+
+def test_normalize_on_read_cosine_rows_and_distance_bytes(spark, cosine_index):
+    """normalize_on_read re-scores every candidate on its stored
+    embedding normalized by the exact kernel and rounded to float
+    (fdb/FdbVectorIndex.java:823-826): each returned distance is,
+    byte for byte, the left-fold reference cosine distance between
+    float32(normalize(embedding)) and the query. BRUTE returns the
+    exact top-8 under that distance, and on this fixture so do PQ and
+    GRAPH with ef below the segment rows."""
+    import struct
+
+    from tests.distance_ref import ref
+
+    idx, data, _ = cosine_index
+    qids = [5, 66, 123]
+    qdf = _queries_df(spark, data, qids)
+    unit = [
+        np.asarray(ref("normalize", [float(x) for x in row]), dtype=np.float32)
+        for row in data
+    ]
+
+    def dist(g, q):
+        return ref("cosine_distance", [float(x) for x in unit[g]], [float(x) for x in data[q]])
+
+    def exact_top8(q):
+        return sorted(range(N), key=lambda g: (dist(g, q), g))[:8]
+
+    expected = [(q, rank + 1, g) for q in qids for rank, g in enumerate(exact_top8(q))]
+    for mode, ef in (("BRUTE", None), ("PQ", EF_BELOW), ("GRAPH", EF_BELOW)):
+        params = SearchParams(mode=mode, ef=ef, normalize_on_read=True)
+        rows = idx.search(qdf, k=8, params=params).collect()
+        got = sorted((r["query_id"], r["rank"], r["gid"]) for r in rows)
+        assert got == expected, mode
+        for r in rows:
+            want = dist(r["gid"], r["query_id"])
+            assert struct.pack("<d", r["distance"]) == struct.pack("<d", want), (mode, r)
