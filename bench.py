@@ -10,7 +10,10 @@ tail buffer is small; the full per-query dict truncated r4's line).
 Each query runs $SPARK_GRAFT_BENCH_REPS times (default 3); the detail
 file reports per-query MEDIANS (machine-noise robust — single-shot
 timings let environment contention masquerade as plan regressions) and
-per-query minima. "value" is the sum of medians.
+per-query minima. "value" is the sum of medians. A subset run
+(SPARK_GRAFT_BENCH_ONLY=name,name) writes neither BENCH_DETAIL.json nor
+BENCH_HISTORY.jsonl; it prints one "name median min" line per entry
+before the JSON line.
 
 Host-variance caveat: this VM's effective CPU fluctuates — the same
 commit has measured 40s/50s/62s/82s totals across hours, with
@@ -388,6 +391,11 @@ def main() -> None:
     if not only:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
+    else:
+        # a subset writes no file: its per-entry figures go to stdout,
+        # one "name median min" line each, before the summary line
+        for name in sorted(timings):
+            print(f"{name} {timings[name]} {minima[name]}")
     print(
         json.dumps(
             {

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.jobs import jobs_launched
 from vectorsearch_spark.config import (
     ACTIVE,
     COMPACTING,
@@ -274,6 +275,26 @@ class TestMutationFlow:
         seg3_gids = {r["gid"] for r in idx.vectors(states=(WRITING,)).filter(F.col("seg_id") == 3).collect()}
         assert all(r["gid"] not in seg3_gids for r in res)
         idx.update_segment_states({3: {"state": SEALED}})
+
+
+def test_search_of_a_segment_built_without_live_rows(spark, tmp_path_factory):
+    """A segment whose rows were all deleted before its build seals
+    without writing the artifacts table; a PQ search and the exhaustive
+    search_join then return no rows instead of failing on the missing
+    table."""
+    idx = VectorIndex.create(
+        spark, str(tmp_path_factory.mktemp("vsempty")),
+        IndexConfig(name="e", dimension=4, max_segment_size=10, pq_m=2, pq_k=4),
+    )
+    idx.add(
+        spark.createDataFrame([(i, [float(i)] * 4) for i in range(10)], "row_id long, embedding array<float>"),
+        order_col="row_id",
+    )
+    idx.delete(list(range(10)))
+    assert idx.build() == [0]
+    q = spark.createDataFrame([(0, [1.0] * 4)], "query_id long, embedding array<float>")
+    assert idx.search(q, 3).collect() == []
+    assert idx.search_join(q, 3).collect() == []
 
 
 def test_vacuum_fully_deleted_segment_reclaims_disk(spark, tmp_path_factory):
@@ -664,19 +685,6 @@ def test_cosine_graph_mode_recall(spark, cosine_index):
     assert hits / total >= 0.9
 
 
-def _jobs_launched(spark, group, fn):
-    """Run ``fn`` under a fresh Spark job group; return (result, number
-    of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land asynchronously
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_graph_search_jobs_independent_of_max_iters(spark, built_index):
     """GRAPH traversal runs inside the cogroup task: the number of
     Spark jobs does not grow with the hop bound."""
@@ -686,8 +694,8 @@ def test_graph_search_jobs_independent_of_max_iters(spark, built_index):
     counts = {}
     for hops in (1, 6):
         params = SearchParams(mode="GRAPH", ef=20, max_iters=hops)
-        rows, counts[hops] = _jobs_launched(
-            spark, f"graph_hops_{hops}", lambda: idx.search(qdf, k=10, params=params).collect()
+        rows, counts[hops] = jobs_launched(
+            spark, lambda: idx.search(qdf, k=10, params=params).collect()
         )
         assert len(rows) == 2 * 10
     assert counts[1] == counts[6] > 0, counts
@@ -747,7 +755,7 @@ def test_search_join_matches_brute(spark, built_index):
     idx, data, _ = built_index
     qids = list(range(0, N, 3))
     qdf = _queries_df(spark, data, qids)
-    got, jobs = _jobs_launched(spark, "search_join_build", lambda: idx.search_join(qdf, k=5))
+    got, jobs = jobs_launched(spark, lambda: idx.search_join(qdf, k=5))
     assert jobs == 0
     exact = idx.search(qdf, k=5, params=SearchParams(mode="BRUTE"))
 
@@ -1661,3 +1669,95 @@ def test_normalize_on_read_cosine_rows_and_distance_bytes(spark, cosine_index):
         for r in rows:
             want = dist(r["gid"], r["query_id"])
             assert struct.pack("<d", r["distance"]) == struct.pack("<d", want), (mode, r)
+
+
+def test_search_after_every_write_equals_a_fresh_handle(spark, tmp_path_factory):
+    """One handle keeps its cached sealed side across searches. After
+    each write (add, delete, build, vacuum, compact, and recover() of a
+    vacuum that crashed mid-swap while ingest went on), its PQ search,
+    GRAPH search with ef below the segment rows and search_join return
+    exactly what a freshly opened handle returns, and never a
+    tombstoned gid or a gid twice."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from vectorsearch_spark import staging
+
+    path = str(tmp_path_factory.mktemp("vscache"))
+    cfg = IndexConfig(
+        name="c", dimension=DIM, max_segment_size=CAP, pq_m=4, pq_k=16,
+        graph_degree=8, graph_build_breadth=16, graph_alpha=1.2, seed=42,
+    )
+    idx = VectorIndex.create(spark, path, cfg)
+    df, data = _gaussian_df(spark, 200, DIM, seed=5)
+    qdf = _queries_df(spark, data, [3, 60, 110, 160])
+    dead: set[int] = set()
+    runs = (
+        ("search", SearchParams(mode="PQ")),
+        ("search", SearchParams(mode="GRAPH", ef=EF_BELOW)),
+        ("search_join", SearchParams()),
+    )
+
+    def rows(*handles):
+        # every run on every handle in one Spark action
+        got = reduce(
+            DataFrame.unionByName,
+            [
+                getattr(h, run)(qdf, k=5, params=params).withColumn("run", F.lit(i))
+                .withColumn("handle", F.lit(j))
+                for i, (run, params) in enumerate(runs)
+                for j, h in enumerate(handles)
+            ],
+        ).collect()
+        return [
+            sorted((r["run"], r["query_id"], r["rank"], r["gid"], r["distance"])
+                   for r in got if r["handle"] == j)
+            for j in range(len(handles))
+        ]
+
+    def check(step):
+        got, want = rows(idx, VectorIndex.open(spark, path))
+        assert got == want, step
+        hits = [(run, q, g) for run, q, _, g, _ in got]
+        assert len(set(hits)) == len(hits), step
+        assert not dead & {g for _, _, g in hits}, step
+        assert {run for run, _, _ in hits} == {0, 1, 2}, step
+
+    def add(lo, hi):
+        idx.add(df.filter((F.col("row_id") >= lo) & (F.col("row_id") < hi)), order_col="row_id")
+
+    add(0, 120)
+    assert idx.build() == [0, 1]
+    rows(idx)  # caches the sealed side
+    add(120, 170)
+    check("add")
+    doomed = list(range(10, 40)) + [101, 105, 110]
+    assert idx.delete(doomed) == len(doomed)
+    dead |= set(doomed)
+    check("delete")
+    assert idx.build() == [2]
+    check("build")
+    assert idx.vacuum(0, force=True)
+    check("vacuum")
+    dest = idx.compact([0, 1])
+    check("compact")
+
+    class Boom(RuntimeError):
+        pass
+
+    def hook(stage, detail):
+        if stage == "backed_up":
+            raise Boom(f"injected at {stage}:{detail}")
+
+    staging._FAULT = hook
+    try:
+        with pytest.raises(Boom):
+            idx.vacuum(2, force=True)
+    finally:
+        staging._FAULT = None
+    add(170, 200)
+    rows(idx)  # caches the sealed side of the crashed tables
+    assert "restored:seg_id=2" in idx.recover()["swaps"]
+    assert sorted(idx.registered_seg_ids((SEALED,))) == [2, dest]
+    check("recover")

@@ -10,6 +10,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from tests.jobs import jobs_launched
 from vectorsearch_spark.functions.text import TOKEN_RE, tokens, word_shingles
 from vectorsearch_spark.operators.dedup import (
     exact_duplicates,
@@ -266,15 +267,9 @@ def test_embedding_near_dup_plan_only_with_dim(spark):
         + [(100, [3.0, 1.0, 0.0, 0.5]), (101, [3.0, 1.0, 0.0, 0.5])],
         "vec_id long, embedding array<float>",
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = embedding_near_dup(df, dim=4)  # plan only — no action yet
-    after = set(tracker.getJobIdsForGroup(None))
-    # NO NEW jobs may appear; set difference (not equality) because the
-    # status store retains a bounded window and can EVICT old ids
-    # between the snapshots in a long-running session (flaked once in a
-    # full-suite run as `before` ⊋ `after`)
-    assert after - before == set(), "planning ran Spark jobs"
+    # plan only — no action yet
+    out, jobs = jobs_launched(spark, lambda: embedding_near_dup(df, dim=4))
+    assert jobs == 0, "planning ran Spark jobs"
     # passed-dim results ≡ probed-dim results
     got = {(r["id_a"], r["id_b"]) for r in out.collect()}
     probed = {
@@ -485,15 +480,10 @@ def test_bitstring_near_dup_builds_without_spark_jobs(spark):
         [(1, "0" * 40), (2, "1" * 3 + "0" * 37), (3, "1" * 40)],
         "media_id long, dhash string",
     )
-    sc = spark.sparkContext
-    group = "bitstring_near_dup_build"
-    sc.setJobGroup(group, group)
-    try:
-        out = bitstring_near_dup(df, n_bits=40, max_hamming=3)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land asynchronously
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    out, jobs = jobs_launched(
+        spark, lambda: bitstring_near_dup(df, n_bits=40, max_hamming=3)
+    )
+    assert jobs == 0
     assert {r["media_id"]: r["keep"] for r in out.collect()} == {1: 1, 2: 0, 3: 1}
 
 

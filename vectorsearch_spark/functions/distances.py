@@ -12,8 +12,8 @@ left fold from 0.0 (the loop order of Distances.java), so a value does
 not depend on the batch it is computed in. The Column functions are
 scalar Arrow UDFs over it, built on first use (building one needs an
 active SparkContext); ``functions/sql.py`` registers the same UDFs as
-``vs_*``, and ``operators/knn.py`` ``partial_topk`` calls ``kernel``
-directly. A null array, a null element or a length mismatch gives null.
+``vs_*``, and ``operators/knn.py`` ``exact_topk`` (the KNN and index
+search re-rank) calls ``kernel`` directly. A null array, a null element or a length mismatch gives null.
 (Spark's ``zip_with``/``aggregate``, which these replace, are
 ``CodegenFallback`` in Spark 4.1.2: they ran interpreted.)
 

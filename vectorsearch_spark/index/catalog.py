@@ -37,12 +37,15 @@ one segment per build worker).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import tempfile
 import time
+import weakref
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,6 +59,7 @@ from vectorsearch_spark.config import (
     WRITING,
     IndexConfig,
 )
+from vectorsearch_spark.staging import hadoop_exists
 
 # On-disk layout version, stamped into meta.json at create and checked
 # at open. v2: unified artifacts table (codebooks/codes/adjacency as a
@@ -147,6 +151,17 @@ class SearchParams:
             )
 
 
+_SIDE_IDS = itertools.count()
+
+
+def segment_buckets(df: DataFrame, n_segs: int) -> tuple[DataFrame, int]:
+    """(df with ``__b = pmod(hash(seg_id), B)``, B): the bucket that
+    places a whole segment in one search task; one bucket per segment,
+    capped at 256."""
+    n_buckets = min(max(n_segs, 1), 256)
+    return df.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets))), n_buckets
+
+
 class VectorIndex:
     """Facade over the segmented tables; all methods are batch jobs."""
 
@@ -165,6 +180,8 @@ class VectorIndex:
         self._codebook_np_cache: dict[int, "object"] = {}
         # OPQ rotations ride the same cache lifecycle (None = plain PQ)
         self._rotation_np_cache: dict[int, "object"] = {}
+        # the persisted, segment-bucketed sealed side (see sealed_side)
+        self._sealed_side_cache: tuple | None = None
 
     # -- paths ---------------------------------------------------------
     @property
@@ -346,9 +363,11 @@ class VectorIndex:
         self._segments_cache = [dict(r) for r in rows]
         # the actual mutation choke point — EVERY registry write (incl.
         # streaming crash recovery's snapshot restore) invalidates the
-        # codebook cache here, not just update_segment_states
+        # codebook cache and the sealed side here, not just
+        # update_segment_states
         self._codebook_np_cache.clear()
         self._rotation_np_cache.clear()
+        self.drop_sealed_side()
 
     def _segment_rows(self) -> list[dict]:
         if self._segments_cache is None:
@@ -403,6 +422,9 @@ class VectorIndex:
     def _artifacts(self) -> DataFrame:
         from vectorsearch_spark.index.build import ARTIFACTS_SCHEMA
 
+        # a build of segments without live rows writes no artifacts
+        if not hadoop_exists(self.spark, self.artifacts_path):
+            return self.spark.createDataFrame([], ARTIFACTS_SCHEMA)
         return self.spark.read.schema(ARTIFACTS_SCHEMA).parquet(self.artifacts_path)
 
     def codes(self, seg_ids: list[int]) -> DataFrame:
@@ -459,6 +481,58 @@ class VectorIndex:
             for s in seg_ids
             if s in self._codebook_np_cache
         }
+
+    def sealed_side(self) -> tuple[DataFrame, int]:
+        """(side, B): the searchable sealed segments as one persisted
+        frame that every search of this handle reuses — the analog of
+        the reference's per-segment caches (cache/SegmentCaches.java),
+        valid because a sealed segment does not change until the next
+        registry write. A tagged union of the ``vec`` rows (gid,
+        deleted, embedding; code and adj rows carry gid -1) and the
+        ``code`` and ``adj`` artifact rows of the SEALED/COMPACTING
+        segments, bucketed ``__b = pmod(hash(seg_id), B)`` and
+        repartitioned by ``__b`` once, so a search's cogroup reads it
+        without an exchange. It has at least
+        ``spark.sql.shuffle.partitions`` partitions: with fewer, the
+        planner would shuffle it again to meet the query side.
+
+        Built lazily (no Spark job until a search runs) and dropped by
+        ``drop_sealed_side`` at every registry write, by ``recover()``
+        and when the handle is garbage-collected. A second handle on
+        the same path keeps its own copy: the single-writer contract of
+        the registry cache."""
+        if self._sealed_side_cache is None:
+            segs = self.registered_seg_ids(SEARCHABLE_SEALED)
+            side = self.vectors(states=SEARCHABLE_SEALED).select(
+                "seg_id", F.lit("vec").alias("kind"), "vec_id", "gid", "deleted", "embedding"
+            )
+            art = (
+                self._artifacts()
+                .filter(F.col("kind").isin("code", "adj") & F.col("seg_id").isin(segs))
+                .select("seg_id", "kind", "vec_id", F.lit(-1).cast("long").alias("gid"),
+                        "codes", "neighbor_ids")
+            )
+            side, n_buckets = segment_buckets(
+                side.unionByName(art, allowMissingColumns=True), len(segs)
+            )
+            parts = max(n_buckets, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+            # Spark serves one cached copy to every equal plan, and two
+            # handles (or two generations of one handle) can build equal
+            # plans over different files: a unique literal keeps each
+            # side's cache its own
+            side = side.withColumn("__side", F.lit(next(_SIDE_IDS)))
+            side = side.repartition(parts, "__b").persist(StorageLevel.MEMORY_AND_DISK)
+            # a dropped handle releases its side too
+            drop = weakref.finalize(self, side.unpersist)
+            drop.atexit = False
+            self._sealed_side_cache = (side, n_buckets, drop)
+        return self._sealed_side_cache[:2]
+
+    def drop_sealed_side(self) -> None:
+        """Unpersist the cached sealed side; the next search rebuilds it."""
+        if self._sealed_side_cache is not None:
+            self._sealed_side_cache[2]()
+            self._sealed_side_cache = None
 
     def resolve_ids(self, gids: list[int]) -> DataFrame:
         """gid → (seg_id, vec_id); missing gids absent from the result

@@ -400,6 +400,9 @@ def recover(index: VectorIndex) -> dict:
     actions: dict = {"swaps": [], "writing_dropped": [], "compacting_reset": []}
     for path in (index.vectors_path, index.artifacts_path):
         actions["swaps"] += recover_partial_swaps(index.spark, path)
+    # the swap recovery rewrites the tables without a registry write:
+    # drop the cached sealed side here, not only at the choke point
+    index.drop_sealed_side()
     updates: dict[int, dict | None] = {}
     for r in index._segment_rows():
         if r["state"] == WRITING:

@@ -4,37 +4,44 @@
 ``search`` and ``search_join`` are one pipeline. Both keep the query
 side a DataFrame (never collected to the driver); they differ only in
 what ``mode="AUTO"`` means — PQ two-phase for ``search``, exhaustive
-for ``search_join``. The pipeline has four steps:
+for ``search_join``. The pipeline has three steps:
 
 1. registry dispatch → seg_ids by state (WRITING excluded,
-   fdb/FdbVectorIndex.java:631-655); ``mode="BRUTE"`` sends every
-   segment to step 2;
-2. one exact brute-force scan of the ACTIVE/PENDING segments (filter
-   deleted → score → per-segment top-k, fdb/FdbVectorIndex.java:660-725)
-   with the NumPy GEMM kernel of ``operators/knn.py``;
-3. one in-task candidate generator per mode for the SEALED/COMPACTING
-   segments, over the PQ codes (and the neighbor graph):
-   - PQ: asymmetric LUT distances over the whole segment (L2² LUT,
-     fdb/FdbVectorIndex.java:1057-1079), top-ef per (query, segment);
+   fdb/FdbVectorIndex.java:631-655);
+2. one task per (segment, query block) produces the segment's final
+   hits: it picks each query's candidates, re-ranks them with the exact
+   kernel on their raw embeddings (tombstones and disallowed rows
+   dropped, optional normalize-on-read, fdb/FdbVectorIndex.java:
+   970-1046 and 823-826) and caps them at max(k, k·oversample) by
+   (distance, gid) (api/SearchParams.java:73-82). Only the picker
+   differs by mode:
+   - BRUTE (and every ACTIVE/PENDING segment): the GEMM heads of the
+     live rows (filter deleted → score → top-k,
+     fdb/FdbVectorIndex.java:660-725);
+   - PQ: asymmetric LUT distances over the segment's codes (L2² LUT,
+     fdb/FdbVectorIndex.java:1057-1079), top-ef;
    - GRAPH: best-first ef-search (fdb/FdbVectorIndex.java:911-968)
      from PQ or random-pivot seeds (794-812);
    - BEAM: the deprecated beam expansion (diskannExpand, 841-903);
    ef is auto-tuned by segment size (adaptation of 772-784), and when
-   ef ≥ segment rows every row is a candidate — the degenerate rule
-   that makes every exhaustive twin equal brute force;
-4. one exact re-rank of the candidates (join back to raw vectors,
-   true-metric rescore, tombstone filter, fdb/FdbVectorIndex.java:
-   970-1046; optional normalize-on-read, 823-826), per-segment cap
-   max(k, k·oversample) (api/SearchParams.java:73-82), then the global
-   merge → top-k by score with gid tie-break (432-437).
+   ef ≥ the segment's code rows every row is a candidate — the
+   degenerate rule that makes every exhaustive twin equal brute force;
+3. the global merge → top-k by score with gid tie-break (432-437),
+   then the payload attach.
 
-Steps 2 and 3 share one fragment-and-replicate cogroup: the segment's
-rows are bucketed by hash(seg_id), so a segment lives in exactly one
-task, and the query DataFrame is replicated to every bucket. Both emit
-bounded candidate sets per (query, segment), so no shuffle past the
-scan is ever O(N); the codes scan never reads the embeddings, which
-only the re-rank touches: it scans them once and cuts them to the
-candidate rows (a broadcast semi-join) before any shuffle.
+Step 2 is one fragment-and-replicate cogroup per segment side: rows are
+bucketed by hash(seg_id), so a segment lives in exactly one task, and
+the query DataFrame is replicated to every bucket. The ACTIVE/PENDING
+rows change with every add and are read and shuffled per search. The
+SEALED/COMPACTING rows (vectors, PQ codes and adjacency as one tagged
+union) come from ``VectorIndex.sealed_side``: persisted once,
+partitioned by bucket, and read by every later search of the handle
+without a shuffle. It is dropped at every registry write (the choke
+point that also clears the codebook cache) and by ``recover()``, whose
+swap recovery rewrites the tables without one; a second handle on the
+same path keeps its own copy, under the single-writer contract of the
+registry cache. Every task emits at most max(k, k·oversample) rows per
+(query, segment), so no shuffle past the scan is ever O(N).
 """
 
 from __future__ import annotations
@@ -45,7 +52,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearch_spark.config import (
@@ -53,21 +60,20 @@ from vectorsearch_spark.config import (
     SEARCHABLE_SEALED,
     Metric,
 )
-from vectorsearch_spark.functions.distances import (
-    distance_for_metric,
-    normalize,
-    score_from_distance,
+from vectorsearch_spark.functions.distances import kernel, score_from_distance
+from vectorsearch_spark.index.catalog import (
+    PQ_SEED_ONLY,
+    SearchParams,
+    VectorIndex,
+    segment_buckets,
 )
-from vectorsearch_spark.index.catalog import PQ_SEED_ONLY, SearchParams, VectorIndex
-from vectorsearch_spark.operators.knn import partial_topk
+from vectorsearch_spark.operators.knn import exact_topk, gemm_heads
 from vectorsearch_spark.operators.pq import approx_distances, build_lut
 
-_CAND_SCHEMA = "query_id long, seg_id int, vec_id int"
 _HIT_SCHEMA = "query_id long, gid long, distance double"
 _RESULT_SCHEMA = (
     "query_id long, gid long, distance double, score double, payload binary, rank int"
 )
-_PANDAS_TYPES = {"long": "int64", "int": "int32", "double": "float64"}
 # queries scored against one segment at a time inside a cogroup task:
 # bounds the dense (segment rows × queries) working set of the scans
 _Q_BLOCK = 1024
@@ -121,8 +127,8 @@ def search(
     ``filter_gids`` (optional, a DataFrame with a ``gid`` column) is
     metadata-filtered ANN — the production vector-store feature where a
     predicate restricts the searchable set. The allow-list PRE-filters
-    the brute scan and the PQ codes scan (semi-joins before any
-    scoring), so candidate pools are spent on allowed vectors only —
+    the brute pick and the PQ pool (before any scoring), so candidate
+    pools are spent on allowed vectors only —
     not post-filtered after top-k, which would underfill selective
     filters. BRUTE and the degenerate-exact configs are therefore EXACT
     over the filtered set. GRAPH/BEAM traversal stays unfiltered (the
@@ -169,71 +175,113 @@ def _search(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("embedding").alias("__qvec"),
     )
-    emb = F.col("embedding")
-    if params.normalize_on_read:
-        emb = normalize(emb).cast("array<float>")
     per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
 
     # 1. dispatch: the registry is driver-side, O(#segments)
     seg_rows = index._segment_rows()
     brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
     sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-    if mode == "BRUTE":
-        brute_segs, sealed_segs = brute_segs + sealed_segs, []
+
+    def scan(side, n_buckets, pick):
+        return _segment_scan(
+            side, q, n_buckets, pick, metric, per_seg_limit, params.normalize_on_read
+        )
 
     parts: list[DataFrame] = []
     if brute_segs:
-        parts.append(
-            _brute_scan(index, q, brute_segs, metric, emb, allowed, per_seg_limit)
+        # ACTIVE/PENDING segments change with every add: read fresh
+        fresh = index.vectors().filter(F.col("seg_id").isin(brute_segs) & ~F.col("deleted"))
+        if allowed is not None:
+            fresh = fresh.join(allowed, "gid", "left_semi")
+        fresh, n_buckets = segment_buckets(
+            fresh.select("seg_id", "vec_id", "gid", "deleted", "embedding"), len(brute_segs)
         )
+        parts.append(scan(fresh, n_buckets, _brute_pick(per_seg_limit, metric)))
     if sealed_segs:
-        counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
-        ef_base = params.ef or default_ef(k, cfg.oversample)
-        ef_by_seg = {
-            s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
-        }
-        if mode == "PQ":
-            cand = _pq_cogroup_candidates(
-                index, q, sealed_segs, ef_by_seg, metric, allowed
-            )
+        side, n_buckets = index.sealed_side()
+        if allowed is not None:
+            # may shuffle the side when the allow-list is too large to
+            # broadcast; an unfiltered search never does
+            side = side.join(allowed.withColumn("__ok", F.lit(True)), "gid", "left")
+        if mode == "BRUTE":
+            pick = _brute_pick(per_seg_limit, metric)
         else:
-            cand = _graph_cogroup_candidates(
-                index, q, sealed_segs, ef_by_seg, metric, params, mode, k
-            )
-        parts.append(
-            _exact_rerank(index, cand, q, metric, emb, allowed, per_seg_limit)
-        )
+            counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
+            ef_base = params.ef or default_ef(k, cfg.oversample)
+            ef_by_seg = {
+                s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
+            }
+            pick = _code_pick(index, sealed_segs, ef_by_seg, metric, params, mode, k)
+        parts.append(scan(side, n_buckets, pick))
     if not parts:
         return index.spark.createDataFrame([], _RESULT_SCHEMA)
     return _merge_and_attach(index, reduce(DataFrame.unionByName, parts), k, metric)
 
 
-def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schema: str):
-    """Fragment-and-replicate cogroup shared by the brute scan and the
-    candidate generators: ``side`` rows (seg_id, vec_id, ...) bucket by
-    hash(seg_id), so a whole segment meets the queries in one task; the
-    query DF replicates to every bucket via ``explode(sequence(0,
-    B-1))`` — a Q×B-row shuffle of the SMALL side. Nothing is collected
-    to the driver; the big side shuffles once on the bucket key.
+def _segment_scan(
+    side, q, n_buckets, pick, metric, limit: int, normalize_on_read: bool
+) -> DataFrame:
+    """Step 2, one function for every mode. A fragment-and-replicate
+    cogroup: ``side`` rows (seg_id, vec_id, ..., ``__b``) group by their
+    bucket, so a whole segment meets the queries in one task; the query
+    DF replicates to every bucket via ``explode(sequence(0, B-1))`` — a
+    Q×B-row shuffle of the SMALL side. Nothing is collected to the
+    driver. The cached sealed side is already partitioned by ``__b`` and
+    is read without an exchange; the fresh ACTIVE/PENDING side shuffles
+    once on it.
 
-    ``per_segment(seg_id, rows, qids, qmat)`` gets one segment's rows
-    sorted by vec_id (results must not depend on partition read order)
-    and one block of at most ``_Q_BLOCK`` queries as a (B, d) float64
-    matrix, and returns a pandas frame of ``schema`` or None; every
-    query's rows depend on that query alone, so blocking leaves the
-    output unchanged. Task memory is one bucket's rows (one bucket per
-    segment, capped at 256 buckets), the Q replicated query rows, and
-    one block's working set: the brute scan's (segment rows ×
-    ``_Q_BLOCK``) distance matrix, or ``_Q_BLOCK`` LUTs."""
-    n_buckets = min(max(n_segs, 1), 256)
-    side = side.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets)))
+    Per segment, rows sorted by vec_id (results must not depend on
+    partition read order), and per block of at most ``_Q_BLOCK`` queries
+    (a (B, d) float64 matrix), ``pick`` chooses each query's candidate
+    rows; the shared exact re-rank (``operators.knn.exact_topk``) drops
+    deleted and disallowed rows, re-scores the rest with the exact
+    kernel on their raw embeddings (normalized and rounded to float
+    under ``normalize_on_read``, fdb/FdbVectorIndex.java:823-826) and
+    caps them at ``limit`` by (distance, gid) — the per-segment re-rank
+    of fdb/FdbVectorIndex.java:970-1046, inside the generator's own
+    task. Every query's rows depend on that query alone, so blocking
+    leaves the output unchanged. Task memory is one bucket's rows (one
+    bucket per segment, capped at 256 buckets), the Q replicated query
+    rows, and one block's working set: the brute pick's (segment rows ×
+    ``_Q_BLOCK``) distance matrix, or ``_Q_BLOCK`` LUTs.
+
+    ``pick(seg_id, rows, vec, allowed, emb, qmat)`` sees the segment's
+    rows (with a ``kind`` column on the sealed side), its ``vec`` rows,
+    which of them the allow-list admits (a ``__ok`` column, present only
+    on a filtered sealed side) and ``emb(positions)``, the float64
+    embeddings of vec rows; it returns one array of vec-row positions
+    per query, or None."""
     q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
     empty = pd.DataFrame(
-        {
-            name: pd.Series(dtype=_PANDAS_TYPES[typ])
-            for name, typ in (f.split() for f in schema.split(","))
-        }
+        {"query_id": np.empty(0, np.int64), "gid": np.empty(0, np.int64), "distance": np.empty(0)}
     )
+
+    def per_segment(seg_id, rows, qids, qmat):
+        vec = rows[rows["kind"] == "vec"] if "kind" in rows else rows
+        allowed = vec["__ok"].notna().to_numpy() if "__ok" in vec else np.ones(len(vec), bool)
+        embeddings = vec["embedding"].to_numpy()
+
+        def emb(pos):
+            mat = np.stack(embeddings[pos]).astype(np.float64)
+            if normalize_on_read:
+                mat = kernel("normalize", mat).astype(np.float32).astype(np.float64)
+            return mat
+
+        picked = pick(seg_id, rows, vec, allowed, emb, qmat)
+        if picked is None:
+            return None
+        pos = np.concatenate(picked).astype(np.int64)
+        qpos = np.repeat(np.arange(len(qids)), [len(p) for p in picked])
+        live = (allowed & ~vec["deleted"].to_numpy(dtype=bool))[pos]
+        pos, qpos = pos[live], qpos[live]
+        if not len(pos):
+            return None
+        need = np.unique(pos)
+        gids = vec["gid"].to_numpy(dtype=np.int64)[need]
+        hits = exact_topk(
+            gids, emb(need), np.searchsorted(need, pos), qids, qmat, qpos, limit, metric
+        )
+        return hits.rename(columns={"id": "gid"})
 
     def fn(side_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(side_pdf) == 0 or len(q_pdf) == 0:
@@ -249,35 +297,41 @@ def _cogroup_scan(side: DataFrame, q: DataFrame, n_segs: int, per_segment, schem
         out = [o for o in out if o is not None]
         return pd.concat(out, ignore_index=True) if out else empty
 
-    return side.groupBy("__b").cogroup(q_rep.groupBy("__b")).applyInPandas(fn, schema)
+    return side.groupBy("__b").cogroup(q_rep.groupBy("__b")).applyInPandas(fn, _HIT_SCHEMA)
 
 
-def _brute_scan(index, q, segs, metric, emb: Column, allowed, limit: int) -> DataFrame:
-    """Step 2: exact per-segment top-``limit`` over the live rows of
-    ``segs`` with the GEMM kernel (``operators.knn.partial_topk``),
-    which re-scores its survivors with the exact kernel."""
-    vec = index.vectors().filter(F.col("seg_id").isin(segs) & ~F.col("deleted"))
-    if allowed is not None:
-        vec = vec.join(allowed, "gid", "left_semi")
-    vec = vec.select("seg_id", "vec_id", "gid", emb.alias("embedding"))
-
-    def per_segment(seg_id, rows, qids, qmat):
-        vmat = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-        gids = rows["gid"].to_numpy(dtype=np.int64)
-        hits = partial_topk(gids, vmat, qids, qmat, limit, metric)
-        return hits.rename(columns={"id": "gid"})
-
-    return _cogroup_scan(vec, q, len(segs), per_segment, _HIT_SCHEMA)
+def _positions(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Position of each of ``ids`` in ``sorted_ids``; -1 where absent."""
+    if not len(sorted_ids):
+        return np.full(len(ids), -1, dtype=np.int64)
+    at = np.minimum(np.searchsorted(sorted_ids, ids), len(sorted_ids) - 1)
+    return np.where(sorted_ids[at] == ids, at, -1)
 
 
-def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> DataFrame:
-    """Step 3 frame shared by the generators: per (segment, query) the
-    candidate rows ``pick`` chooses, or every row when ef ≥ segment
-    rows. ``side`` holds code rows (seg_id, vec_id, codes), plus, with
-    a ``kind`` column, the adjacency rows the GRAPH generator reads;
-    ``pick(seg_id, rows, vec_ids, mat, ef, luts)`` sees the segment's
-    vec_id-sorted code matrix and one LUT per query, and returns one
-    array of row positions per query.
+def _brute_pick(limit: int, metric: Metric):
+    """BRUTE: the per-query top-``limit`` of the live, allowed rows by
+    the GEMM distances (``operators.knn.gemm_heads``)."""
+
+    def pick(seg_id, rows, vec, allowed, emb, qmat):
+        live = np.flatnonzero(allowed & ~vec["deleted"].to_numpy(dtype=bool))
+        if not len(live):
+            return None
+        return list(live[gemm_heads(emb(live), qmat, limit, metric)])
+
+    return pick
+
+
+def _code_pick(index, sealed_segs, ef_by_seg, metric, params: SearchParams, mode, k):
+    """PQ, GRAPH and BEAM: per query, the code rows the mode's generator
+    picks, or every code row when ef ≥ code rows (the degenerate rule
+    that makes every exhaustive twin equal brute force), as positions of
+    their vec rows.
+
+    - PQ: asymmetric LUT distances over the whole pool (L2² LUT,
+      fdb/FdbVectorIndex.java:1057-1079), top-ef. The pool is the
+      allowed code rows, tombstoned ones included: the allow-list
+      pre-filters it, so it is spent on allowed vectors only.
+    - GRAPH/BEAM: see ``_graph_choose``; traversal reads every code row.
 
     The codebooks (and OPQ rotations) ride a Spark broadcast from the
     driver cache (SegmentCaches analog): shipped once per executor,
@@ -286,17 +340,27 @@ def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> Dat
     sc = index.spark.sparkContext
     cbs_bc = sc.broadcast(index.codebooks_np(sealed_segs))
     rots_bc = sc.broadcast(index.rotations_np(sealed_segs))
+    if mode == "PQ":
+        def choose(seg_id, rows, vec_ids, mat, ef, luts):
+            return [np.argpartition(approx_distances(mat, lut), ef - 1)[:ef] for lut in luts]
+    else:
+        choose = _graph_choose(index.config.seed, params, mode, k)
 
-    def per_segment(seg_id, rows, qids, qmat):
+    def pick(seg_id, rows, vec, allowed, emb, qmat):
         cb = cbs_bc.value.get(seg_id)
-        codes = rows[rows["kind"] == "code"] if "kind" in rows else rows
+        codes = rows[rows["kind"] == "code"]
+        vec_pos = _positions(vec["vec_id"].to_numpy(dtype=np.int64), codes["vec_id"].to_numpy())
+        if mode == "PQ" and "__ok" in rows:
+            pool = vec_pos >= 0
+            pool[pool] = allowed[vec_pos[pool]]
+            codes, vec_pos = codes[pool], vec_pos[pool]
+        vec_ids = codes["vec_id"].to_numpy(dtype=np.int64)
         n = len(codes)
         if cb is None or n == 0:
             return None
-        vec_ids = codes["vec_id"].to_numpy(dtype=np.int64)
         ef = ef_by_seg[seg_id]
         if ef >= n:
-            picked = [np.arange(n)] * len(qids)
+            picked = [np.arange(n)] * len(qmat)
         else:
             mat = np.frombuffer(
                 b"".join(codes["codes"].to_numpy()), dtype=np.uint8
@@ -312,48 +376,19 @@ def _candidate_scan(index, q, side, sealed_segs, ef_by_seg, metric, pick) -> Dat
             # built from the rotated query
             rot = rots_bc.value.get(seg_id)
             luts = [build_lut(cb, v @ rot if rot is not None else v) for v in qvecs]
-            picked = pick(seg_id, rows, vec_ids, mat, ef, luts)
-        sizes = [len(p) for p in picked]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, sizes),
-                "seg_id": np.full(sum(sizes), seg_id, dtype=np.int32),
-                "vec_id": vec_ids[np.concatenate(picked)].astype(np.int32),
-            }
-        )
+            picked = choose(seg_id, rows, vec_ids, mat, ef, luts)
+        # a code row without a vec row is never a hit
+        return [p[p >= 0] for p in (vec_pos[c] for c in picked)]
 
-    return _cogroup_scan(side, q, len(sealed_segs), per_segment, _CAND_SCHEMA)
+    return pick
 
 
-def _pq_cogroup_candidates(index, q, sealed_segs, ef_by_seg, metric, allowed) -> DataFrame:
-    """PQ generator: LUT distances over every code row of the segment,
-    top-ef per (query, segment). Reads only (seg_id, vec_id, codes).
-    The allow-list pre-filters the codes side: the candidate pool is
-    spent on allowed vectors only."""
-    codes = index.codes(sealed_segs)
-    if allowed is not None:
-        allowed_sv = (
-            index.vectors(states=SEARCHABLE_SEALED)
-            .join(allowed, "gid", "left_semi")
-            .select("seg_id", "vec_id")
-        )
-        codes = codes.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
-
-    def pick(seg_id, rows, vec_ids, mat, ef, luts):
-        return [np.argpartition(approx_distances(mat, lut), ef - 1)[:ef] for lut in luts]
-
-    return _candidate_scan(index, q, codes, sealed_segs, ef_by_seg, metric, pick)
-
-
-def _graph_cogroup_candidates(
-    index, q, sealed_segs, ef_by_seg, metric, params: SearchParams, mode: str, k: int
-) -> DataFrame:
-    """GRAPH/BEAM generator: ONE scan of the unified artifacts table
-    serves codes AND adjacency rows (kind ∈ {code, adj}); the task
-    reassembles them, so no join materializes the (codes ⋈ adjacency)
-    pair. Task memory is one segment's codes (N·m bytes) + neighbor
-    lists (N·degree ints), within the segment-bounded build-task
-    contract.
+def _graph_choose(seed: int, params: SearchParams, mode: str, k: int):
+    """GRAPH/BEAM traversal over the segment's code and adjacency rows,
+    which the one side scan delivers together, so no join materializes
+    the (codes ⋈ adjacency) pair. Task memory is one segment's codes
+    (N·m bytes) + neighbor lists (N·degree ints), within the
+    segment-bounded build-task contract.
 
     Seeds per (query, segment), per ``params.seed_strategy``:
     - PQ_SEED_ONLY (GRAPH): the top-``beam`` rows by LUT distance over
@@ -364,24 +399,20 @@ def _graph_cogroup_candidates(
       the query batch (801-812), with LUT distances computed lazily
       for visited nodes only.
     Neighbors whose artifacts were vacuumed away are skipped;
-    tombstoned-but-unvacuumed nodes are filtered at the exact re-rank.
+    tombstoned-but-unvacuumed and disallowed nodes stay traversable and
+    are dropped at the exact re-rank.
     """
-    artifacts = index._artifacts().filter(
-        F.col("kind").isin("code", "adj") & F.col("seg_id").isin(sealed_segs)
-    ).select("seg_id", "kind", "vec_id", "codes", "neighbor_ids")
-    seed = index.config.seed
     pq_seeds = mode == "GRAPH" and params.seed_strategy == PQ_SEED_ONLY
 
-    def pick(seg_id, rows, vec_ids, mat, ef, luts):
+    def choose(seg_id, rows, vec_ids, mat, ef, luts):
         n = len(vec_ids)
         adj = rows[rows["kind"] == "adj"]
+        src = _positions(vec_ids, adj["vec_id"].to_numpy(dtype=np.int64))
         nbrs: dict[int, np.ndarray] = {}
-        for v, nb in zip(adj["vec_id"].to_numpy(), adj["neighbor_ids"]):
-            nb = np.asarray(nb, dtype=np.int64)
-            at = np.minimum(np.searchsorted(vec_ids, nb), n - 1)
-            src = int(np.searchsorted(vec_ids, v))
-            if src < n and vec_ids[src] == v:
-                nbrs[src] = at[vec_ids[at] == nb]
+        for s, nb in zip(src, adj["neighbor_ids"]):
+            if s >= 0:
+                at = _positions(vec_ids, np.asarray(nb, dtype=np.int64))
+                nbrs[int(s)] = at[at >= 0]
         beam = params.beam or max(k, ef // 4)
         if not pq_seeds:
             n_seeds = min(max(params.pivots, 1), n)
@@ -409,7 +440,7 @@ def _graph_cogroup_candidates(
                 )
         return out
 
-    return _candidate_scan(index, q, artifacts, sealed_segs, ef_by_seg, metric, pick)
+    return choose
 
 
 def _best_first(dist, seeds, nbrs, n, ef, max_iters, max_explore) -> np.ndarray:
@@ -494,55 +525,6 @@ def _beam_expand(dist, seeds, nbrs, n, ef, beam, params: SearchParams) -> np.nda
     for d, i in expanded:
         seen.setdefault(i, d)
     return np.asarray([i for _, i in sorted((d, i) for i, d in seen.items())[:ef]], dtype=np.int64)
-
-
-def _exact_rerank(index, cand, q, metric, emb: Column, allowed, limit: int) -> DataFrame:
-    """Step 4: candidates (≤ Q×S×ef (query_id, seg_id, vec_id) rows)
-    join back to the raw vectors on the composite key, drop tombstones,
-    attach the query vector and rescore with the true metric; then the
-    per-segment cap.
-
-    The vectors scan is first cut to the candidate rows by a left-semi
-    join against a broadcast of the distinct (seg_id, vec_id) pairs
-    (≤ min(sealed rows, Q×S×ef) × 8 bytes), so the embeddings that
-    reach the shuffle of the re-rank join are those of candidates only,
-    never of every sealed row. The candidate frame is used twice, so it
-    is checkpointed lazily and the generator runs once, on first use
-    (under AQE, building the DataFrame already runs the generator's
-    two input shuffles; a shared exchange is not reused here, because
-    column pruning gives the two uses different plans). No other
-    broadcast hint: at moderate Q the planner broadcasts the
-    bounded sides from their observed size, and at the million-query
-    scale a forced broadcast of the query relation would be the memory
-    wall."""
-    cand = cand.localCheckpoint(eager=False)
-    pairs = cand.select("seg_id", "vec_id").distinct()
-    vec = (
-        index.vectors(states=SEARCHABLE_SEALED)
-        .select("seg_id", "vec_id", "gid", "embedding", "deleted")
-        .join(F.broadcast(pairs), ["seg_id", "vec_id"], "left_semi")
-    )
-    reranked = (
-        vec.join(cand, ["seg_id", "vec_id"])
-        .filter(~F.col("deleted"))
-        .join(q, "query_id")
-        .select(
-            "query_id", "seg_id", "gid",
-            distance_for_metric(emb, F.col("__qvec"), metric).alias("distance"),
-        )
-    )
-    if allowed is not None:
-        # drops traversal-surfaced disallowed nodes (GRAPH/BEAM); a
-        # no-op for the pre-filtered PQ codes scan
-        reranked = reranked.join(allowed, "gid", "left_semi")
-    w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
-        F.col("distance").asc(), F.col("gid").asc()
-    )
-    return (
-        reranked.withColumn("rn", F.row_number().over(w_cap))
-        .filter(F.col("rn") <= limit)
-        .select("query_id", "gid", "distance")
-    )
 
 
 def _merge_and_attach(index: VectorIndex, merged: DataFrame, k: int, metric: Metric) -> DataFrame:

@@ -15,6 +15,10 @@ Scale story (the part that must survive 100 TB):
   SIMD kernels, Distances.java:15) and emits **at most Q×k rows per
   input partition** (partial top-k = map-side combine). The final exact
   merge therefore shuffles O(partitions × Q × k) rows, never O(N×Q).
+- ``partial_topk`` is two steps: ``gemm_heads`` (each query's top-k by
+  the GEMM distances) and ``exact_topk`` (exact-kernel re-score, sort
+  by (query, distance, id), cap). ``exact_topk`` is also the one
+  re-rank of the index search (``index/search.py``), for every mode.
 - ``knn_join_expr`` is the cross-join variant (the ``distance_for_metric``
   column + window). It shuffles all Q×N scored pairs, so it is kept for
   small inputs and as a cross-check oracle of the GEMM path.
@@ -65,6 +69,50 @@ def _batch_distances(vmat: np.ndarray, qmat: np.ndarray, metric: Metric) -> np.n
     return 1.0 - sim
 
 
+def gemm_heads(vmat: np.ndarray, qmat: np.ndarray, k: int, metric: Metric) -> np.ndarray:
+    """(Q, min(k, n)) row positions: each query's k nearest rows of
+    ``vmat`` (n, d) by the GEMM distances, unordered. The GEMM expansion
+    carries ~1e-8 cancellation error (exact L2 matches come out nonzero)
+    and its cosine can differ in the last ulp, enough to flip
+    round(·,4), so callers re-score the heads with ``exact_topk``."""
+    n = len(vmat)
+    kk = min(k, n)
+    if kk == n:
+        return np.tile(np.arange(n), (len(qmat), 1))
+    dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
+    return np.stack([np.argpartition(dist[:, j], kk - 1)[:kk] for j in range(len(qmat))])
+
+
+# candidate pairs gathered per kernel call in ``exact_topk``: bounds the
+# two gathered (pairs, d) matrices
+_PAIR_BLOCK = 4096
+
+
+def exact_topk(
+    ids: np.ndarray, vmat: np.ndarray, vpos: np.ndarray,
+    qids: np.ndarray, qmat: np.ndarray, qpos: np.ndarray, k: int, metric: Metric,
+) -> pd.DataFrame:
+    """Exact re-rank of candidate pairs: pair i is row ``vpos[i]`` of
+    ``vmat`` (id ``ids[vpos[i]]``) against query ``qpos[i]`` of ``qmat``.
+    Every pair is re-scored by the exact kernel; the result is
+    (query_id, id, distance) rows ordered by (query, distance, id) and
+    capped at ``k`` per query. ``vmat`` and ``qmat`` are float64."""
+    dist = np.concatenate(
+        [np.empty(0)]
+        + [
+            pair_distance(vmat[vpos[i : i + _PAIR_BLOCK]], qmat[qpos[i : i + _PAIR_BLOCK]], metric)
+            for i in range(0, len(vpos), _PAIR_BLOCK)
+        ]
+    )
+    hit_ids = ids[vpos]
+    order = np.lexsort((hit_ids, dist, qpos))
+    qpos, hit_ids, dist = qpos[order], hit_ids[order], dist[order]
+    keep = np.arange(len(qpos)) - np.searchsorted(qpos, qpos) < k
+    return pd.DataFrame(
+        {"query_id": qids[qpos[keep]], "id": hit_ids[keep], "distance": dist[keep]}
+    )
+
+
 def partial_topk(
     ids: np.ndarray, vmat: np.ndarray, qids: np.ndarray, qmat: np.ndarray,
     k: int, metric: Metric,
@@ -72,26 +120,9 @@ def partial_topk(
     """Per-query top-k of one block of vectors: (query_id, id, distance)
     rows, ≤ k per query, ordered by (distance, id). ``vmat`` (n, d) and
     ``qmat`` (Q, d) are float64."""
-    dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
-    n, nq = len(ids), len(qids)
-    kk = min(k, n)
-    # per-query partial top-k by the GEMM distances, then every
-    # survivor re-scored by the exact kernel: the GEMM expansion carries
-    # ~1e-8 cancellation error (exact L2 matches come out nonzero) and
-    # its cosine can differ in the last ulp, enough to flip round(·,4).
-    heads = np.concatenate(
-        [
-            np.argpartition(dist[:, j], kk - 1)[:kk] if kk < n else np.arange(n)
-            for j in range(nq)
-        ]
-    )
-    qpos = np.repeat(np.arange(nq), kk)
-    dhead = pair_distance(vmat[heads], qmat[qpos], metric)
-    hit_ids = ids[heads]
-    order = np.lexsort((hit_ids, dhead, qpos))
-    return pd.DataFrame(
-        {"query_id": qids[qpos[order]], "id": hit_ids[order], "distance": dhead[order]}
-    )
+    heads = gemm_heads(vmat, qmat, k, metric)
+    qpos = np.repeat(np.arange(len(qids)), heads.shape[1])
+    return exact_topk(ids, vmat, heads.ravel(), qids, qmat, qpos, k, metric)
 
 
 def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: str):

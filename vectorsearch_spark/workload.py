@@ -17,6 +17,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import NamedTuple
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1357,14 +1358,15 @@ def event_type_gmean(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither engine ever evaluates ln(0). round(4) absorbs
     summation-order fp noise between engines."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    def _gmean(v):
+    # Series → scalar hints make it a grouped-aggregate UDF; under
+    # `from __future__ import annotations` they resolve against this
+    # module's globals, hence the module-level pandas import
+    def _gmean(v: pd.Series) -> float:
         return float(np.exp(np.log(v.to_numpy(dtype="float64")).mean()))
 
-    # explicit functionType: the module uses `from __future__ import
-    # annotations`, so type-hint inference cannot resolve pd.Series
-    gmean = pandas_udf(_gmean, "double", PandasUDFType.GROUPED_AGG)
+    gmean = pandas_udf(_gmean, "double")
 
     ev = _events(spark, sf_dir)
     return (
@@ -4103,8 +4105,8 @@ def index_search_sealed_exhaustive(spark: SparkSession, sf_dir: str) -> DataFram
     """Degenerate-exact twin of ``index_search_sealed``: with ef ≥
     segment size the PQ candidate pool is the whole segment, so the
     exact re-rank sees every row and the result equals brute force —
-    every operator on the sealed path (codes cogroup, re-rank join,
-    per-seg cap, global merge) is hash-checked."""
+    every operator on the sealed path (cached-side cogroup, in-task
+    re-rank and per-seg cap, global merge) is hash-checked."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
@@ -4122,8 +4124,8 @@ def index_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered ANN (index/search.py search filter_gids): the
     allow-list (every third gid) PRE-filters the sealed codes scan, so
     with ef ≥ segment size the result is exactly brute force over the
-    filtered set — the filtered-search plumbing (allow-list semi-joins
-    at scan and re-rank) is hash-checked end to end."""
+    filtered set — the filtered-search plumbing (allow-list at scan and
+    re-rank) is hash-checked end to end."""
     from vectorsearch_spark.index import SearchParams
 
     idx = _ensure_index(spark, sf_dir)
@@ -4161,7 +4163,7 @@ FROM ranked WHERE rank <= {_KNN_K}
 def index_search_join_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered ANN on the DISTRIBUTED query-side path
     (index/search.py search_join filter_gids): the allow-list
-    semi-joins the PQ cogroup's codes side, so the exhaustive config
+    pre-filters the PQ pool of the cogroup task, so the exhaustive config
     equals brute force over the filtered set — same oracle as
     index_search_filtered."""
     from vectorsearch_spark.index import SearchParams
