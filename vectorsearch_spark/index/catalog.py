@@ -42,7 +42,6 @@ import json
 import os
 import tempfile
 import time
-import weakref
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -181,7 +180,7 @@ class VectorIndex:
         # OPQ rotations ride the same cache lifecycle (None = plain PQ)
         self._rotation_np_cache: dict[int, "object"] = {}
         # the persisted, segment-bucketed sealed side (see sealed_side)
-        self._sealed_side_cache: tuple | None = None
+        self._sealed_side_cache: tuple[DataFrame, int] | None = None
 
     # -- paths ---------------------------------------------------------
     @property
@@ -483,22 +482,19 @@ class VectorIndex:
         }
 
     def sealed_side(self) -> tuple[DataFrame, int]:
-        """(side, B): the searchable sealed segments as one persisted
-        frame that every search of this handle reuses — the analog of
-        the reference's per-segment caches (cache/SegmentCaches.java),
-        valid because a sealed segment does not change until the next
-        registry write. A tagged union of the ``vec`` rows (gid,
-        deleted, embedding; code and adj rows carry gid -1) and the
-        ``code`` and ``adj`` artifact rows of the SEALED/COMPACTING
-        segments, bucketed ``__b = pmod(hash(seg_id), B)`` and
+        """(side, B): the SEALED/COMPACTING segments as one persisted
+        frame that every search of this handle reuses (the analog of
+        cache/SegmentCaches.java; a sealed segment does not change until
+        the next registry write). A tagged union of the ``vec`` rows
+        (gid, deleted, embedding) and the ``code`` and ``adj`` artifact
+        rows (gid -1), bucketed ``__b = pmod(hash(seg_id), B)`` and
         repartitioned by ``__b`` once, so a search's cogroup reads it
         without an exchange. It has at least
         ``spark.sql.shuffle.partitions`` partitions: with fewer, the
         planner would shuffle it again to meet the query side.
 
-        Built lazily (no Spark job until a search runs) and dropped by
-        ``drop_sealed_side`` at every registry write, by ``recover()``
-        and when the handle is garbage-collected. A second handle on
+        Built lazily (no Spark job until a search runs); dropped at
+        every registry write and by ``recover()``. A second handle on
         the same path keeps its own copy: the single-writer contract of
         the registry cache."""
         if self._sealed_side_cache is None:
@@ -522,16 +518,13 @@ class VectorIndex:
             # side's cache its own
             side = side.withColumn("__side", F.lit(next(_SIDE_IDS)))
             side = side.repartition(parts, "__b").persist(StorageLevel.MEMORY_AND_DISK)
-            # a dropped handle releases its side too
-            drop = weakref.finalize(self, side.unpersist)
-            drop.atexit = False
-            self._sealed_side_cache = (side, n_buckets, drop)
-        return self._sealed_side_cache[:2]
+            self._sealed_side_cache = (side, n_buckets)
+        return self._sealed_side_cache
 
     def drop_sealed_side(self) -> None:
         """Unpersist the cached sealed side; the next search rebuilds it."""
         if self._sealed_side_cache is not None:
-            self._sealed_side_cache[2]()
+            self._sealed_side_cache[0].unpersist()
             self._sealed_side_cache = None
 
     def resolve_ids(self, gids: list[int]) -> DataFrame:

@@ -199,6 +199,9 @@ def _search(
         parts.append(scan(fresh, n_buckets, _brute_pick(per_seg_limit, metric)))
     if sealed_segs:
         side, n_buckets = index.sealed_side()
+        # only GRAPH and BEAM read the adjacency rows, and BRUTE no codes
+        kinds = {"BRUTE": ["vec"], "PQ": ["vec", "code"]}.get(mode, ["vec", "code", "adj"])
+        side = side.filter(F.col("kind").isin(kinds))
         if allowed is not None:
             # may shuffle the side when the allow-list is too large to
             # broadcast; an unfiltered search never does
