@@ -885,6 +885,22 @@ def test_search_join_pq_mixed_states_exact_twin(spark, tmp_path_factory):
     top1 = {r["query_id"]: r["gid"] for r in rows if r["rank"] == 1}
     assert top1 == {0: 0, 20: 20, 55: 55, 79: 79}
 
+    # one cached side holds both segments: one cogroup per plan, and a
+    # second search of the unchanged handle reads no index file again
+    search_pq = idx.search(qdf, k=4, params=SearchParams(mode="PQ", ef=CAP))
+    assert key(search_pq.collect()) == key(rows)
+    for res in (pq, search_pq):
+        nodes = _plan_nodes(res._jdf.queryExecution().executedPlan())
+        assert [n.nodeName() for n in nodes].count("FlatMapCoGroupsInPandas") == 1
+    again = idx.search(qdf, k=4, params=SearchParams(mode="PQ", ef=CAP))
+    assert key(again.collect()) == key(rows)
+    tables = [p.split("://")[-1] for p in (idx.vectors_path, idx.artifacts_path)]
+    assert [
+        n.simpleString(400)
+        for n in _plan_nodes(again._jdf.queryExecution().executedPlan())
+        if n.nodeName().startswith("Scan") and any(t in n.simpleString(400) for t in tables)
+    ] == []
+
 
 def test_search_join_pq_heavy_n2000_q500(spark, tmp_path_factory):
     """Heavier distributed-search gate: 2000 vectors over 8 sealed
@@ -1573,6 +1589,12 @@ def _shuffled_scans(plan, path: str, under_shuffle=False) -> list[str]:
         under_shuffle = False
     if name.startswith("Scan") and path in plan.simpleString(400):
         return [plan.simpleString(400)] if under_shuffle else []
+    return [s for kid in _plan_children(plan) for s in _shuffled_scans(kid, path, under_shuffle)]
+
+
+def _plan_children(plan) -> list:
+    """A physical plan node's children, through AQE query stages, reused
+    exchanges and adaptive plans; a cached relation's scan is a leaf."""
     kids = [plan.children().apply(i) for i in range(plan.children().size())]
     for attr in ("plan", "child", "executedPlan"):  # stage / reuse / AQE leaves
         if not kids and hasattr(plan, attr):
@@ -1580,7 +1602,12 @@ def _shuffled_scans(plan, path: str, under_shuffle=False) -> list[str]:
                 kids = [getattr(plan, attr)()]
             except Exception:
                 pass
-    return [s for kid in kids for s in _shuffled_scans(kid, path, under_shuffle)]
+    return kids
+
+
+def _plan_nodes(plan) -> list:
+    """Every node of a physical plan, walked as ``_shuffled_scans`` does."""
+    return [plan] + [n for kid in _plan_children(plan) for n in _plan_nodes(kid)]
 
 
 def test_rerank_never_shuffles_the_vectors_scan(spark, built_index):
@@ -1672,12 +1699,13 @@ def test_normalize_on_read_cosine_rows_and_distance_bytes(spark, cosine_index):
 
 
 def test_search_after_every_write_equals_a_fresh_handle(spark, tmp_path_factory):
-    """One handle keeps its cached sealed side across searches. After
-    each write (add, delete, build, vacuum, compact, and recover() of a
-    vacuum that crashed mid-swap while ingest went on), its PQ search,
-    GRAPH search with ef below the segment rows and search_join return
-    exactly what a freshly opened handle returns, and never a
-    tombstoned gid or a gid twice."""
+    """One handle keeps its cached searchable side across searches.
+    After each write (add, delete, build, vacuum, compact, and recover()
+    of a vacuum that crashed mid-swap while ingest went on), and after
+    the side's cached blocks are evicted behind the handle's back, its
+    PQ search, GRAPH search with ef below the segment rows and
+    search_join return exactly what a freshly opened handle returns,
+    and never a tombstoned gid or a gid twice."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
@@ -1729,13 +1757,28 @@ def test_search_after_every_write_equals_a_fresh_handle(spark, tmp_path_factory)
 
     add(0, 120)
     assert idx.build() == [0, 1]
-    rows(idx)  # caches the sealed side
+    rows(idx)  # caches the searchable side
     add(120, 170)
     check("add")
     doomed = list(range(10, 40)) + [101, 105, 110]
     assert idx.delete(doomed) == len(doomed)
     dead |= set(doomed)
     check("delete")
+    # evict the side's blocks as memory pressure would: the next search
+    # recomputes them from the files the side was built on
+    side, _ = idx.searchable_side()
+    cached = side._jdf.queryExecution().withCachedData()
+    rdd_id = cached.cacheBuilder().cachedColumnBuffers().id()
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached_partitions():
+        info = [i for i in sc.getRDDStorageInfo() if i.id() == rdd_id]
+        return info[0].numCachedPartitions() if info else 0
+
+    assert cached_partitions() > 0
+    sc.unpersistRDD(rdd_id, True)
+    assert cached_partitions() == 0
+    check("evict")
     assert idx.build() == [2]
     check("build")
     assert idx.vacuum(0, force=True)
@@ -1757,7 +1800,7 @@ def test_search_after_every_write_equals_a_fresh_handle(spark, tmp_path_factory)
     finally:
         staging._FAULT = None
     add(170, 200)
-    rows(idx)  # caches the sealed side of the crashed tables
+    rows(idx)  # caches the searchable side of the crashed tables
     assert "restored:seg_id=2" in idx.recover()["swaps"]
     assert sorted(idx.registered_seg_ids((SEALED,))) == [2, dest]
     check("recover")

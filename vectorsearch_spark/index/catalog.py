@@ -54,6 +54,7 @@ from vectorsearch_spark.config import (
     COMPACTING,
     PENDING,
     SEALED,
+    SEARCHABLE_BRUTE,
     SEARCHABLE_SEALED,
     WRITING,
     IndexConfig,
@@ -153,14 +154,6 @@ class SearchParams:
 _SIDE_IDS = itertools.count()
 
 
-def segment_buckets(df: DataFrame, n_segs: int) -> tuple[DataFrame, int]:
-    """(df with ``__b = pmod(hash(seg_id), B)``, B): the bucket that
-    places a whole segment in one search task; one bucket per segment,
-    capped at 256."""
-    n_buckets = min(max(n_segs, 1), 256)
-    return df.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets))), n_buckets
-
-
 class VectorIndex:
     """Facade over the segmented tables; all methods are batch jobs."""
 
@@ -179,8 +172,9 @@ class VectorIndex:
         self._codebook_np_cache: dict[int, "object"] = {}
         # OPQ rotations ride the same cache lifecycle (None = plain PQ)
         self._rotation_np_cache: dict[int, "object"] = {}
-        # the persisted, segment-bucketed sealed side (see sealed_side)
-        self._sealed_side_cache: tuple[DataFrame, int] | None = None
+        # the persisted, segment-bucketed searchable side (see
+        # searchable_side)
+        self._searchable_side_cache: tuple[DataFrame, int] | None = None
 
     # -- paths ---------------------------------------------------------
     @property
@@ -362,11 +356,11 @@ class VectorIndex:
         self._segments_cache = [dict(r) for r in rows]
         # the actual mutation choke point — EVERY registry write (incl.
         # streaming crash recovery's snapshot restore) invalidates the
-        # codebook cache and the sealed side here, not just
+        # codebook cache and the searchable side here, not just
         # update_segment_states
         self._codebook_np_cache.clear()
         self._rotation_np_cache.clear()
-        self.drop_sealed_side()
+        self.drop_searchable_side()
 
     def _segment_rows(self) -> list[dict]:
         if self._segments_cache is None:
@@ -481,35 +475,45 @@ class VectorIndex:
             if s in self._codebook_np_cache
         }
 
-    def sealed_side(self) -> tuple[DataFrame, int]:
-        """(side, B): the SEALED/COMPACTING segments as one persisted
-        frame that every search of this handle reuses (the analog of
-        cache/SegmentCaches.java; a sealed segment does not change until
-        the next registry write). A tagged union of the ``vec`` rows
-        (gid, deleted, embedding) and the ``code`` and ``adj`` artifact
-        rows (gid -1), bucketed ``__b = pmod(hash(seg_id), B)`` and
-        repartitioned by ``__b`` once, so a search's cogroup reads it
-        without an exchange. It has at least
-        ``spark.sql.shuffle.partitions`` partitions: with fewer, the
-        planner would shuffle it again to meet the query side.
+    def searchable_side(self) -> tuple[DataFrame, int]:
+        """(side, B): every searchable segment as one persisted frame
+        that every search of this handle reuses (the analog of
+        cache/SegmentCaches.java). A tagged union of the ``vec`` rows
+        (gid, deleted, embedding) of the ACTIVE, PENDING, SEALED and
+        COMPACTING segments and the ``code`` and ``adj`` artifact rows
+        (gid -1) of the SEALED and COMPACTING ones only: a PENDING
+        segment whose build stopped before its seal keeps being
+        brute-searched. Rows are bucketed ``__b = pmod(hash(seg_id), B)``
+        with one bucket per segment, capped at 256, so a whole segment
+        lives in one search task, and repartitioned by ``__b`` once, so
+        a search's cogroup reads the side without an exchange. It has
+        at least ``spark.sql.shuffle.partitions`` partitions: with
+        fewer, the planner would shuffle it again to meet the query
+        side.
 
-        Built lazily (no Spark job until a search runs); dropped at
-        every registry write and by ``recover()``. A second handle on
-        the same path keeps its own copy: the single-writer contract of
-        the registry cache."""
-        if self._sealed_side_cache is None:
-            segs = self.registered_seg_ids(SEARCHABLE_SEALED)
-            side = self.vectors(states=SEARCHABLE_SEALED).select(
+        Built lazily (no Spark job until a search runs). It lives until
+        the next registry write, and every add, delete, build, vacuum
+        and compaction writes the registry; ``recover()`` drops it too,
+        because its swap recovery rewrites the tables without one. A
+        second handle on the same path keeps its own copy: the
+        single-writer contract of the registry cache."""
+        if self._searchable_side_cache is None:
+            segs = self.registered_seg_ids(SEARCHABLE_BRUTE + SEARCHABLE_SEALED)
+            vec = self.vectors(states=SEARCHABLE_BRUTE + SEARCHABLE_SEALED).select(
                 "seg_id", F.lit("vec").alias("kind"), "vec_id", "gid", "deleted", "embedding"
             )
             art = (
                 self._artifacts()
-                .filter(F.col("kind").isin("code", "adj") & F.col("seg_id").isin(segs))
+                .filter(
+                    F.col("kind").isin("code", "adj")
+                    & F.col("seg_id").isin(self.registered_seg_ids(SEARCHABLE_SEALED))
+                )
                 .select("seg_id", "kind", "vec_id", F.lit(-1).cast("long").alias("gid"),
                         "codes", "neighbor_ids")
             )
-            side, n_buckets = segment_buckets(
-                side.unionByName(art, allowMissingColumns=True), len(segs)
+            n_buckets = min(max(len(segs), 1), 256)
+            side = vec.unionByName(art, allowMissingColumns=True).withColumn(
+                "__b", F.pmod(F.hash("seg_id"), F.lit(n_buckets))
             )
             parts = max(n_buckets, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
             # Spark serves one cached copy to every equal plan, and two
@@ -518,14 +522,15 @@ class VectorIndex:
             # side's cache its own
             side = side.withColumn("__side", F.lit(next(_SIDE_IDS)))
             side = side.repartition(parts, "__b").persist(StorageLevel.MEMORY_AND_DISK)
-            self._sealed_side_cache = (side, n_buckets)
-        return self._sealed_side_cache
+            self._searchable_side_cache = (side, n_buckets)
+        return self._searchable_side_cache
 
-    def drop_sealed_side(self) -> None:
-        """Unpersist the cached sealed side; the next search rebuilds it."""
-        if self._sealed_side_cache is not None:
-            self._sealed_side_cache[0].unpersist()
-            self._sealed_side_cache = None
+    def drop_searchable_side(self) -> None:
+        """Unpersist the cached searchable side; the next search
+        rebuilds it."""
+        if self._searchable_side_cache is not None:
+            self._searchable_side_cache[0].unpersist()
+            self._searchable_side_cache = None
 
     def resolve_ids(self, gids: list[int]) -> DataFrame:
         """gid → (seg_id, vec_id); missing gids absent from the result

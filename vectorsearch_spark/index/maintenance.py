@@ -44,16 +44,6 @@ from vectorsearch_spark.staging import (
 )
 
 
-def _rewrite_partitions(index: VectorIndex, updated: DataFrame, table_path: str) -> None:
-    """Replace only the seg_id partitions present in ``updated``: one
-    staged write + per-partition rename swap (vectorsearch_spark.staging
-    — crash protocol + single-writer contract documented there). The
-    previous stage-then-dynamic-overwrite form re-encoded the staged
-    copy through a second write job per rewrite (measured ~0.3 s of
-    scheduling floor each across the delete/vacuum/compact path)."""
-    staged_partition_rewrite(index.spark, updated, table_path, "seg_id")
-
-
 # ---------------------------------------------------------------------------
 # M1: tombstone delete
 # ---------------------------------------------------------------------------
@@ -86,7 +76,7 @@ def delete_gids(index: VectorIndex, gids: list[int]) -> int:
     updated = part.join(gid_df.withColumn("_hit", F.lit(True)), "gid", "left").withColumn(
         "deleted", F.col("deleted") | F.coalesce(F.col("_hit"), F.lit(False))
     ).drop("_hit")
-    _rewrite_partitions(index, updated, index.vectors_path)
+    staged_partition_rewrite(index.spark, updated, index.vectors_path, "seg_id")
 
     rows = index._segment_rows()
     updates = {}
@@ -168,7 +158,7 @@ def vacuum_segment(
             )
             return True
         with get_metrics(spark).phase("index.vacuum.vectors_rewrite"):
-            _rewrite_partitions(index, kept, index.vectors_path)
+            staged_partition_rewrite(spark, kept, index.vectors_path, "seg_id")
         # drop orphaned build artifacts for removed vec_ids — ONE
         # rewrite of the unified artifacts table (codebook rows carry
         # no vec_id and survive unconditionally)
@@ -401,8 +391,8 @@ def recover(index: VectorIndex) -> dict:
     for path in (index.vectors_path, index.artifacts_path):
         actions["swaps"] += recover_partial_swaps(index.spark, path)
     # the swap recovery rewrites the tables without a registry write:
-    # drop the cached sealed side here, not only at the choke point
-    index.drop_sealed_side()
+    # drop the cached searchable side here, not only at the choke point
+    index.drop_searchable_side()
     updates: dict[int, dict | None] = {}
     for r in index._segment_rows():
         if r["state"] == WRITING:

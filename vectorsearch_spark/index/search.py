@@ -29,26 +29,26 @@ for ``search_join``. The pipeline has three steps:
 3. the global merge → top-k by score with gid tie-break (432-437),
    then the payload attach.
 
-Step 2 is one fragment-and-replicate cogroup per segment side: rows are
+Step 2 is one fragment-and-replicate cogroup over one side: rows are
 bucketed by hash(seg_id), so a segment lives in exactly one task, and
-the query DataFrame is replicated to every bucket. The ACTIVE/PENDING
-rows change with every add and are read and shuffled per search. The
-SEALED/COMPACTING rows (vectors, PQ codes and adjacency as one tagged
-union) come from ``VectorIndex.sealed_side``: persisted once,
-partitioned by bucket, and read by every later search of the handle
-without a shuffle. It is dropped at every registry write (the choke
-point that also clears the codebook cache) and by ``recover()``, whose
-swap recovery rewrites the tables without one; a second handle on the
-same path keeps its own copy, under the single-writer contract of the
-registry cache. Every task emits at most max(k, k·oversample) rows per
-(query, segment), so no shuffle past the scan is ever O(N).
+the query DataFrame is replicated to every bucket. The side is
+``VectorIndex.searchable_side``: the vec rows of every searchable
+segment and the PQ code and adjacency rows of the sealed ones, as one
+tagged union, persisted once, partitioned by bucket and read by every
+later search of the handle without a shuffle. It lives until the next
+registry write, and every add writes the registry: the write choke
+point drops it, as it clears the codebook cache, and so does
+``recover()``, whose swap recovery rewrites the tables without one. A
+second handle on the same path keeps its own copy, under the
+single-writer contract of the registry cache. Every task emits at most
+max(k, k·oversample) rows per (query, segment), so no shuffle past the
+scan is ever O(N).
 """
 
 from __future__ import annotations
 
 import heapq
 import math
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -65,7 +65,6 @@ from vectorsearch_spark.index.catalog import (
     PQ_SEED_ONLY,
     SearchParams,
     VectorIndex,
-    segment_buckets,
 )
 from vectorsearch_spark.operators.knn import exact_topk, gemm_heads
 from vectorsearch_spark.operators.pq import approx_distances, build_lut
@@ -179,46 +178,32 @@ def _search(
 
     # 1. dispatch: the registry is driver-side, O(#segments)
     seg_rows = index._segment_rows()
-    brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
     sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-
-    def scan(side, n_buckets, pick):
-        return _segment_scan(
-            side, q, n_buckets, pick, metric, per_seg_limit, params.normalize_on_read
-        )
-
-    parts: list[DataFrame] = []
-    if brute_segs:
-        # ACTIVE/PENDING segments change with every add: read fresh
-        fresh = index.vectors().filter(F.col("seg_id").isin(brute_segs) & ~F.col("deleted"))
-        if allowed is not None:
-            fresh = fresh.join(allowed, "gid", "left_semi")
-        fresh, n_buckets = segment_buckets(
-            fresh.select("seg_id", "vec_id", "gid", "deleted", "embedding"), len(brute_segs)
-        )
-        parts.append(scan(fresh, n_buckets, _brute_pick(per_seg_limit, metric)))
-    if sealed_segs:
-        side, n_buckets = index.sealed_side()
-        # only GRAPH and BEAM read the adjacency rows, and BRUTE no codes
-        kinds = {"BRUTE": ["vec"], "PQ": ["vec", "code"]}.get(mode, ["vec", "code", "adj"])
-        side = side.filter(F.col("kind").isin(kinds))
-        if allowed is not None:
-            # may shuffle the side when the allow-list is too large to
-            # broadcast; an unfiltered search never does
-            side = side.join(allowed.withColumn("__ok", F.lit(True)), "gid", "left")
-        if mode == "BRUTE":
-            pick = _brute_pick(per_seg_limit, metric)
-        else:
-            counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
-            ef_base = params.ef or default_ef(k, cfg.oversample)
-            ef_by_seg = {
-                s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
-            }
-            pick = _code_pick(index, sealed_segs, ef_by_seg, metric, params, mode, k)
-        parts.append(scan(side, n_buckets, pick))
-    if not parts:
+    if not index.registered_seg_ids(SEARCHABLE_BRUTE + SEARCHABLE_SEALED):
         return index.spark.createDataFrame([], _RESULT_SCHEMA)
-    return _merge_and_attach(index, reduce(DataFrame.unionByName, parts), k, metric)
+    side, n_buckets = index.searchable_side()
+    # only GRAPH and BEAM read the adjacency rows, and BRUTE no codes
+    kinds = {"BRUTE": ["vec"], "PQ": ["vec", "code"]}.get(mode, ["vec", "code", "adj"])
+    side = side.filter(F.col("kind").isin(kinds))
+    if allowed is not None:
+        # may shuffle the side when the allow-list is too large to
+        # broadcast; an unfiltered search never does
+        side = side.join(allowed.withColumn("__ok", F.lit(True)), "gid", "left")
+    brute = pick = _brute_pick(per_seg_limit, metric)
+    if mode != "BRUTE" and sealed_segs:
+        counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
+        ef_base = params.ef or default_ef(k, cfg.oversample)
+        ef_by_seg = {s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs}
+        code = _code_pick(index, sealed_segs, ef_by_seg, metric, params, mode, k)
+
+        def pick(seg_id, *rest):
+            # ACTIVE/PENDING segments have no code rows: brute force
+            return (code if seg_id in ef_by_seg else brute)(seg_id, *rest)
+
+    hits = _segment_scan(
+        side, q, n_buckets, pick, metric, per_seg_limit, params.normalize_on_read
+    )
+    return _merge_and_attach(index, hits, k, metric)
 
 
 def _segment_scan(
@@ -229,9 +214,8 @@ def _segment_scan(
     bucket, so a whole segment meets the queries in one task; the query
     DF replicates to every bucket via ``explode(sequence(0, B-1))`` — a
     Q×B-row shuffle of the SMALL side. Nothing is collected to the
-    driver. The cached sealed side is already partitioned by ``__b`` and
-    is read without an exchange; the fresh ACTIVE/PENDING side shuffles
-    once on it.
+    driver. The cached side (``VectorIndex.searchable_side``) is already
+    partitioned by ``__b`` and is read without an exchange.
 
     Per segment, rows sorted by vec_id (results must not depend on
     partition read order), and per block of at most ``_Q_BLOCK`` queries
@@ -249,18 +233,18 @@ def _segment_scan(
     ``_Q_BLOCK``) distance matrix, or ``_Q_BLOCK`` LUTs.
 
     ``pick(seg_id, rows, vec, allowed, emb, qmat)`` sees the segment's
-    rows (with a ``kind`` column on the sealed side), its ``vec`` rows,
-    which of them the allow-list admits (a ``__ok`` column, present only
-    on a filtered sealed side) and ``emb(positions)``, the float64
-    embeddings of vec rows; it returns one array of vec-row positions
-    per query, or None."""
+    rows (tagged by their ``kind`` column), its ``vec`` rows, which of
+    them the allow-list admits (a ``__ok`` column, present only on a
+    filtered search) and ``emb(positions)``, the float64 embeddings of
+    vec rows; it returns one array of vec-row positions per query, or
+    None."""
     q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
     empty = pd.DataFrame(
         {"query_id": np.empty(0, np.int64), "gid": np.empty(0, np.int64), "distance": np.empty(0)}
     )
 
     def per_segment(seg_id, rows, qids, qmat):
-        vec = rows[rows["kind"] == "vec"] if "kind" in rows else rows
+        vec = rows[rows["kind"] == "vec"]
         allowed = vec["__ok"].notna().to_numpy() if "__ok" in vec else np.ones(len(vec), bool)
         embeddings = vec["embedding"].to_numpy()
 
