@@ -689,7 +689,6 @@ def test_graph_search_jobs_independent_of_max_iters(spark, built_index):
     """GRAPH traversal runs inside the cogroup task: the number of
     Spark jobs does not grow with the hop bound."""
     idx, data, sealed = built_index
-    idx.codebooks_np(sealed)  # warm the driver cache: no codebook job
     qdf = _queries_df(spark, data, [0, 99])
     counts = {}
     for hops in (1, 6):
@@ -699,24 +698,6 @@ def test_graph_search_jobs_independent_of_max_iters(spark, built_index):
         )
         assert len(rows) == 2 * 10
     assert counts[1] == counts[6] > 0, counts
-
-
-def test_codebook_cache_serves_and_invalidates(spark, built_index):
-    """Driver codebook cache (SegmentCaches analog): warm after a
-    search, correct contents, and cleared by any registry mutation so
-    a rebuilt segment can never serve a stale codebook."""
-    idx, data, sealed = built_index
-    cbs = idx.codebooks_np(sealed)
-    assert sorted(cbs) == sealed
-    assert all(c.shape == (4, 16, 2) for c in cbs.values())
-    assert sorted(idx._codebook_np_cache) == sealed  # cached
-    # mutation → invalidated
-    idx.update_segment_states({})
-    assert idx._codebook_np_cache == {}
-    # re-fetch repopulates with equal values
-    again = idx.codebooks_np(sealed)
-    for s in sealed:
-        assert (again[s] == cbs[s]).all()
 
 
 def test_create_or_open_round_trip(spark, tmp_path):
@@ -1298,9 +1279,9 @@ def test_opq_index_end_to_end(spark, tmp_path_factory):
         for v in range(cap):
             assert codes_by_seg[sid][v] == model_codes[v].tobytes()
 
-    # rotations_np serves the cached rotation map
-    rots = idx.rotations_np(sealed)
-    assert all(rots[s] is not None for s in sealed)
+    # the seg_id-filtered codebooks() read serves every sealed rotation
+    rots = {r["seg_id"]: r["rotation"] for r in idx.codebooks(sealed).collect()}
+    assert sorted(rots) == sealed and all(rots[s] is not None for s in sealed)
 
     # search: PQ-mode recall vs BRUTE on the correlated corpus
     qids = list(range(0, n, n // 25))[:25]
@@ -1804,3 +1785,75 @@ def test_search_after_every_write_equals_a_fresh_handle(spark, tmp_path_factory)
     assert "restored:seg_id=2" in idx.recover()["swaps"]
     assert sorted(idx.registered_seg_ids((SEALED,))) == [2, dest]
     check("recover")
+
+
+def test_fresh_handle_builds_every_search_without_a_job(spark, built_index, tmp_path_factory):
+    """On a freshly opened handle, building a search DataFrame launches
+    no Spark job: a sealed segment's codebook and OPQ rotation reach its
+    task inside the searchable side, and the payload attach is one
+    broadcast join. Holds for PQ, GRAPH, BEAM and BRUTE ``search``,
+    ``search_join`` AUTO and PQ and a filtered PQ ``search``, on a
+    payload-free L2 index, an OPQ index and a payload index; each
+    result equals a second fresh handle's."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    idx, data, _ = built_index
+    df = _gaussian_df(spark, N, DIM, seed=42)[0].filter(F.col("row_id") < 2 * CAP)
+    base = dict(name="f", dimension=DIM, max_segment_size=CAP, pq_m=4, pq_k=16,
+                graph_degree=16, graph_build_breadth=32, oversample=4, seed=42)
+    opq = VectorIndex.create(
+        spark, str(tmp_path_factory.mktemp("vsfresh_opq")),
+        IndexConfig(**base, use_opq=True, opq_iters=2),
+    )
+    opq.add(df.repartition(4), order_col="row_id")
+    pay = VectorIndex.create(
+        spark, str(tmp_path_factory.mktemp("vsfresh_pay")), IndexConfig(**base)
+    )
+    pay.add(
+        df.withColumn("payload", F.encode(F.format_string("pl-%d", "row_id"), "UTF-8")),
+        order_col="row_id", payload_col="payload",
+    )
+    for built in (opq, pay):
+        assert built.build() == [0, 1]
+    qdf = _queries_df(spark, data, [0, 77, 150])
+    allowed = spark.range(0, N, 3).withColumnRenamed("id", "gid")
+    runs = (
+        ("search", SearchParams(mode="PQ", ef=EF_BELOW), None),
+        ("search", SearchParams(mode="GRAPH", ef=EF_BELOW), None),
+        ("search", SearchParams(mode="BEAM", ef=EF_BELOW), None),
+        ("search", SearchParams(mode="BRUTE"), None),
+        ("search_join", SearchParams(), None),
+        ("search_join", SearchParams(mode="PQ", ef=EF_BELOW), None),
+        ("search", SearchParams(mode="PQ", ef=EF_BELOW), allowed),
+    )
+
+    def rows(path):
+        # two fresh handles, every run on each, in one Spark action
+        frames = []
+        for j in range(2):
+            handle = VectorIndex.open(spark, path)
+            for i, (run, params, filter_gids) in enumerate(runs):
+                res, jobs = jobs_launched(
+                    spark,
+                    lambda: getattr(handle, run)(qdf, k=5, params=params, filter_gids=filter_gids),
+                )
+                assert jobs == 0, (path, i)
+                frames.append(res.withColumn("run", F.lit(i)).withColumn("handle", F.lit(j)))
+        got = reduce(DataFrame.unionByName, frames).collect()
+        return [
+            sorted(
+                (r["run"], r["query_id"], r["rank"], r["gid"], r["distance"], r["score"],
+                 None if r["payload"] is None else bytes(r["payload"]))
+                for r in got if r["handle"] == j
+            )
+            for j in range(2)
+        ]
+
+    for built in (idx, opq, pay):
+        got, again = rows(built.path)
+        assert got == again
+        assert len(got) == len(runs) * 3 * 5
+        assert all(p == (f"pl-{g}".encode() if built is pay else None)
+                   for _, _, _, g, _, _, p in got)

@@ -163,17 +163,9 @@ class VectorIndex:
         self.config = config
         self._meta_cache: dict | None = None
         self._segments_cache: list[dict] | None = None
-        # driver-side codebook cache (analog of the reference's
-        # SegmentCaches, cache/SegmentCaches.java:210-270): avoids a
-        # Spark job per search to re-collect unchanged codebooks.
-        # Invalidated wholesale on ANY registry mutation (build, seal,
-        # compact, vacuum, delete all route through
-        # update_segment_states). Bounded O(#segments × m·k·sub_dim).
-        self._codebook_np_cache: dict[int, "object"] = {}
-        # OPQ rotations ride the same cache lifecycle (None = plain PQ)
-        self._rotation_np_cache: dict[int, "object"] = {}
-        # the persisted, segment-bucketed searchable side (see
-        # searchable_side)
+        # the handle's one search cache (the SegmentCaches analog,
+        # cache/SegmentCaches.java): the persisted, segment-bucketed
+        # searchable side, codebooks included (see searchable_side)
         self._searchable_side_cache: tuple[DataFrame, int] | None = None
 
     # -- paths ---------------------------------------------------------
@@ -355,11 +347,8 @@ class VectorIndex:
         self._atomic_write_json(self.segments_path, rows)
         self._segments_cache = [dict(r) for r in rows]
         # the actual mutation choke point — EVERY registry write (incl.
-        # streaming crash recovery's snapshot restore) invalidates the
-        # codebook cache and the searchable side here, not just
-        # update_segment_states
-        self._codebook_np_cache.clear()
-        self._rotation_np_cache.clear()
+        # streaming crash recovery's snapshot restore) drops the
+        # searchable side here, not just update_segment_states
         self.drop_searchable_side()
 
     def _segment_rows(self) -> list[dict]:
@@ -441,38 +430,17 @@ class VectorIndex:
         return df.select("seg_id", "m", "k", "sub_dim", "centroids", "rotation")
 
     def codebooks_np(self, seg_ids: list[int]) -> dict[int, "object"]:
-        """{seg_id: (m, k, sub_dim) float64 ndarray} for the given
-        segments, served from the driver cache; only missing segments
-        cost a (filtered) collect."""
+        """{seg_id: (m, k, sub_dim) float64 ndarray} for those of the
+        given segments that have a codebook; one collect per call. A
+        search never calls it: it reads each sealed segment's codebook
+        from the searchable side, in the segment's own task."""
         import numpy as np
 
-        missing = [s for s in seg_ids if s not in self._codebook_np_cache]
-        if missing:
-            for r in self.codebooks(missing).collect():
-                sid = int(r["seg_id"])
-                self._codebook_np_cache[sid] = np.array(
-                    r["centroids"], dtype=np.float64
-                ).reshape(r["m"], r["k"], r["sub_dim"])
-                d = r["m"] * r["sub_dim"]
-                self._rotation_np_cache[sid] = (
-                    np.array(r["rotation"], dtype=np.float64).reshape(d, d)
-                    if r["rotation"] is not None
-                    else None
-                )
         return {
-            s: self._codebook_np_cache[s]
-            for s in seg_ids
-            if s in self._codebook_np_cache
-        }
-
-    def rotations_np(self, seg_ids: list[int]) -> dict[int, "object"]:
-        """{seg_id: (d, d) OPQ rotation or None} — populated by the
-        same collect (and cache lifecycle) as ``codebooks_np``."""
-        self.codebooks_np(seg_ids)
-        return {
-            s: self._rotation_np_cache.get(s)
-            for s in seg_ids
-            if s in self._codebook_np_cache
+            int(r["seg_id"]): np.array(r["centroids"], dtype=np.float64).reshape(
+                r["m"], r["k"], r["sub_dim"]
+            )
+            for r in self.codebooks(seg_ids).collect()
         }
 
     def searchable_side(self) -> tuple[DataFrame, int]:
@@ -480,8 +448,10 @@ class VectorIndex:
         that every search of this handle reuses (the analog of
         cache/SegmentCaches.java). A tagged union of the ``vec`` rows
         (gid, deleted, embedding) of the ACTIVE, PENDING, SEALED and
-        COMPACTING segments and the ``code`` and ``adj`` artifact rows
-        (gid -1) of the SEALED and COMPACTING ones only: a PENDING
+        COMPACTING segments and the artifact rows (gid -1) of the SEALED
+        and COMPACTING ones only: ``code`` (codes), ``adj``
+        (neighbor_ids) and the one ``cb`` row (vec_id -1: m, k, sub_dim,
+        centroids and the OPQ rotation, NULL for plain PQ). A PENDING
         segment whose build stopped before its seal keeps being
         brute-searched. Rows are bucketed ``__b = pmod(hash(seg_id), B)``
         with one bucket per segment, capped at 256, so a whole segment
@@ -504,12 +474,10 @@ class VectorIndex:
             )
             art = (
                 self._artifacts()
-                .filter(
-                    F.col("kind").isin("code", "adj")
-                    & F.col("seg_id").isin(self.registered_seg_ids(SEARCHABLE_SEALED))
-                )
-                .select("seg_id", "kind", "vec_id", F.lit(-1).cast("long").alias("gid"),
-                        "codes", "neighbor_ids")
+                .filter(F.col("seg_id").isin(self.registered_seg_ids(SEARCHABLE_SEALED)))
+                .select("seg_id", "kind", F.coalesce("vec_id", F.lit(-1)).alias("vec_id"),
+                        F.lit(-1).cast("long").alias("gid"), "codes", "neighbor_ids",
+                        "m", "k", "sub_dim", "centroids", "rotation")
             )
             n_buckets = min(max(len(segs), 1), 256)
             side = vec.unionByName(art, allowMissingColumns=True).withColumn(

@@ -33,16 +33,17 @@ Step 2 is one fragment-and-replicate cogroup over one side: rows are
 bucketed by hash(seg_id), so a segment lives in exactly one task, and
 the query DataFrame is replicated to every bucket. The side is
 ``VectorIndex.searchable_side``: the vec rows of every searchable
-segment and the PQ code and adjacency rows of the sealed ones, as one
-tagged union, persisted once, partitioned by bucket and read by every
-later search of the handle without a shuffle. It lives until the next
-registry write, and every add writes the registry: the write choke
-point drops it, as it clears the codebook cache, and so does
-``recover()``, whose swap recovery rewrites the tables without one. A
-second handle on the same path keeps its own copy, under the
-single-writer contract of the registry cache. Every task emits at most
-max(k, k·oversample) rows per (query, segment), so no shuffle past the
-scan is ever O(N).
+segment and the PQ code, adjacency and codebook rows of the sealed
+ones, as one tagged union, persisted once, partitioned by bucket and
+read by every later search of the handle without a shuffle. It is the
+handle's one search cache: a segment's codebook and OPQ rotation reach
+the task that holds its codes, and no other task. It lives until the
+next registry write, and every add writes the registry: the write
+choke point drops it, and so does ``recover()``, whose swap recovery
+rewrites the tables without one. A second handle on the same path
+keeps its own copy, under the single-writer contract of the registry
+cache. Every task emits at most max(k, k·oversample) rows per (query,
+segment), so no shuffle past the scan is ever O(N).
 """
 
 from __future__ import annotations
@@ -70,6 +71,13 @@ from vectorsearch_spark.operators.knn import exact_topk, gemm_heads
 from vectorsearch_spark.operators.pq import approx_distances, build_lut
 
 _HIT_SCHEMA = "query_id long, gid long, distance double"
+# the side columns each row kind fills (``VectorIndex.searchable_side``)
+_KIND_COLUMNS = {
+    "vec": ["gid", "deleted", "embedding"],
+    "code": ["codes"],
+    "adj": ["neighbor_ids"],
+    "cb": ["m", "k", "sub_dim", "centroids", "rotation"],
+}
 _RESULT_SCHEMA = (
     "query_id long, gid long, distance double, score double, payload binary, rank int"
 )
@@ -182,9 +190,14 @@ def _search(
     if not index.registered_seg_ids(SEARCHABLE_BRUTE + SEARCHABLE_SEALED):
         return index.spark.createDataFrame([], _RESULT_SCHEMA)
     side, n_buckets = index.searchable_side()
-    # only GRAPH and BEAM read the adjacency rows, and BRUTE no codes
-    kinds = {"BRUTE": ["vec"], "PQ": ["vec", "code"]}.get(mode, ["vec", "code", "adj"])
-    side = side.filter(F.col("kind").isin(kinds))
+    # only GRAPH and BEAM read the adjacency rows, and BRUTE no
+    # artifacts; the cached scan reads only the columns of those kinds
+    kinds = {"BRUTE": ["vec"], "PQ": ["vec", "code", "cb"]}.get(
+        mode, ["vec", "code", "adj", "cb"]
+    )
+    side = side.filter(F.col("kind").isin(kinds)).select(
+        "__b", "seg_id", "kind", "vec_id", *(c for kind in kinds for c in _KIND_COLUMNS[kind])
+    )
     if allowed is not None:
         # may shuffle the side when the allow-list is too large to
         # broadcast; an unfiltered search never does
@@ -194,7 +207,7 @@ def _search(
         counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
         ef_base = params.ef or default_ef(k, cfg.oversample)
         ef_by_seg = {s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs}
-        code = _code_pick(index, sealed_segs, ef_by_seg, metric, params, mode, k)
+        code = _code_pick(index.config.seed, ef_by_seg, metric, params, mode, k)
 
         def pick(seg_id, *rest):
             # ACTIVE/PENDING segments have no code rows: brute force
@@ -308,7 +321,7 @@ def _brute_pick(limit: int, metric: Metric):
     return pick
 
 
-def _code_pick(index, sealed_segs, ef_by_seg, metric, params: SearchParams, mode, k):
+def _code_pick(seed: int, ef_by_seg, metric, params: SearchParams, mode, k):
     """PQ, GRAPH and BEAM: per query, the code rows the mode's generator
     picks, or every code row when ef ≥ code rows (the degenerate rule
     that makes every exhaustive twin equal brute force), as positions of
@@ -320,21 +333,17 @@ def _code_pick(index, sealed_segs, ef_by_seg, metric, params: SearchParams, mode
       pre-filters it, so it is spent on allowed vectors only.
     - GRAPH/BEAM: see ``_graph_choose``; traversal reads every code row.
 
-    The codebooks (and OPQ rotations) ride a Spark broadcast from the
-    driver cache (SegmentCaches analog): shipped once per executor,
-    and no Spark job when the sealed set is unchanged since the last
-    search."""
-    sc = index.spark.sparkContext
-    cbs_bc = sc.broadcast(index.codebooks_np(sealed_segs))
-    rots_bc = sc.broadcast(index.rotations_np(sealed_segs))
+    The LUTs come from the segment's own ``cb`` row (its codebook and
+    OPQ rotation), which the side delivers in the same task as its
+    codes; a segment without one is skipped."""
     if mode == "PQ":
         def choose(seg_id, rows, vec_ids, mat, ef, luts):
             return [np.argpartition(approx_distances(mat, lut), ef - 1)[:ef] for lut in luts]
     else:
-        choose = _graph_choose(index.config.seed, params, mode, k)
+        choose = _graph_choose(seed, params, mode, k)
 
     def pick(seg_id, rows, vec, allowed, emb, qmat):
-        cb = cbs_bc.value.get(seg_id)
+        cb_rows = rows[rows["kind"] == "cb"]
         codes = rows[rows["kind"] == "code"]
         vec_pos = _positions(vec["vec_id"].to_numpy(dtype=np.int64), codes["vec_id"].to_numpy())
         if mode == "PQ" and "__ok" in rows:
@@ -343,15 +352,19 @@ def _code_pick(index, sealed_segs, ef_by_seg, metric, params: SearchParams, mode
             codes, vec_pos = codes[pool], vec_pos[pool]
         vec_ids = codes["vec_id"].to_numpy(dtype=np.int64)
         n = len(codes)
-        if cb is None or n == 0:
+        if cb_rows.empty or n == 0:
             return None
         ef = ef_by_seg[seg_id]
         if ef >= n:
             picked = [np.arange(n)] * len(qmat)
         else:
+            cb = cb_rows.iloc[0]
+            m, sub_dim = int(cb["m"]), int(cb["sub_dim"])
+            centroids = np.asarray(cb["centroids"], dtype=np.float64)
+            centroids = centroids.reshape(m, int(cb["k"]), sub_dim)
             mat = np.frombuffer(
                 b"".join(codes["codes"].to_numpy()), dtype=np.uint8
-            ).reshape(n, cb.shape[0])
+            ).reshape(n, m)
             qvecs = list(qmat)
             if metric == Metric.COSINE:
                 # codebooks were trained/encoded on unit vectors
@@ -361,8 +374,10 @@ def _code_pick(index, sealed_segs, ef_by_seg, metric, params: SearchParams, mode
                 qvecs = [(v / nrm if (nrm := np.linalg.norm(v)) > 0.0 else v) for v in qvecs]
             # OPQ: codes were encoded in rotated space, so the LUT is
             # built from the rotated query
-            rot = rots_bc.value.get(seg_id)
-            luts = [build_lut(cb, v @ rot if rot is not None else v) for v in qvecs]
+            if cb["rotation"] is not None:
+                rot = np.asarray(cb["rotation"], dtype=np.float64).reshape(m * sub_dim, -1)
+                qvecs = [v @ rot for v in qvecs]
+            luts = [build_lut(centroids, v) for v in qvecs]
             picked = choose(seg_id, rows, vec_ids, mat, ef, luts)
         # a code row without a vec row is never a hit
         return [p[p >= 0] for p in (vec_pos[c] for c in picked)]
@@ -536,28 +551,19 @@ def _merge_and_attach(index: VectorIndex, merged: DataFrame, k: int, metric: Met
             "rank",
         )
     # payload attach: exclude WRITING (a gid exists in both source and
-    # destination mid-compaction; the searchable copy is authoritative)
+    # destination mid-compaction; the searchable copy is authoritative).
+    # One INNER join streams the payload scan past a broadcast of the
+    # ≤ Q×k results (a broadcast hint on the preserved side of an outer
+    # join is dropped by Spark, which would shuffle the payload table).
+    # It drops no result: every result gid comes from a vec row of a
+    # searchable segment, and the scan reads the same segments. A gid
+    # stored twice would match twice; dropping duplicate (query_id,
+    # rank) pairs keeps one copy (both carry the same payload bytes).
     payloads = index.vectors(
         states=tuple(SEARCHABLE_BRUTE) + tuple(SEARCHABLE_SEALED)
     ).select("gid", "payload")
-    # Two broadcast-honorable joins (a broadcast hint on the preserved
-    # side of an outer join is silently DROPPED by Spark — a right-outer
-    # with broadcast(topk) degrades to a full sort-merge shuffle of the
-    # payload table):
-    # 1. INNER join payloads ⋈ broadcast(topk gids): streams the payload
-    #    table past a tiny hash map → ≤ Q×k(+dup) matching rows;
-    # 2. LEFT join topk ⋈ broadcast(hits): decorates the ≤ Q×k results.
-    # The mid-compaction double-gid dedup happens on the tiny hit set
-    # (both copies carry identical payload bytes).
-    # lazy checkpoint: topk is referenced twice below (gid probe +
-    # decorate); without it the whole search pipeline would compute
-    # twice. eager=False → no job here, materialized once on first use.
-    topk = topk.localCheckpoint(eager=False)
-    hits = (
-        payloads.join(F.broadcast(topk.select("gid")), "gid")
-        .dropDuplicates(["gid"])
-    )
     return (
-        topk.join(F.broadcast(hits), "gid", "left")
+        payloads.join(F.broadcast(topk), "gid")
+        .dropDuplicates(["query_id", "rank"])
         .select("query_id", "gid", "distance", "score", "payload", "rank")
     )
