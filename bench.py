@@ -190,7 +190,7 @@ def main() -> None:
 
     # Cap the media near-dup corpora (r12, VERDICT r11 #4): their cost
     # is real codec encode+decode CPU — fixed-cost work whose scale
-    # evidence lives in scripts/scale_probe.py, not here — and uncapped
+    # evidence is SURVEY.md's 10× probe rows, not here — and uncapped
     # they were 13% of suite wall with the widest host variance. The
     # cap applies ONLY to bench timings; correctness runs never set it.
     os.environ.setdefault("SPARK_GRAFT_MEDIA_DOCS", "1250")

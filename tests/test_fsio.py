@@ -72,6 +72,14 @@ class RecordingFS(LocalStateFS):
         self.ops.append(("listdir", path))
         return super().listdir(path)
 
+    def exists(self, path):
+        self.ops.append(("exists", path))
+        return super().exists(path)
+
+    def read_text(self, path):
+        self.ops.append(("read_text", path))
+        return super().read_text(path)
+
 
 @pytest.fixture()
 def recording_fs():
@@ -106,6 +114,34 @@ def test_backend_swap_captures_fold_protocol(spark, tmp_path, recording_fs):
     # one marker commit per applied epoch, all through the seam
     assert len([r for r in replaces if r[2].endswith("_last_epoch.json")]) == 2
     assert any(op[0] == "listdir" for op in recording_fs.ops)
+
+
+def test_catalog_reads_through_seam(spark, tmp_path, recording_fs):
+    """The index catalog reads meta.json and segments.json back through
+    the same seam it writes them with, so a non-local backend can read
+    what it wrote: create_or_open's existence check, open's meta read,
+    and a fresh handle's first next_gid and segments() all reach it."""
+    from vectorsearch_spark.config import IndexConfig
+    from vectorsearch_spark.index import VectorIndex
+
+    root = str(tmp_path / "idx")
+    cfg = IndexConfig(name="s", dimension=4, max_segment_size=10, pq_m=2, pq_k=4)
+    VectorIndex.create(spark, root, cfg)
+    meta, segs = f"{root}/meta.json", f"{root}/segments.json"
+
+    recording_fs.ops.clear()
+    VectorIndex.create_or_open(spark, root, cfg)
+    assert recording_fs.ops == [("exists", meta), ("read_text", meta)]
+
+    recording_fs.ops.clear()
+    VectorIndex.open(spark, root)
+    assert recording_fs.ops == [("read_text", meta)]
+
+    fresh = VectorIndex(spark, root, cfg)
+    recording_fs.ops.clear()
+    assert fresh.next_gid == 0
+    assert fresh.segments().count() == 0
+    assert recording_fs.ops == [("read_text", meta), ("read_text", segs)]
 
 
 def test_write_file_atomic_never_exposes_partial(tmp_path):

@@ -725,6 +725,41 @@ def test_create_or_open_round_trip(spark, tmp_path):
         )
 
 
+def test_retired_normalize_on_read_config_key(spark, tmp_path):
+    """normalize_on_read lives on SearchParams only
+    (api/SearchParams.java:16): IndexConfig rejects it, and an index
+    whose meta.json still carries the retired key opens and searches."""
+    import json
+
+    with pytest.raises(TypeError):
+        IndexConfig(name="r", dimension=4, normalize_on_read=True)
+
+    path = str(tmp_path / "retired")
+    cfg = IndexConfig(name="r", dimension=4, max_segment_size=10, pq_m=2, pq_k=4)
+    idx = VectorIndex.create(spark, path, cfg)
+    idx.add(
+        spark.createDataFrame(
+            [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(6)],
+            "vec_id long, embedding array<float>",
+        ),
+        order_col="vec_id",
+    )
+    with open(idx.meta_path) as f:
+        meta = json.load(f)
+    stored = json.loads(meta["config_json"])
+    stored["normalize_on_read"] = True
+    meta["config_json"] = json.dumps(stored, sort_keys=True)
+    with open(idx.meta_path, "w") as f:
+        json.dump(meta, f)
+
+    reopened = VectorIndex.open(spark, path, cfg)
+    assert reopened.config == cfg
+    q = spark.createDataFrame(
+        [(0, [3.0, 0.0, 1.0, 2.0])], "query_id long, embedding array<float>"
+    )
+    assert [r["gid"] for r in reopened.search(q, k=1).collect()] == [3]
+
+
 # ---------------------------------------------------------------------------
 # search_join: distributed query-side search (queries never collected)
 # ---------------------------------------------------------------------------

@@ -617,69 +617,83 @@ def test_ivf_range_join_large_codebook_fallback(spark):
     assert a and a == b
 
 
-def test_ivf_range_join_ids_payload_equals_vectors_bitwise(spark):
-    """survivor_payload="ids" (the shuffle-lean re-join variant) is
-    bit-identical to the default carrying mode for L2 + cosine — the
-    grid's selection is unchanged and the exact re-score runs the same
-    codegen distance over the SAME vectors, only re-attached by key."""
-    from vectorsearch_spark.operators.similarity import ivf_range_join
+# IDS_PAYLOAD_MIN_DIM overrides that force each survivor-payload path
+CARRY, REJOIN = 10**9, 0
 
+
+def _range_paths(monkeypatch, vec, qdf, min_dim=None, **kw):
+    """ivf_range_join's sorted rows, and the payload path its scorer
+    took: True when the vectors rode each pair, False when they were
+    re-joined by id. ``min_dim`` overrides IDS_PAYLOAD_MIN_DIM."""
+    from vectorsearch_spark.operators import similarity
+
+    if min_dim is not None:
+        monkeypatch.setattr(similarity, "IDS_PAYLOAD_MIN_DIM", min_dim)
+    real, carried = similarity._blocked_range_score, []
+
+    def spy(*args, **kwargs):
+        carried.append(kwargs["carry_vectors"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "_blocked_range_score", spy)
+    rows = sorted(map(tuple, similarity.ivf_range_join(vec, qdf, **kw).collect()))
+    monkeypatch.setattr(similarity, "_blocked_range_score", real)
+    assert len(carried) == 1
+    return rows, carried[0]
+
+
+def test_ivf_range_join_ids_payload_equals_vectors_bitwise(spark, monkeypatch):
+    """The id re-join (the shuffle-lean path) is bit-identical to
+    carrying the vectors for L2 + cosine — the grid's selection is
+    unchanged and the exact re-score runs the same codegen distance
+    over the SAME vectors, only re-attached by key."""
     _, _, vec, qdf = _range_fixture(spark)
     for metric, r in [(Metric.L2, 7.0), (Metric.COSINE, 0.3)]:
-        base = sorted(
-            map(tuple, ivf_range_join(
-                vec, qdf, radius=r, n_centroids=8, metric=metric,
-                id_col="vec_id", query_mode="distributed",
-            ).collect())
+        kw = dict(
+            radius=r, n_centroids=8, metric=metric,
+            id_col="vec_id", query_mode="distributed",
         )
-        ids = sorted(
-            map(tuple, ivf_range_join(
-                vec, qdf, radius=r, n_centroids=8, metric=metric,
-                id_col="vec_id", query_mode="distributed",
-                survivor_payload="ids",
-            ).collect())
-        )
+        base, c1 = _range_paths(monkeypatch, vec, qdf, CARRY, **kw)
+        ids, c2 = _range_paths(monkeypatch, vec, qdf, REJOIN, **kw)
+        assert (c1, c2) == (True, False)
         assert base and base == ids, metric
 
 
-def test_ivf_range_join_ids_payload_self_dedup_no_collect(spark):
-    """ids-payload distributed mode with max_driver_queries=0 on the
-    corpus-as-queries shape — the zero-collect proof holds for the
-    re-join variant too, and it matches the carrying mode exactly."""
-    from pyspark.sql import functions as F
-
-    from vectorsearch_spark.operators.similarity import ivf_range_join
-
+def test_ivf_range_join_ids_payload_self_dedup_no_collect(spark, monkeypatch):
+    """The id re-join in distributed mode with max_driver_queries=0 on
+    the corpus-as-queries shape — the zero-collect proof holds for the
+    re-join path too, and it matches the carrying path exactly."""
     x, _, vec, _ = _range_fixture(spark, zero_rows=False)
     qdf = vec.select(F.col("vec_id").alias("query_id"), "embedding")
     kw = dict(
         radius=3.0, n_centroids=8, id_col="vec_id",
         query_mode="distributed", max_driver_queries=0,
     )
-    base = sorted(map(tuple, ivf_range_join(vec, qdf, **kw).collect()))
-    ids = sorted(
-        map(tuple, ivf_range_join(vec, qdf, survivor_payload="ids", **kw).collect())
-    )
+    base, c1 = _range_paths(monkeypatch, vec, qdf, CARRY, **kw)
+    ids, c2 = _range_paths(monkeypatch, vec, qdf, REJOIN, **kw)
+    assert (c1, c2) == (True, False)
     assert base and base == ids
 
 
-def test_ivf_range_join_auto_payload_picks_by_dim(spark):
-    """survivor_payload="auto" matches both explicit modes bitwise at
-    d=64 (auto → vectors) and a high-d slice (auto → ids): the policy
-    can never change results, only the re-attachment plan."""
-    from vectorsearch_spark.operators.similarity import ivf_range_join
-
+def test_ivf_range_join_auto_payload_picks_by_dim(spark, monkeypatch):
+    """The default carries the vectors below IDS_PAYLOAD_MIN_DIM (d=16
+    here) and re-joins them by id at it (d=256), and each default
+    matches the other path bitwise: the rule can never change results,
+    only the re-attachment plan."""
     _, _, vec, qdf = _range_fixture(spark)
     kw = dict(radius=7.0, n_centroids=8, id_col="vec_id", query_mode="distributed")
-    a = sorted(map(tuple, ivf_range_join(vec, qdf, survivor_payload="auto", **kw).collect()))
-    v = sorted(map(tuple, ivf_range_join(vec, qdf, survivor_payload="vectors", **kw).collect()))
-    assert a and a == v
+    a, ca = _range_paths(monkeypatch, vec, qdf, **kw)
+    i, ci = _range_paths(monkeypatch, vec, qdf, REJOIN, **kw)
+    assert (ca, ci) == (True, False)
+    assert a and a == i
 
     # widen to d = 256 by tiling the 16-d vectors x16 (distances scale
-    # by sqrt(16) = 4 -- radius x4): auto routes through the ids re-join
+    # by sqrt(16) = 4 -- radius x4): the default routes through the re-join
     wide = vec.select("vec_id", F.flatten(F.array(*[F.col("embedding")] * 16)).alias("embedding"))
     wq = qdf.select("query_id", F.flatten(F.array(*[F.col("embedding")] * 16)).alias("embedding"))
     kw2 = dict(radius=28.0, n_centroids=8, id_col="vec_id", query_mode="distributed")
-    aw = sorted(map(tuple, ivf_range_join(wide, wq, survivor_payload="auto", **kw2).collect()))
-    iw = sorted(map(tuple, ivf_range_join(wide, wq, survivor_payload="ids", **kw2).collect()))
-    assert aw and aw == iw
+    monkeypatch.undo()
+    aw, caw = _range_paths(monkeypatch, wide, wq, **kw2)
+    vw, cvw = _range_paths(monkeypatch, wide, wq, CARRY, **kw2)
+    assert (caw, cvw) == (False, True)
+    assert aw and aw == vw

@@ -34,7 +34,6 @@ class IndexConfig:
     graph_alpha: float = 1.2        # <=1.0 -> brute-force kNN graph (SegmentBuildService.java:207-209)
     oversample: int = 4
     seed: int = 42
-    normalize_on_read: bool = False  # SearchParams.normalizeOnRead (api/SearchParams.java:16)
     # OPQ (Ge et al. CVPR 2013) — EXTENSION, not in the reference: learn
     # a per-segment orthogonal rotation before the subspace split so PQ's
     # independence assumption fits the data (lower quantization error at
@@ -67,6 +66,7 @@ class IndexConfig:
     @classmethod
     def from_json(cls, s: str) -> "IndexConfig":
         d = json.loads(s)
+        d.pop("normalize_on_read", None)  # retired key: it lives on SearchParams
         d["metric"] = Metric(d["metric"])
         return cls(**d)
 

@@ -59,6 +59,7 @@ from vectorsearch_spark.config import (
     WRITING,
     IndexConfig,
 )
+from vectorsearch_spark.fsio import get_state_fs, write_file_atomic
 from vectorsearch_spark.staging import hadoop_exists
 
 # On-disk layout version, stamped into meta.json at create and checked
@@ -219,7 +220,7 @@ class VectorIndex:
         createOrOpen): open the index at ``path`` if its meta exists —
         validating the requested config against the stored one — else
         create it."""
-        if os.path.exists(f"{path.rstrip('/')}/meta.json"):
+        if get_state_fs().exists(f"{path.rstrip('/')}/meta.json"):
             return cls.open(spark, path, config)
         return cls.create(spark, path, config)
 
@@ -229,8 +230,7 @@ class VectorIndex:
     ) -> "VectorIndex":
         """Open an existing index; like fdb/FdbVectorStore.java:124-166 a
         mismatched requested config raises."""
-        with open(f"{path.rstrip('/')}/meta.json") as f:
-            meta = json.load(f)
+        meta = json.loads(get_state_fs().read_text(f"{path.rstrip('/')}/meta.json"))
         if meta.get("layout", 1) != LAYOUT_VERSION:
             raise ValueError(
                 f"index at {path} has on-disk layout "
@@ -248,8 +248,6 @@ class VectorIndex:
     def _atomic_write_json(path: str, obj) -> None:
         """Marker/metadata publish through the state-FS seam
         (vectorsearch_spark.fsio — atomic co-located replace)."""
-        from vectorsearch_spark.fsio import get_state_fs, write_file_atomic
-
         get_state_fs().makedirs(os.path.dirname(path))
         write_file_atomic(
             os.path.dirname(path), os.path.basename(path), json.dumps(obj)
@@ -305,8 +303,7 @@ class VectorIndex:
 
     def _meta(self) -> dict:
         if self._meta_cache is None:
-            with open(self.meta_path) as f:
-                self._meta_cache = json.load(f)
+            self._meta_cache = json.loads(get_state_fs().read_text(self.meta_path))
         return self._meta_cache
 
     @property
@@ -353,8 +350,9 @@ class VectorIndex:
 
     def _segment_rows(self) -> list[dict]:
         if self._segments_cache is None:
-            with open(self.segments_path) as f:
-                self._segments_cache = json.load(f)
+            self._segments_cache = json.loads(
+                get_state_fs().read_text(self.segments_path)
+            )
         return [dict(r) for r in self._segments_cache]
 
     def update_segment_states(self, updates: dict[int, dict]) -> None:

@@ -189,12 +189,18 @@ def vacuum_segment(
 # A4/M5: compaction planner
 # ---------------------------------------------------------------------------
 
-def score_segments(
-    segments: DataFrame,
-    age_weight: float = 0.2,
-    size_weight: float = 0.5,
-    frag_weight: float = 0.3,
-) -> DataFrame:
+# Planner constants (tasks/MaintenanceService.java:430-529): the score
+# weights of age, size and fragmentation, the share of the segment cap
+# one merge may fill, and the in-flight compaction limit
+# (config/VectorIndexConfig.java:253-256).
+AGE_WEIGHT = 0.2
+SIZE_WEIGHT = 0.5
+FRAG_WEIGHT = 0.3
+BUDGET_FRACTION = 0.8
+MAX_CONCURRENT_COMPACTIONS = 2
+
+
+def score_segments(segments: DataFrame) -> DataFrame:
     """Composite compaction score per segment row — min-max-normalized
     age (older better), size (smaller better), fragmentation (more
     deleted better), the shape of tasks/MaintenanceService.java:430-529.
@@ -215,9 +221,9 @@ def score_segments(
     n_span = max(stats["max_n"] - stats["min_n"], 1)
     return segments.withColumn(
         "score",
-        age_weight * (F.lit(stats["max_age"]) - F.col("created_at_ms")) / F.lit(age_span)
-        + size_weight * (F.lit(stats["max_n"]) - F.col("count")) / F.lit(n_span)
-        + frag_weight
+        AGE_WEIGHT * (F.lit(stats["max_age"]) - F.col("created_at_ms")) / F.lit(age_span)
+        + SIZE_WEIGHT * (F.lit(stats["max_n"]) - F.col("count")) / F.lit(n_span)
+        + FRAG_WEIGHT
         * (
             F.col("deleted_count")
             / F.greatest(F.col("count") + F.col("deleted_count"), F.lit(1))
@@ -226,17 +232,11 @@ def score_segments(
 
 
 def find_compaction_candidates(
-    index: VectorIndex,
-    max_batch: int | None = None,
-    age_weight: float = 0.2,
-    size_weight: float = 0.5,
-    frag_weight: float = 0.3,
-    budget_fraction: float = 0.8,
-    max_concurrent: int = 2,
+    index: VectorIndex, max_batch: int | None = None
 ) -> list[int]:
     """Greedy pick of SEALED segments to merge: min-max-normalized
     composite score (same formula as ``score_segments``), best-first
-    while total live rows fit the budget (budget_fraction of the
+    while total live rows fit the budget (``BUDGET_FRACTION`` of the
     segment cap), require ≥2, throttle by in-flight compactions
     (tasks/MaintenanceService.java:430-557).
 
@@ -247,7 +247,7 @@ def find_compaction_candidates(
     DataFrame scoring op stays as ``score_segments`` (it is the
     oracle-checked ``compaction_plan_scores`` surface)."""
     rows = index._segment_rows()
-    if sum(1 for r in rows if r["state"] == COMPACTING) >= max_concurrent:
+    if sum(1 for r in rows if r["state"] == COMPACTING) >= MAX_CONCURRENT_COMPACTIONS:
         return []
     sealed = [
         r
@@ -264,16 +264,16 @@ def find_compaction_candidates(
     n_span = max(max_n - min_n, 1)
     scored = [
         (
-            age_weight * (max_age - r["created_at_ms"]) / age_span
-            + size_weight * (max_n - r["count"]) / n_span
-            + frag_weight
+            AGE_WEIGHT * (max_age - r["created_at_ms"]) / age_span
+            + SIZE_WEIGHT * (max_n - r["count"]) / n_span
+            + FRAG_WEIGHT
             * (r["deleted_count"] / max(r["count"] + r["deleted_count"], 1)),
             r,
         )
         for r in sealed
     ]
     scored.sort(key=lambda sr: (-sr[0], sr[1]["seg_id"]))
-    budget = int(index.config.max_segment_size * budget_fraction)
+    budget = int(index.config.max_segment_size * BUDGET_FRACTION)
     picked, cum = [], 0
     for _, r in scored:
         cum += r["count"]

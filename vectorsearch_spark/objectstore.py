@@ -129,8 +129,8 @@ crash (dst instead of src), which suits the bucketed epoch layout
 whose replays are idempotent, but not the whole-dir-swap folds whose
 ``restore_swap_backup`` expects roll-back.
 
-Cost model (measured by scripts/objectstore_probe.py): reads add one
-manifest GET per fsio call; a rename of an N-object tree costs
+Cost model (measured; SURVEY.md row "OBJECT-STORE fsio backend"):
+reads add one manifest GET per fsio call; a rename of an N-object tree costs
 3 manifest PUTs + N copies + N deletes. ``swap_dir_in`` performs TWO
 renames (live→old, tmp→live), and the live→old copy is pure backup
 that rmtree immediately discards — at object-store prices a
@@ -295,8 +295,8 @@ class ObjectStoreStateFS:
     """The fsio contract over a ``BlobStore`` — see the module
     docstring for the manifest-commit protocol. Drop-in for
     ``fsio.set_state_fs``; ``stats`` counts store round trips so the
-    protocol's overhead is a measured number
-    (scripts/objectstore_probe.py)."""
+    protocol's overhead is a measured number (SURVEY.md rows
+    "OBJECT-STORE fsio backend" and "MULTI-WRITER manifest")."""
 
     MANIFEST = "_fsio_manifest.json"
 

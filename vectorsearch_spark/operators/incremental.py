@@ -275,7 +275,7 @@ class EpochBucketedState:
         The batch is REPARTITIONED onto the bucket key first (r13):
         Spark's bucketed write emits one file per (task × bucket) —
         without clustering, a 32-task batch × 16 buckets wrote 512
-        files PER EPOCH (measured by scripts/compaction_probe.py; at
+        files PER EPOCH (SURVEY.md row "Compaction benefit, MEASURED"; at
         crawl scale that's millions of state files between
         compactions). Hash-repartitioning by the key into ``buckets``
         partitions aligns tasks with bucket ids (both are

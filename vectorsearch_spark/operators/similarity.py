@@ -951,6 +951,11 @@ def _range_prune_threshold(t: float, rmax_b: float) -> float:
     return t + rmax_b + 1e-12 + 1e-9 * (t + rmax_b)
 
 
+# Dimension from which ivf_range_join's distributed mode re-joins the
+# vectors by id instead of carrying them with every surviving pair.
+IDS_PAYLOAD_MIN_DIM = 256
+
+
 def ivf_range_join(
     vectors: DataFrame,
     queries: DataFrame,
@@ -966,7 +971,6 @@ def ivf_range_join(
     query_mode: str = "auto",
     max_driver_queries: int = 65536,
     block_size: int = 4096,
-    survivor_payload: str = "auto",
 ) -> DataFrame:
     """EXACT radius search with IVF cell pruning — same results as the
     brute ``knn.range_join``, scanning only the cells that can contain
@@ -1006,18 +1010,17 @@ def ivf_range_join(
     (``_range_prune_threshold``), so both return the brute result set
     exactly — bit-identical distances included.
 
-    **survivor_payload** (distributed mode only): ``"vectors"`` ships
-    both vectors with each surviving pair out of the GEMM grid — zero
-    extra joins, 2·d·8 bytes per pair; ``"ids"`` ships bare
-    (query_id, id) pairs and re-joins the payloads by key before the
-    exact re-score — two hash joins, but each vector crosses the
-    shuffle once however many pairs reference it. ``"auto"`` (default)
-    picks ``"ids"`` at d ≥ 256 and ``"vectors"`` below: measured at
-    d=512 with 4.5·10⁵ dense pairs (N=3000 corpus-self radius), ids
-    ran 18 s vs vectors 77 s warm (4.3×) — the per-pair 2·d·8-byte
-    Arrow output dominates everything at large d — while at d=64
-    (bench corpus) the extra joins cost more than the payload saves.
-    Results are bit-identical in all three modes (tested).
+    **Survivor payload** (distributed mode only): below
+    ``IDS_PAYLOAD_MIN_DIM`` dimensions both vectors ride each surviving
+    pair out of the GEMM grid (zero extra joins, 2·d·8 bytes per pair);
+    at or above it the grid emits bare (query_id, id) pairs and
+    re-joins the vectors by key before the exact re-score (two hash
+    joins, but each vector crosses the shuffle once). Measured at d=512
+    with 4.5·10⁵ dense pairs (N=3000 corpus-self radius), the re-join
+    ran 18 s vs 77 s warm (4.3×), because the per-pair Arrow output
+    dominates at large d; at d=64 the extra joins cost more than the
+    payload saves (SURVEY.md, "shuffle-lean GEMM survivors"). Both
+    plans give bit-identical rows (tested).
 
     Build: k-means centroids (driver O(k·d) on a bounded sample),
     codegen cell assignment (``ivf_assign`` — no shuffle), one ≤ k-row
@@ -1030,8 +1033,6 @@ def ivf_range_join(
         raise ValueError("radius must be ≥ 0")
     if query_mode not in ("auto", "driver", "distributed"):
         raise ValueError("query_mode must be auto|driver|distributed")
-    if survivor_payload not in ("auto", "vectors", "ids"):
-        raise ValueError("survivor_payload must be auto|vectors|ids")
     spark = vectors.sparkSession
     empty = spark.createDataFrame(
         [], "query_id long, id long, distance double, score double"
@@ -1182,13 +1183,10 @@ def ivf_range_join(
             routed = scored.where(F.col("_d") <= F.col("_thr")).select(
                 "query_id", "_qvec", "bucket"
             ).localCheckpoint(eager=False)
-        carry = survivor_payload == "vectors" or (
-            survivor_payload == "auto" and cents.shape[1] < 256
-        )
         return _blocked_range_score(
             assigned, routed, vcount, metric, r,
             id_col=id_col, vec_col=vec_col, block_size=block_size,
-            carry_vectors=carry,
+            carry_vectors=d < IDS_PAYLOAD_MIN_DIM,
         )
 
     cand = assigned.join(routed, "bucket")

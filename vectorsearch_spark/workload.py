@@ -4218,7 +4218,7 @@ def compaction_plan_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("vec_id") % 5 == 0, 1).otherwise(0)).alias("deleted_count"),
         F.min("vec_id").alias("created_at_ms"),
     )
-    scored = score_segments(segs, age_weight=0.2, size_weight=0.5, frag_weight=0.3)
+    scored = score_segments(segs)
     return scored.select(
         F.col("seg_id").cast("long").alias("seg_id"),
         F.col("count").cast("long").alias("n_live"),
@@ -6260,10 +6260,11 @@ def pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried full text through all three windows — r12 carries ~40
     bytes/row). The r11 first cut attributed stages with anti joins
     that re-evaluated the pipeline 9× (32 SortMergeJoins, caught by
-    scripts/plan_audit.py); the r12 form is ONE exchange + 3 windows +
-    ZERO joins. Results are hash-exact against the chained SQL oracle,
-    which recomputes all six stages independently — fused-vs-composed
-    equivalence IS the correctness claim.
+    the plan audit; SURVEY.md "Part-3 plan-audit fix"); the r12 form
+    is ONE exchange + 3 windows + ZERO joins. Results are hash-exact
+    against the chained SQL oracle, which recomputes all six stages
+    independently — fused-vs-composed equivalence IS the correctness
+    claim.
 
     Scale: windows key on (url), (host, salt), (host) — the salted
     pre-rank keeps mega-hosts fanned out exactly as host_cap does.
