@@ -284,12 +284,12 @@ def test_corrupt_marker_quarantined_as_uncommitted(tmp_path):
 
     marker = str(tmp_path / "_last_epoch.json")
     open(marker, "w").write('{"epo')  # torn mid-write
-    assert epoch_already_applied(marker, 3, "t") is False
+    assert epoch_already_applied(str(tmp_path), 3) is False
     assert os.path.exists(marker + ".corrupt")
     assert not os.path.exists(marker)
     with pytest.raises(ValueError, match="no committed epoch"):
         committed_epoch(str(tmp_path), "reader")
     # an intact marker still round-trips
     write_file_atomic(str(tmp_path), "_last_epoch.json", '{"epoch": 3}')
-    assert epoch_already_applied(marker, 3, "t") is True
+    assert epoch_already_applied(str(tmp_path), 3) is True
     assert committed_epoch(str(tmp_path), "reader") == 3

@@ -1068,6 +1068,73 @@ def test_epoch_regression_fails_loudly(spark, tmp_path_factory):
         fold_scd2_batch(ch, 1, sstate, "id", ts="ts")
 
 
+# every streaming fold: (module, fold, positional args after state_path,
+# marker dir under the state dir, argument checks that must run BEFORE
+# the replay guard as (bad kwargs, error match))
+_FOLDS = [
+    ("dedup", "fold_dedup_ingest_batch", (), "", []),
+    ("dedup", "fold_passage_dedup_batch", (), "", []),
+    ("dedup", "fold_repeated_spans_batch", (), "",
+     [({"span_tokens": 1}, "span_tokens")]),
+    ("dedup", "fold_line_dedup_batch", (), "", [({"min_docs": 1}, "min_docs")]),
+    ("urls", "fold_url_dedup_batch", (), "", []),
+    ("sketch", "fold_heavy_hitters_batch", ("text",), "", []),
+    ("sketch", "fold_value_histogram_batch", ("v",), "",
+     [({"bins": 1}, "bins"), ({"lo": 1.0, "hi": 0.0}, "lo < hi")]),
+    ("sketch", "fold_group_value_histogram_batch", ("g", "v"), "",
+     [({"bins": 1}, "bins"), ({"lo": 1.0}, "lo < hi")]),
+    ("sketch", "fold_distinct_count_batch", ("doc_id",), "", [({"lgk": 3}, "lgk")]),
+    ("sketch", "fold_group_heavy_hitters_batch", ("g", "text"), "",
+     [({"capacity": 0}, "capacity")]),
+    ("sketch", "fold_group_distinct_count_batch", ("g", "doc_id"), "",
+     [({"lgk": 22}, "lgk")]),
+    ("incremental", "fold_rollup_batch", (["g"], "v"), "", []),
+    ("incremental", "fold_scd2_batch", ("doc_id",), "dim", []),
+]
+
+
+@pytest.mark.parametrize(
+    "module,fold,args,marker_dir,bad_args", _FOLDS, ids=[f[1] for f in _FOLDS]
+)
+def test_fold_replay_guard(
+    spark, tmp_path, module, fold, args, marker_dir, bad_args
+):
+    """Every fold shares one replay/regression guard: against a state
+    whose committed epoch is 2, epoch 2 is a no-op that leaves the state
+    dir untouched, epoch 1 raises, and an invalid argument raises even
+    on the replayed epoch (argument checks run before the guard). No
+    fold body runs, so the replay launches no Spark job."""
+    import importlib
+    import json
+    import os
+
+    from tests.jobs import jobs_launched
+
+    fn = getattr(importlib.import_module(f"vectorsearch_spark.operators.{module}"), fold)
+    state = str(tmp_path / "state")
+    os.makedirs(os.path.join(state, marker_dir))
+    with open(os.path.join(state, marker_dir, "_last_epoch.json"), "w") as fh:
+        json.dump({"epoch": 2}, fh)
+
+    def listing() -> list:
+        return sorted(
+            (os.path.relpath(d, state), sorted(fs)) for d, _, fs in os.walk(state)
+        ) + sorted(os.listdir(tmp_path))
+
+    batch = spark.createDataFrame(
+        [(1, "a b c", "x", 1.0)], "doc_id long, text string, g string, v double"
+    )
+    before = listing()
+    assert jobs_launched(spark, lambda: fn(batch, 2, state, *args)) == (None, 0)
+    assert listing() == before
+    with pytest.raises(ValueError, match="epoch regression"):
+        fn(batch, 1, state, *args)
+    for bad, match in bad_args:
+        with pytest.raises(ValueError, match=match):
+            fn(batch, 2, state, *args, **bad)
+    assert listing() == before
+
+
 def test_stream_passage_dedup_folds_equal_batch_operator(spark, tmp_path_factory):
     """Streaming passage dedup: 3 micro-batches with cross-batch
     repeated passages — the folded accepted state must be ROW-IDENTICAL

@@ -161,7 +161,10 @@ def epoch_ids(root: str, *, below: "int | None" = None,
     """Epoch ids of ``epoch=N`` child dirs under ``root`` (sorted),
     optionally bounded strictly ``below`` / inclusively ``at_most`` —
     the shared partition-discovery read of every fold. [] when the
-    root doesn't exist yet (empty state)."""
+    root doesn't exist yet (empty state). A fold reads its prior state
+    with ``below=epoch_id``, never ``epoch_id`` itself: a crashed
+    attempt's partial dir for the CURRENT epoch must not feed its own
+    replay."""
     fs = get_state_fs()
     out = []
     for d in fs.listdir(root):

@@ -40,7 +40,6 @@ from __future__ import annotations
 import itertools
 import json
 import os
-import tempfile
 import time
 from dataclasses import dataclass
 

@@ -23,11 +23,21 @@ Scale design, per operator:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearch_spark.functions.distances import cosine
-from vectorsearch_spark.functions.text import word_shingles
+from vectorsearch_spark.fsio import epoch_dirs
+from vectorsearch_spark.operators.incremental import (
+    EpochBucketedState,
+    commit_epoch,
+    committed_epoch,
+    epoch_already_applied,
+    source_snapshot,
+    start_fold_stream,
+)
 from vectorsearch_spark.operators.text import hamming64, simhash_fingerprints
 
 # MinHash affine-family modulus: 2³¹−1 (prime). Family member i of a
@@ -864,25 +874,13 @@ def fold_dedup_ingest_batch(
     LSH-match an accepted corpus doc at ≥ threshold, or a SMALLER-id
     doc within the same batch (the min-id keeper convention).
 
-    Exactly-once: corpus reads filter to ``epoch < epoch_id``, so a
-    crashed attempt's own partial epoch dirs are invisible to its
-    replay (a batch can never collide with itself); the per-epoch dirs
-    rewrite idempotently (mode=overwrite, deterministic content); the
-    applied-epoch marker commits last via atomic rename. A replay
-    after the marker committed is skipped outright.
+    Exactly-once by the fold protocol in ``operators/incremental.py``; reading only
+    earlier epochs also means a batch never collides with itself.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-    )
-
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return  # replayed epoch: already folded in
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
 
     sh_b = _shingle_df(batch, id_col, text_col, shingle_n).localCheckpoint(
         eager=False
@@ -890,14 +888,10 @@ def fold_dedup_ingest_batch(
     bk_b = _cap_band_freq(_minhash_buckets(sh_b, num_hashes, bands), max_band_freq)
 
     def _epochs(sub: str) -> list[str]:
-        from vectorsearch_spark.fsio import epoch_dirs
-
         return epoch_dirs(os.path.join(state_path, sub), below=epoch_id)
 
     bk_state = None
     if state_buckets:
-        from vectorsearch_spark.operators.incremental import EpochBucketedState
-
         bk_state = EpochBucketedState(
             spark, state_path, "buckets",
             "`doc_id` BIGINT, `band_key` STRING", "band_key", state_buckets,
@@ -997,20 +991,12 @@ def stream_dedup_ingest(
     """Keep a deduplicated corpus current from a document stream (see
     ``fold_dedup_ingest_batch``). Returns the StreamingQuery; the
     accepted corpus is ``spark.read.parquet(f"{state_path}/accepted")``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_dedup_ingest_batch(batch_df, epoch_id, state_path, **kwargs)
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        docs,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_dedup_ingest_batch(
+            batch_df, epoch_id, state_path, **kwargs
+        ),
     )
 
 
@@ -1046,27 +1032,14 @@ def fold_passage_dedup_batch(
     corpus check is a left-anti join keyed on chunk_text against the
     persisted chunk dirs — corpus TEXT is never re-chunked.
 
-    Exactly-once: corpus reads filter ``epoch < epoch_id`` so a crashed
-    attempt's own partial dirs are invisible to its replay; epoch dirs
-    rewrite idempotently (deterministic content, mode=overwrite); the
-    applied-epoch marker commits last via atomic rename, an exact
-    replay is skipped, and an epoch REGRESSION (fresh checkpoint
-    against old state) raises (the r6 guard shared with the doc-level
-    ingest above).
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
     """
-    import os
-
     from vectorsearch_spark.operators.curate import chunk_documents
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-    )
 
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return  # replayed epoch: already folded in
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
 
     chunks = chunk_documents(
         batch, chunk_tokens=chunk_tokens, stride=chunk_tokens,
@@ -1082,15 +1055,11 @@ def fold_passage_dedup_batch(
     # O(batch) as the accumulated corpus grows (incremental.py).
     corpus_ch = None
     if state_buckets:
-        from vectorsearch_spark.operators.incremental import EpochBucketedState
-
         corpus_ch = EpochBucketedState(
             spark, state_path, "chunks", "`chunk_text` STRING",
             "chunk_text", state_buckets,
         ).read_before(epoch_id)
     else:
-        from vectorsearch_spark.fsio import epoch_dirs
-
         dirs = epoch_dirs(os.path.join(state_path, "chunks"), below=epoch_id)
         if dirs:
             corpus_ch = spark.read.schema("chunk_text string").parquet(*dirs)
@@ -1135,8 +1104,6 @@ def fold_passage_dedup_batch(
     ep = f"epoch={int(epoch_id)}"
     out.write.mode("overwrite").parquet(os.path.join(state_path, "accepted", ep))
     if state_buckets:
-        from vectorsearch_spark.operators.incremental import EpochBucketedState
-
         EpochBucketedState(
             spark, state_path, "chunks", "`chunk_text` STRING",
             "chunk_text", state_buckets,
@@ -1158,20 +1125,12 @@ def stream_passage_dedup(
     (see ``fold_passage_dedup_batch``). Returns the StreamingQuery;
     the accepted per-doc stats are
     ``spark.read.parquet(f"{state_path}/accepted")``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_passage_dedup_batch(batch_df, epoch_id, state_path, **kwargs)
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        docs,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_passage_dedup_batch(
+            batch_df, epoch_id, state_path, **kwargs
+        ),
     )
 
 
@@ -1210,14 +1169,8 @@ def fold_repeated_spans_batch(
     scan/shuffle of the persisted gram hashes (32 B each — the hash
     column only, never corpus text) for the membership join.
 
-    Exactly-once: state reads filter ``epoch < epoch_id`` (a crashed
-    attempt's own partial dirs are invisible to its replay), epoch
-    dirs rewrite idempotently, the applied-epoch marker commits last
-    via atomic rename, and an epoch REGRESSION raises (the shared
-    guard).
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
     """
-    import os
-
     from vectorsearch_spark.operators.curate import (
         _gram_slide,
         _mark_occurrences,
@@ -1225,18 +1178,13 @@ def fold_repeated_spans_batch(
         _span_report,
         _tokenized_base,
     )
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-    )
 
     if span_tokens < 2:
         raise ValueError("span_tokens must be ≥ 2")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return  # replayed epoch: already folded in
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
 
     # batch/streaming parity depends on byte-identical tokenization,
     # gram hashing, and interval merging — so this fold compiles from
@@ -1244,8 +1192,6 @@ def fold_repeated_spans_batch(
     # only the state-membership join between mark and merge
     base = _tokenized_base(batch, id_col, text_col)
     grams = _gram_slide(base, span_tokens, id_col)
-
-    from vectorsearch_spark.fsio import epoch_dirs
 
     dirs = epoch_dirs(os.path.join(state_path, "grams"), below=epoch_id)
     marked = _mark_occurrences(grams, id_col)
@@ -1288,20 +1234,12 @@ def stream_repeated_spans(
     stream (see ``fold_repeated_spans_batch``). Returns the
     StreamingQuery; the per-doc span maps are
     ``spark.read.parquet(f"{state_path}/spans")``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_repeated_spans_batch(batch_df, epoch_id, state_path, **kwargs)
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        docs,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_repeated_spans_batch(
+            batch_df, epoch_id, state_path, **kwargs
+        ),
     )
 
 
@@ -1345,33 +1283,21 @@ def fold_line_dedup_batch(
     revised (no crossings ⇒ no prior text is read beyond the
     semi-join probe).
 
-    Exactly-once: state reads filter ``epoch < epoch_id`` (a crashed
-    attempt's partial dirs are invisible to its replay), epoch dirs
-    rewrite idempotently, the applied-epoch marker commits last via
-    atomic rename, and an epoch regression raises (the shared guard).
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
     """
-    import os
-
     from vectorsearch_spark.operators.curate import _line_doc_counts, _line_report, _line_rows
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-    )
 
     if min_docs < 2:
         raise ValueError("min_docs must be ≥ 2")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return  # replayed epoch: already folded in
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
 
     bl = _line_rows(batch, id_col, text_col).localCheckpoint(eager=False)
     batch_counts = _line_doc_counts(bl, id_col).withColumnRenamed("__nd", "__nd_b")
 
     def _dirs(sub: str) -> "list[str]":
-        from vectorsearch_spark.fsio import epoch_dirs
-
         return epoch_dirs(os.path.join(state_path, sub), below=epoch_id)
 
     # state_buckets (r12): keycounts is THE per-fold O(state) exchange
@@ -1382,8 +1308,6 @@ def fold_line_dedup_batch(
     # shuffle (incremental.py).
     kc_state = None
     if state_buckets:
-        from vectorsearch_spark.operators.incremental import EpochBucketedState
-
         kc_state = _keycounts_state(spark, state_path, state_buckets)
     prior_rows = (
         kc_state.read_before(epoch_id)
@@ -1455,15 +1379,9 @@ def read_line_dedup_state(spark, state_path: str, id_col: str = "doc_id") -> Dat
     """The folded line-dedup view: the LATEST span row per doc across
     COMMITTED epochs (later epochs carry retroactive revisions — see
     ``fold_line_dedup_batch``). Only epoch dirs at or below the
-    ``_last_epoch.json`` marker are read: a crashed fold's
+    committed marker are read: a crashed fold's
     partially-written dir stays invisible to external readers until the
     replay overwrites it (the exactly-once contract)."""
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
-    from vectorsearch_spark.fsio import epoch_dirs
-
     committed = committed_epoch(state_path, "read_line_dedup_state")
     root = os.path.join(state_path, "spans")
     dirs = epoch_dirs(root, at_most=committed)
@@ -1481,8 +1399,6 @@ def _keycounts_state(spark, state_path: str, state_buckets: int):
     ``__nd_b`` across epochs), declared via ``sum_cols`` so compaction
     takes the staged-swap path — the append-only set merge would
     double-count (incremental.py compact_epochs)."""
-    from vectorsearch_spark.operators.incremental import EpochBucketedState
-
     return EpochBucketedState(
         spark, state_path, "keycounts",
         "`__key` STRING, `__nd_b` BIGINT", "__key", state_buckets,
@@ -1518,16 +1434,11 @@ def stream_line_dedup(
     partition (``compact_line_keycounts`` — the additive staged-swap
     path), bounding the fold's state-partition count on a long-lived
     stream."""
-    import os
-
     if compact_every and not kwargs.get("state_buckets"):
         raise ValueError(
             "compact_every requires state_buckets (compaction operates "
             "on the bucketed keycounts layout)"
         )
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         fold_line_dedup_batch(batch_df, epoch_id, state_path, **kwargs)
@@ -1537,9 +1448,4 @@ def stream_line_dedup(
                 batch_df.sparkSession, state_path, sb, int(epoch_id)
             )
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold_stream(docs, checkpoint, _apply)

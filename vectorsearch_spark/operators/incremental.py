@@ -16,29 +16,77 @@ Append-only by construction: min/max are NOT retractable monoids — a
 deletion/update in the base requires re-aggregating the affected
 groups (the documented limitation of every min/max materialized view;
 count/sum alone would admit retraction via negative weights).
+
+The exactly-once fold protocol
+------------------------------
+Every streaming fold in this package (the ``fold_*_batch`` functions
+here and in ``dedup.py``, ``sketch.py`` and ``urls.py``) is a
+``foreachBatch`` body that Spark may replay after a crash. It is the
+batch form of the reference's idempotent task re-claim
+(tasks/SegmentBuildWorker.java:49-53), and every fold follows the same
+steps, all defined in this module:
+
+1. Argument checks first, so a bad config raises even on a replayed
+   epoch.
+2. ``epoch_already_applied(state_path, epoch_id)``: the guard. It
+   reads the committed epoch from the ``MARKER`` file in the state dir.
+   The committed epoch itself is a replay and is skipped. An older one
+   raises "epoch regression": a fresh checkpoint dir restarts epoch ids
+   at 0 against existing state, and skipping those would silently drop
+   every batch. A torn marker is quarantined and reads as uncommitted.
+3. ``source_snapshot(batch_df)``: a stream source is single-pass, so a
+   fold that reads its batch more than once works from this snapshot.
+4. Per-epoch state is written as ``epoch=<id>`` dirs, rewritten
+   idempotently (mode=overwrite, deterministic content). Prior state is
+   read only from epochs strictly below ``epoch_id``
+   (``fsio.epoch_ids(below=)``), so a crashed attempt's partial dirs
+   never feed its own replay.
+5. ``commit_epoch(dir, epoch_id)`` publishes the marker last, by
+   atomic replace. A crash before it leaves the previous marker, and
+   the replay rewrites the same epoch dirs. The two whole-dir folds
+   (``fold_rollup_batch``, ``fold_scd2_batch``) commit into their
+   staged dir instead, so marker and content swap in by one rename
+   (``fsio.swap_dir_in``; ``restore_swap_backup`` runs before the
+   guard).
+
+External readers load only epochs at or below ``committed_epoch``.
+``start_fold_stream`` runs a fold over a stream until its source is
+drained. The streaming index ingest (``streaming/ingest.py``) keeps its
+own write-ahead-intent protocol.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearch_spark.fsio import (
+    epoch_ids,
+    get_state_fs,
+    restore_swap_backup,
+    swap_dir_in,
+    write_file_atomic,
+)
+
 STATE_COLS = ("n_rows", "total", "vmin", "vmax")
 
+# the applied-epoch marker every fold commits last into its state dir
+MARKER = "_last_epoch.json"
 
-def _load_marker(marker: str) -> "int | None":
-    """The committed epoch id in ``marker``, or None when the marker is
+
+def _load_marker(state_path: str) -> "int | None":
+    """The epoch committed at ``state_path``, or None when its marker is
     missing OR unreadable. An unparseable marker (power-loss partial
     write on a filesystem that reordered the data/rename syncs — r13
     ADVICE) is quarantined to ``<marker>.corrupt`` and treated as "not
     committed": every fold's epoch write is idempotent, so replaying
     the uncommitted epoch is the safe recovery, while crashing on
     json.loads would wedge the stream permanently."""
-    import json
-
-    from vectorsearch_spark.fsio import get_state_fs
-
     fs = get_state_fs()
+    marker = os.path.join(state_path, MARKER)
     if not fs.exists(marker):
         return None
     try:
@@ -48,13 +96,11 @@ def _load_marker(marker: str) -> "int | None":
         return None
 
 
-def epoch_already_applied(marker: str, epoch_id: int, state_desc: str) -> bool:
-    """True iff ``epoch_id`` is the already-committed last epoch (a
-    foreachBatch replay — skip it). Raises on epoch REGRESSION: a fresh
-    checkpoint dir restarts epoch ids at 0, and treating those as
-    replays would silently drop every batch against existing state
-    (checkpoint and state lifetimes are coupled — fail loudly)."""
-    last = _load_marker(marker)
+def epoch_already_applied(state_path: str, epoch_id: int) -> bool:
+    """The fold guard: True iff ``epoch_id`` is the epoch already
+    committed at ``state_path`` (a foreachBatch replay — skip it).
+    Raises on epoch REGRESSION (see the module docstring)."""
+    last = _load_marker(state_path)
     if last is None:
         return False
     if last == epoch_id:
@@ -62,38 +108,29 @@ def epoch_already_applied(marker: str, epoch_id: int, state_desc: str) -> bool:
     if epoch_id < last:
         raise ValueError(
             f"epoch regression: batch epoch {epoch_id} < committed epoch "
-            f"{last} at {state_desc} — the stream checkpoint was reset "
+            f"{last} at {state_path} — the stream checkpoint was reset "
             "against existing state; clear the state dir or restore the "
             "original checkpoint dir"
         )
     return False
 
 
-def prior_epochs(root: str, epoch_id: int) -> "list[int]":
-    """Epoch ids already written under ``root`` (epoch=N dirs) that are
-    strictly older than ``epoch_id`` — the shared state-read preamble of
-    every fold (read the max of these, never ``epoch_id`` itself: a
-    crashed attempt's partial dir for the CURRENT epoch must not feed
-    its own replay)."""
-    from vectorsearch_spark.fsio import epoch_ids
-
-    return epoch_ids(root, below=epoch_id)
+def source_snapshot(batch_df: DataFrame) -> DataFrame:
+    """The single-pass stream head: an eager local checkpoint of the
+    micro-batch, for a fold that reads its batch more than once."""
+    return batch_df.localCheckpoint()
 
 
 def commit_epoch(state_path: str, epoch_id: int) -> None:
     """Marker-commits-last: atomically publish ``epoch_id`` as the
-    committed epoch (fsio.write_file_atomic — co-located temp +
-    atomic replace) — the final step of every fold's exactly-once
-    protocol (state dirs written first; a crash before this leaves the
-    previous marker, so readers and replays never see the partial
-    epoch)."""
-    import json
-
-    from vectorsearch_spark.fsio import write_file_atomic
-
-    write_file_atomic(
-        state_path, "_last_epoch.json", json.dumps({"epoch": int(epoch_id)})
-    )
+    epoch committed at ``state_path`` (fsio.write_file_atomic —
+    co-located temp + atomic replace). The only writer of the marker.
+    Creates ``state_path`` if no state write did; the swap folds call it
+    on their staged dir, never on the live one, where an empty
+    pre-created dir would hide a complete ``.old`` from
+    ``restore_swap_backup``."""
+    get_state_fs().makedirs(state_path)
+    write_file_atomic(state_path, MARKER, json.dumps({"epoch": int(epoch_id)}))
 
 
 def committed_epoch(state_path: str, reader: str) -> int:
@@ -102,13 +139,22 @@ def committed_epoch(state_path: str, reader: str) -> int:
     quarantined as unreadable). Readers must load ONLY this epoch's
     dirs (the crash-window contract applies to external reads, not
     just replays)."""
-    import os
-
-    marker = os.path.join(state_path, "_last_epoch.json")
-    last = _load_marker(marker)
+    last = _load_marker(state_path)
     if last is None:
         raise ValueError(f"{reader}: no committed epoch at {state_path}")
     return last
+
+
+def start_fold_stream(df: DataFrame, checkpoint: str, apply):
+    """Run ``apply(batch_df, epoch_id)`` — a fold — over every
+    micro-batch of ``df`` until the source is drained; returns the
+    StreamingQuery."""
+    return (
+        df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _split_ddl(schema_ddl: str) -> "list[str]":
@@ -174,8 +220,6 @@ class EpochBucketedState:
         """The on-disk location of substore ``name`` under a state dir
         — THE single source of the layout's naming scheme (r12 ADVICE:
         urls._frontier_table re-derived it independently)."""
-        import os
-
         return os.path.join(state_path, f"{name}_bucketed")
 
     @staticmethod
@@ -238,8 +282,6 @@ class EpochBucketedState:
         yet. Always finishes a committed-but-interrupted compaction
         FIRST — every read and write path flows through here, so no
         reader can observe the mid-swap partition gap."""
-        from vectorsearch_spark.fsio import get_state_fs
-
         if self.spark.catalog.tableExists(self.table):
             self._finish_compact()
             return True
@@ -307,18 +349,12 @@ class EpochBucketedState:
         self.spark.catalog.dropTempView(v)
 
     def _live_epochs(self) -> "list[int]":
-        from vectorsearch_spark.fsio import epoch_ids
-
         return epoch_ids(self.loc)
 
     def _drop_partition(self, e: int) -> None:
         """Catalog first, then dir (never the reverse — a catalog entry
         pointing at a deleted dir breaks scans; an orphan dir without a
         catalog entry is invisible until an MSCK)."""
-        import os
-
-        from vectorsearch_spark.fsio import get_state_fs
-
         self.spark.sql(
             f"ALTER TABLE {self.table} DROP IF EXISTS PARTITION (epoch={e})"
         )
@@ -401,10 +437,6 @@ class EpochBucketedState:
             return
 
         # additive: stage merged sums durably, then marker-gated swap
-        import json
-
-        from vectorsearch_spark.fsio import write_file_atomic
-
         if not any(e <= upto for e in self._live_epochs()):
             return
         group_cols = [c for c in self.cols if c not in self.sum_cols]
@@ -419,8 +451,6 @@ class EpochBucketedState:
         # target partition dir's parent and LOGS a FileNotFoundException
         # stack (harmless but noisy) when the external location has
         # never been written
-        from vectorsearch_spark.fsio import get_state_fs
-
         get_state_fs().makedirs(stage_loc)
         if not self.spark.catalog.tableExists(stage_table):
             ddl_cols = ", ".join(f"`{c}` {self._types[c]}" for c in self.cols)
@@ -448,11 +478,6 @@ class EpochBucketedState:
         """Complete (or recover) a marker-committed additive
         compaction — see ``compact_epochs``. Idempotent; no-op without
         a pending marker."""
-        import json
-        import os
-
-        from vectorsearch_spark.fsio import get_state_fs
-
         fs = get_state_fs()
         marker = os.path.join(self.loc, "_compact_commit.json")
         if not fs.exists(marker):
@@ -575,22 +600,15 @@ def maintain_rollup_stream(
     groups|) per batch, never a rescan of history). Returns the
     StreamingQuery; read the live view any time with
     ``finalize_rollup(spark.read.parquet(state_path), keys)``.
-
-    Exactly-once: foreachBatch can replay a batch after a crash, and
-    a blind re-merge would double-count it. The state write is staged
-    (tmp dir + atomic rename) and the LAST APPLIED batch id rides a
-    marker file inside the state dir — a replayed epoch is detected
-    and skipped, the same intent/guard discipline as the streaming
-    index ingest (streaming/ingest.py).
+    Exactly-once by the fold protocol (module docstring): a blind
+    re-merge of a replayed batch would double-count it.
     """
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_rollup_batch(batch_df, epoch_id, state_path, keys, value_col)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        events,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_rollup_batch(
+            batch_df, epoch_id, state_path, keys, value_col
+        ),
     )
 
 
@@ -605,22 +623,12 @@ def fold_rollup_batch(
     crash-injection testing): staged write + atomic rename with the
     applied-epoch marker riding inside the renamed dir (fsio
     swap_dir_in / restore_swap_backup)."""
-    import json
-    import os
-
-    from vectorsearch_spark.fsio import (
-        get_state_fs,
-        restore_swap_backup,
-        swap_dir_in,
-    )
-
     fs = get_state_fs()
     spark = batch_df.sparkSession
     # crash recovery: a crash between the two renames leaves no
     # live state but a complete .old — restore it before anything
     restore_swap_backup(state_path)
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return  # replayed epoch: already folded in
     delta = rollup_state(batch_df, keys, value_col)
     if fs.exists(os.path.join(state_path, "_SUCCESS")):
@@ -634,12 +642,8 @@ def fold_rollup_batch(
     # the applied-epoch marker rides INSIDE the renamed dir, so
     # state content and marker swap in the same atomic rename — a
     # crash can never pair new state with an old marker (which a
-    # replay would double-merge); it goes through the seam (not raw
-    # open) so an object-store backend PUTs it like any other state
-    # object
-    from vectorsearch_spark.fsio import write_file_atomic
-
-    write_file_atomic(tmp, "_last_epoch.json", json.dumps({"epoch": int(epoch_id)}))
+    # replay would double-merge)
+    commit_epoch(tmp, epoch_id)
     swap_dir_in(tmp, state_path)
 
 
@@ -674,33 +678,20 @@ def fold_scd2_batch(
     ``dim/`` by key bucket and rewrite touched buckets only (the
     merge_upsert shape) without changing these semantics.
 
-    Exactly-once: the applied-epoch marker rides inside the staged
-    ``dim`` dir, swapped by the same atomic rename as the content (a
-    replayed foreachBatch epoch is detected and skipped BEFORE any
-    write; a crash after the changelog-epoch write but before the dim
-    swap replays into an idempotent overwrite of the same epoch dir);
-    a crash between the two renames restores from ``.old`` — the
-    ``fold_rollup_batch`` discipline.
+    Exactly-once by the fold protocol (module docstring), with the
+    marker in the staged ``dim`` dir as for ``fold_rollup_batch``: a
+    crash after the changelog-epoch write but before the dim swap
+    replays into an idempotent overwrite of the same epoch dir.
     """
-    import json
-    import os
-
-    from vectorsearch_spark.fsio import (
-        get_state_fs,
-        restore_swap_backup,
-        swap_dir_in,
-    )
+    from vectorsearch_spark.operators.events import changelog_to_scd2
 
     fs = get_state_fs()
     spark = batch_df.sparkSession
-    from vectorsearch_spark.operators.events import changelog_to_scd2
-
     dim_path = os.path.join(state_path, "dim")
     restore_swap_backup(dim_path)
-    marker = os.path.join(dim_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, dim_path):
+    if epoch_already_applied(dim_path, epoch_id):
         return  # replayed epoch: already folded in
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
     clog_root = os.path.join(state_path, "changelog")
     epoch_dir = os.path.join(clog_root, f"epoch={int(epoch_id)}")
     batch.write.mode("overwrite").parquet(epoch_dir)  # idempotent on replay
@@ -718,9 +709,7 @@ def fold_scd2_batch(
     tmp = dim_path + ".tmp"
     fs.rmtree(tmp)
     scd_out.write.mode("overwrite").parquet(tmp)
-    from vectorsearch_spark.fsio import write_file_atomic
-
-    write_file_atomic(tmp, "_last_epoch.json", json.dumps({"epoch": int(epoch_id)}))
+    commit_epoch(tmp, epoch_id)
     swap_dir_in(tmp, dim_path)
 
 
@@ -735,12 +724,10 @@ def stream_scd2_maintain(
     """Keep a persistent SCD2 dimension current from a streaming
     changelog (see ``fold_scd2_batch``). Returns the StreamingQuery;
     read the live dimension any time from ``{state_path}/dim``."""
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_scd2_batch(batch_df, epoch_id, state_path, on, ts=ts, tiebreak=tiebreak)
-
-    return (
-        changelog.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        changelog,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_scd2_batch(
+            batch_df, epoch_id, state_path, on, ts=ts, tiebreak=tiebreak
+        ),
     )

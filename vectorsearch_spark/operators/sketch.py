@@ -36,10 +36,19 @@ audits, stop-lists, and skew guards for token-keyed shuffles.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from vectorsearch_spark.fsio import epoch_ids
+from vectorsearch_spark.operators.incremental import (
+    commit_epoch,
+    committed_epoch,
+    epoch_already_applied,
+    start_fold_stream,
+)
 
 
 def _mg_fold(counters: dict, add: dict, capacity: int) -> dict:
@@ -216,21 +225,10 @@ def fold_heavy_hitters_batch(
     stream is gone — so reads return ESTIMATES with honest bounds
     (``read_heavy_hitters_state``): est ≤ true ≤ est + N/(cap+1).
 
-    Exactly-once: epoch-filtered state read + idempotent epoch-dir
-    rewrite + marker-commits-last + the shared regression guard
-    (``incremental.epoch_already_applied``).
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     # the batch is consumed by exactly ONE action (the summary pass),
@@ -246,7 +244,7 @@ def fold_heavy_hitters_batch(
 
     # prior state: the LATEST committed epoch's summary (tiny)
     root = os.path.join(state_path, "summary")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     counters: dict = {}
     total = 0
     if prior_eps:
@@ -285,15 +283,11 @@ def read_heavy_hitters_state(spark, state_path: str, k: int = 20) -> DataFrame:
     [est, ub] for every item, including items absent from the summary
     (whose est is implicitly 0).
 
-    Reads the COMMITTED epoch from ``_last_epoch.json`` (the fold's
+    Reads the COMMITTED epoch from the marker (the fold's
     marker-commits-last protocol), never the max epoch dir on disk — a
     crashed fold's partially-written dir must stay invisible until its
     replay overwrites it (the exactly-once contract applies to external
     readers too)."""
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
     committed = committed_epoch(state_path, "read_heavy_hitters_state")
     root = os.path.join(state_path, "summary")
     rows = spark.read.schema(
@@ -325,20 +319,12 @@ def stream_heavy_hitters(
     """Keep a bounded heavy-hitters summary current from a stream (see
     ``fold_heavy_hitters_batch``). Returns the StreamingQuery; read the
     estimates with ``read_heavy_hitters_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_heavy_hitters_batch(batch_df, epoch_id, state_path, col, **kwargs)
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        docs,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_heavy_hitters_batch(
+            batch_df, epoch_id, state_path, col, **kwargs
+        ),
     )
 
 
@@ -405,28 +391,18 @@ def fold_value_histogram_batch(
     keys (map-side combine collapses per partition), never a per-value
     buffer: the same 100 TB stance as ``exact_quantiles`` (which is the
     exact BATCH answer; this is the mergeable STREAMING one).
-    Exactly-once via the shared epoch protocol: epoch-filtered state
-    read, idempotent epoch-dir rewrite, marker-commits-last, shared
-    regression guard. Non-finite values (NULL/NaN/±Inf) are excluded —
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
+    Non-finite values (NULL/NaN/±Inf) are excluded —
     NaN is unorderable and ±Inf has no bin (it would overflow the grid
     arithmetic) — the exact_quantiles stance.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     if bins < 2:
         raise ValueError("bins must be ≥ 2")
     fixed = lo is not None or hi is not None
     if fixed and (lo is None or hi is None or not float(lo) < float(hi)):
         raise ValueError("fixed-range mode needs lo < hi")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     v = F.col(col).cast("double")
@@ -469,7 +445,7 @@ def fold_value_histogram_batch(
         "origin double, gmin double, gmax double, bins int, fixed boolean"
     )
     root = os.path.join(state_path, "hist")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     counts: dict = {}
     total = 0
     w0 = width = gmin = gmax = None
@@ -579,9 +555,6 @@ def read_quantile_state(spark, state_path: str, probs: "list[float]") -> DataFra
     contract). Reads only the COMMITTED epoch (the marker protocol —
     crashed folds stay invisible)."""
     import math
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
 
     if not probs or not all(0.0 < p <= 1.0 for p in probs):
         raise ValueError("probs must be non-empty, each in (0, 1]")
@@ -629,20 +602,12 @@ def stream_value_histogram(
     """Keep a bounded quantile histogram current from a stream (see
     ``fold_value_histogram_batch``). Returns the StreamingQuery; read
     estimates with ``read_quantile_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_value_histogram_batch(batch_df, epoch_id, state_path, col, **kwargs)
-
-    return (
-        values.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        values,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_value_histogram_batch(
+            batch_df, epoch_id, state_path, col, **kwargs
+        ),
     )
 
 
@@ -674,26 +639,17 @@ def fold_group_value_histogram_batch(
     count — either way the shuffle tracks ≤ |groups|·bins keys with
     map-side combine, never a per-value buffer. Rows with a NULL group
     are excluded (like non-finite values — NULL/NaN/±Inf: not
-    attributable / not bin-able). Exactly-once via the shared epoch
-    protocol; bins/range-mode drift across a state's lifetime raises.
+    attributable / not bin-able). Exactly-once by the fold protocol
+    (``operators/incremental.py``); bins/range-mode drift across a state's lifetime raises.
     Read with ``read_group_quantile_state``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     if bins < 2:
         raise ValueError("bins must be ≥ 2")
     fixed = lo is not None or hi is not None
     if fixed and (lo is None or hi is None or not float(lo) < float(hi)):
         raise ValueError("fixed-range mode needs lo < hi")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     v = F.col(col).cast("double")
@@ -753,7 +709,7 @@ def fold_group_value_histogram_batch(
         "origin double, gmin double, gmax double, bins int, fixed boolean"
     )
     root = os.path.join(state_path, "hist")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     # per-group state: {g: {"counts": {bin: c}, "total", "w0", "width",
     # "gmin", "gmax"}}
     state: dict = {}
@@ -879,9 +835,6 @@ def read_group_quantile_state(
     Driver-side walk over ≤ |groups|·(bins+1) committed rows — bounded
     by the |groups| contract. Reads only the COMMITTED epoch."""
     import math
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
 
     if not probs or not all(0.0 < p <= 1.0 for p in probs):
         raise ValueError("probs must be non-empty, each in (0, 1]")
@@ -938,22 +891,12 @@ def stream_group_value_histogram(
     """Keep per-group quantile histograms current from a stream (see
     ``fold_group_value_histogram_batch``). Returns the StreamingQuery;
     read estimates with ``read_group_quantile_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_group_value_histogram_batch(
+    return start_fold_stream(
+        values,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_group_value_histogram_batch(
             batch_df, epoch_id, state_path, group_col, col, **kwargs
-        )
-
-    return (
-        values.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -989,23 +932,14 @@ def fold_distinct_count_batch(
     error ≈ 1.04/sqrt(2^lgk) (~1.6% at lgk=12); both regimes are
     deterministic in (values, lgk), which is what the degenerate-exact
     oracle twin pins. NULLs are excluded (not a value). Exactly-once
-    via the shared epoch protocol; ``lgk`` drift across a state's
+    by the fold protocol (``operators/incremental.py``); ``lgk`` drift across a state's
     lifetime raises (sketch configs must match to union losslessly).
     Read with ``read_distinct_count_state``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     if not 4 <= int(lgk) <= 21:
         raise ValueError("lgk must be in [4, 21]")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     vals = batch_df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
@@ -1017,7 +951,7 @@ def fold_distinct_count_batch(
 
     SCHEMA = "sketch binary, total long, lgk int"
     root = os.path.join(state_path, "sketch")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     sketch, total = None, 0
     if prior_eps:
         prev = spark.read.schema(SCHEMA).parquet(
@@ -1056,12 +990,8 @@ def read_distinct_count_state(spark, state_path: str) -> DataFrame:
     """(n_distinct, total) from the folded sketch: the HLL estimate
     (exact in the sparse range, ≈1.04/sqrt(2^lgk) relative error
     beyond) and the exact row total. Reads only the COMMITTED epoch
-    (``_last_epoch.json`` — the crash-window contract applies to
+    (the marker — the crash-window contract applies to
     external readers too)."""
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
     committed = committed_epoch(state_path, "read_distinct_count_state")
     rows = spark.read.schema("sketch binary, total long, lgk int").parquet(
         os.path.join(state_path, "sketch", f"epoch={committed}")
@@ -1084,20 +1014,12 @@ def stream_distinct_count(
     """Keep a bounded distinct-count sketch current from a stream (see
     ``fold_distinct_count_batch``). Returns the StreamingQuery; read
     the estimate with ``read_distinct_count_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_distinct_count_batch(batch_df, epoch_id, state_path, col, **kwargs)
-
-    return (
-        values.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold_stream(
+        values,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_distinct_count_batch(
+            batch_df, epoch_id, state_path, col, **kwargs
+        ),
     )
 
 
@@ -1132,23 +1054,14 @@ def fold_group_heavy_hitters_batch(
     merger's dict never grows to partitions × capacity entries) yield
     ≤ capacity counters per group before the |groups|-bounded state
     rewrite. Never a full-vocabulary shuffle.
-    NULL groups are excluded (not attributable). Exactly-once via the
-    shared epoch protocol; capacity drift across a state's lifetime
+    NULL groups are excluded (not attributable). Exactly-once by the
+    fold protocol (``operators/incremental.py``); capacity drift across a state's lifetime
     raises. Read with ``read_group_heavy_hitters_state``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     if capacity < 1:
         raise ValueError("capacity must be ≥ 1")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     cap = int(capacity)
@@ -1219,7 +1132,7 @@ def fold_group_heavy_hitters_batch(
 
     SCHEMA = "grp string, item string, est long, total long, capacity int"
     root = os.path.join(state_path, "summary")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     state: dict = {}
     totals: dict = {}
     if prior_eps:
@@ -1266,10 +1179,6 @@ def read_group_heavy_hitters_state(spark, state_path: str, k: int = 20) -> DataF
     (group, item), including items absent from that group's summary
     (est implicitly 0). Reads only the COMMITTED epoch; the driver-side
     read is bounded by the |groups|·(capacity+1) state contract."""
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
     committed = committed_epoch(state_path, "read_group_heavy_hitters_state")
     rows = spark.read.schema(
         "grp string, item string, est long, total long, capacity int"
@@ -1302,22 +1211,12 @@ def stream_group_heavy_hitters(
     """Keep per-group heavy-hitter summaries current from a stream (see
     ``fold_group_heavy_hitters_batch``). Returns the StreamingQuery;
     read with ``read_group_heavy_hitters_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_group_heavy_hitters_batch(
+    return start_fold_stream(
+        docs,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_group_heavy_hitters_batch(
             batch_df, epoch_id, state_path, group_col, col, **kwargs
-        )
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -1345,19 +1244,10 @@ def fold_group_distinct_count_batch(
     ``fold_distinct_count_batch``. Read with
     ``read_group_distinct_count_state``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-        prior_epochs,
-    )
-
     if not 4 <= int(lgk) <= 21:
         raise ValueError("lgk must be in [4, 21]")
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
 
     vals = batch_df.select(
@@ -1375,7 +1265,7 @@ def fold_group_distinct_count_batch(
 
     SCHEMA = "grp string, sketch binary, total long, lgk int"
     root = os.path.join(state_path, "sketch")
-    prior_eps = prior_epochs(root, epoch_id)
+    prior_eps = epoch_ids(root, below=epoch_id)
     state: dict = {}
     if prior_eps:
         prev = spark.read.schema(SCHEMA).parquet(
@@ -1427,10 +1317,6 @@ def read_group_distinct_count_state(spark, state_path: str) -> DataFrame:
     """(group, n_distinct, total) per group from the folded sketches
     (regimes as ``read_distinct_count_state``, per group). Reads only
     the COMMITTED epoch; bounded by the |groups| contract."""
-    import os
-
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
     committed = committed_epoch(state_path, "read_group_distinct_count_state")
     rows = spark.read.schema("grp string, sketch binary, total long, lgk int").parquet(
         os.path.join(state_path, "sketch", f"epoch={committed}")
@@ -1454,20 +1340,10 @@ def stream_group_distinct_count(
     """Keep per-group distinct-count sketches current from a stream
     (see ``fold_group_distinct_count_batch``). Returns the
     StreamingQuery; read with ``read_group_distinct_count_state``."""
-    import os
-
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_group_distinct_count_batch(
+    return start_fold_stream(
+        values,
+        checkpoint,
+        lambda batch_df, epoch_id: fold_group_distinct_count_batch(
             batch_df, epoch_id, state_path, group_col, col, **kwargs
-        )
-
-    return (
-        values.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )

@@ -47,9 +47,21 @@ mirrors each rule with the same regexes (workload.py URL_* SQL).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from vectorsearch_spark.fsio import epoch_dirs
+from vectorsearch_spark.operators.incremental import (
+    EpochBucketedState,
+    commit_epoch,
+    committed_epoch,
+    epoch_already_applied,
+    source_snapshot,
+    start_fold_stream,
+)
 
 # one regex family, shared verbatim (documented) with the SQL oracle
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
@@ -314,14 +326,10 @@ def _frontier_table(state_path: str) -> str:
     source of the naming scheme; r12 ADVICE flagged the independent
     re-derivation here), computable without a session
     (tests/registry cleanup)."""
-    from vectorsearch_spark.operators.incremental import EpochBucketedState
-
     return EpochBucketedState.table_for(state_path, "urls")
 
 
 def _frontier_state(spark, state_path: str, state_buckets: int):
-    from vectorsearch_spark.operators.incremental import EpochBucketedState
-
     return EpochBucketedState(
         spark, state_path, "urls", "`_curl` STRING", "_curl", state_buckets
     )
@@ -362,24 +370,12 @@ def fold_url_dedup_batch(
     Size N to the cluster (a bucket is one task's state slice). Both
     layouts share the same fold semantics and crash protocol.
 
-    Exactly-once (the shared epoch protocol, incremental.py): state
-    reads filter to ``epoch < epoch_id`` so a crashed attempt's partial
-    dirs are invisible to its replay; per-epoch dirs rewrite
-    idempotently; the applied-epoch marker commits last via atomic
-    rename; a replay after the marker committed is a no-op.
+    Exactly-once by the fold protocol in ``operators/incremental.py``.
     """
-    import os
-
-    from vectorsearch_spark.operators.incremental import (
-        commit_epoch,
-        epoch_already_applied,
-    )
-
     spark = batch_df.sparkSession
-    marker = os.path.join(state_path, "_last_epoch.json")
-    if epoch_already_applied(marker, epoch_id, state_path):
+    if epoch_already_applied(state_path, epoch_id):
         return
-    batch = batch_df.localCheckpoint()  # stream sources are single-pass
+    batch = source_snapshot(batch_df)
     canon = batch.withColumn(
         "_curl", canonicalize_url(url_col, strip_www=strip_www)
     )
@@ -401,8 +397,6 @@ def fold_url_dedup_batch(
         if seen is not None:
             canon = canon.join(seen, "_curl", "left_anti")
     else:
-        from vectorsearch_spark.fsio import epoch_dirs
-
         dirs = epoch_dirs(root, below=epoch_id)
         if dirs:
             seen = spark.read.schema("_curl string").parquet(*dirs)
@@ -455,16 +449,11 @@ def stream_url_dedup(
     crash mid-compaction never changes what any reader or replay
     observes — the next trigger just folds on (a later compaction
     re-absorbs any leftover partitions)."""
-    import os
-
     if compact_every and not kwargs.get("state_buckets"):
         raise ValueError(
             "compact_every requires state_buckets (compaction operates "
             "on the bucketed frontier layout)"
         )
-    from vectorsearch_spark.fsio import get_state_fs
-
-    get_state_fs().makedirs(state_path)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         fold_url_dedup_batch(batch_df, epoch_id, state_path, **kwargs)
@@ -474,12 +463,7 @@ def stream_url_dedup(
                 batch_df.sparkSession, state_path, sb, int(epoch_id)
             )
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold_stream(docs, checkpoint, _apply)
 
 
 def compact_url_frontier(
@@ -500,11 +484,6 @@ def read_accepted(spark, state_path: str) -> DataFrame:
     ``<= committed_epoch`` — a crashed fold's partial ``accepted/``
     dir (written before its marker commit) is invisible, exactly as it
     is to the fold's own replay."""
-    import os
-
-    from vectorsearch_spark.fsio import epoch_dirs
-    from vectorsearch_spark.operators.incremental import committed_epoch
-
     last = committed_epoch(state_path, "read_accepted")
     dirs = epoch_dirs(os.path.join(state_path, "accepted"), at_most=last)
     return spark.read.parquet(*dirs)
