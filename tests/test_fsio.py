@@ -117,17 +117,18 @@ def test_backend_swap_captures_fold_protocol(spark, tmp_path, recording_fs):
 
 
 def test_catalog_reads_through_seam(spark, tmp_path, recording_fs):
-    """The index catalog reads meta.json and segments.json back through
-    the same seam it writes them with, so a non-local backend can read
-    what it wrote: create_or_open's existence check, open's meta read,
-    and a fresh handle's first next_gid and segments() all reach it."""
+    """The index catalog reads meta.json back through the same seam it
+    writes it with, so a non-local backend can read what it wrote:
+    create_or_open's existence check, open's meta read, and a fresh
+    handle's first next_gid and segments() all reach it — one read,
+    since the registry lives in the same file."""
     from vectorsearch_spark.config import IndexConfig
     from vectorsearch_spark.index import VectorIndex
 
     root = str(tmp_path / "idx")
     cfg = IndexConfig(name="s", dimension=4, max_segment_size=10, pq_m=2, pq_k=4)
     VectorIndex.create(spark, root, cfg)
-    meta, segs = f"{root}/meta.json", f"{root}/segments.json"
+    meta = f"{root}/meta.json"
 
     recording_fs.ops.clear()
     VectorIndex.create_or_open(spark, root, cfg)
@@ -141,7 +142,38 @@ def test_catalog_reads_through_seam(spark, tmp_path, recording_fs):
     recording_fs.ops.clear()
     assert fresh.next_gid == 0
     assert fresh.segments().count() == 0
-    assert recording_fs.ops == [("read_text", meta), ("read_text", segs)]
+    assert recording_fs.ops == [("read_text", meta)]
+
+
+def test_catalog_commits_once_per_step(spark, tmp_path, recording_fs):
+    """Every logical index step commits the catalog with exactly one
+    atomic replace of meta.json — the registry and the counters ride
+    the same write, so no crash can land one without the other."""
+    from vectorsearch_spark.config import IndexConfig
+    from vectorsearch_spark.index import VectorIndex
+
+    root = str(tmp_path / "idx")
+    meta = f"{root}/meta.json"
+    schema = "row_id long, embedding array<float>"
+
+    def commits(fn):
+        recording_fs.ops.clear()
+        fn()
+        return sum(1 for op in recording_fs.ops if op[0] == "replace" and op[2] == meta)
+
+    cfg = IndexConfig(name="w", dimension=2, max_segment_size=10, pq_m=2, pq_k=4)
+    holder = []
+    assert commits(lambda: holder.append(VectorIndex.create(spark, root, cfg))) == 1
+    idx = holder[0]
+    rows = spark.createDataFrame([(i, [float(i), float(i % 3)]) for i in range(25)], schema)
+    assert commits(lambda: idx.add(rows, order_col="row_id")) == 1
+    empty = spark.createDataFrame([], schema)
+    assert commits(lambda: idx.add(empty, meta_extra={"applied_epochs": {"s": 0}})) == 1
+    assert commits(lambda: idx.delete([0, 1, 12])) == 1
+    assert commits(lambda: idx.build()) == 1
+    assert commits(lambda: idx.compact([0, 1])) == 2
+    # the registry lives in the catalog file: no second state file
+    assert sorted(os.listdir(root)) == ["artifacts", "meta.json", "vectors"]
 
 
 def test_write_file_atomic_never_exposes_partial(tmp_path):

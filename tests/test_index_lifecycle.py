@@ -760,6 +760,23 @@ def test_retired_normalize_on_read_config_key(spark, tmp_path):
     assert [r["gid"] for r in reopened.search(q, k=1).collect()] == [3]
 
 
+def test_open_refuses_an_older_layout(spark, tmp_path):
+    """A v2 index kept its registry in a second file, segments.json;
+    this build reads only the v3 single-file catalog and asks for a
+    rebuild instead of guessing."""
+    import json
+
+    path = str(tmp_path / "v2")
+    idx = VectorIndex.create(spark, path, IndexConfig(name="v", dimension=4, pq_m=2, pq_k=4))
+    with open(idx.meta_path) as f:
+        meta = json.load(f)
+    meta["layout"] = 2
+    with open(idx.meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        VectorIndex.open(spark, path)
+
+
 # ---------------------------------------------------------------------------
 # search_join: distributed query-side search (queries never collected)
 # ---------------------------------------------------------------------------
@@ -1105,12 +1122,12 @@ def test_compact_crash_before_registry_swap_recover_rerun(spark, tmp_path_factor
     class Boom(RuntimeError):
         pass
 
-    def failing(self, updates):
+    def failing(self, updates, **fields):
         # the final swap is the update containing a SEALED dest +
         # None-dropped sources — kill exactly there
         if any(u is None for u in updates.values()):
             raise Boom("injected before registry swap")
-        return real(self, updates)
+        return real(self, updates, **fields)
 
     VectorIndex.update_segment_states = failing
     try:
@@ -1146,6 +1163,54 @@ def test_compact_crash_before_registry_swap_recover_rerun(spark, tmp_path_factor
         (r["query_id"], r["gid"]) for r in idx.search(qdf, k=5).collect()
     }
     assert after == before  # gid-stable across the crashed+retried move
+
+
+def test_add_crash_before_catalog_commit_recover(spark, tmp_path, monkeypatch):
+    """Kill a batch add after its parquet append, at its catalog write:
+    a restarted writer's recover() scrubs the uncommitted rows (gid at
+    or above the committed next_gid) and keeps the counters equal to the
+    rows, so the next add allocates dense, unique gids and vec_ids and
+    leaves exactly one ACTIVE segment."""
+    from vectorsearch_spark.index import catalog
+
+    path = str(tmp_path / "addcrash")
+    cfg = IndexConfig(name="ac", dimension=2, max_segment_size=10, pq_m=2, pq_k=4)
+    schema = "row_id long, embedding array<float>"
+    idx = VectorIndex.create(spark, path, cfg)
+    idx.add(spark.createDataFrame([(i, [float(i), 0.0]) for i in range(15)], schema),
+            order_col="row_id")
+
+    real = catalog.write_file_atomic
+
+    def failing(dir_path, name, data):
+        if name == "meta.json":
+            raise RuntimeError("injected at the catalog write")
+        return real(dir_path, name, data)
+
+    monkeypatch.setattr(catalog, "write_file_atomic", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.add(spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(15, 22)], schema), order_col="row_id")
+    monkeypatch.setattr(catalog, "write_file_atomic", real)
+    assert spark.read.parquet(f"{path}/vectors").count() == 22  # 7 orphans on disk
+
+    idx2 = VectorIndex.open(spark, path)
+    acts = idx2.recover()
+    raw = spark.read.parquet(f"{path}/vectors").collect()
+    assert sorted(r["gid"] for r in raw) == list(range(15))
+    assert acts["orphans_scrubbed"] == 7
+    per_seg: dict = {}
+    for r in raw:
+        per_seg[r["seg_id"]] = per_seg.get(r["seg_id"], 0) + 1
+    assert {r["seg_id"]: r["count"] for r in idx2._segment_rows()} == per_seg
+
+    idx2.add(spark.createDataFrame(
+        [(i, [float(i), 2.0]) for i in range(22, 26)], schema), order_col="row_id")
+    rows = idx2.vectors().collect()
+    assert sorted(r["gid"] for r in rows) == list(range(19))
+    assert len({(r["seg_id"], r["vec_id"]) for r in rows}) == len(rows)
+    states = [r["state"] for r in idx2._segment_rows()]
+    assert states.count(ACTIVE) == 1
 
 
 def test_search_join_graph_default_ef_recall_8_segments(spark, tmp_path_factory):

@@ -216,19 +216,58 @@ def test_stream_add_exactly_once_replay_after_commit(spark, tmp_path_factory):
     assert idx.next_gid == 20
 
 
-def test_stream_add_scrub_after_crash_before_commit(spark, tmp_path_factory):
-    """Failure injection BEFORE the atomic meta commit: parquet rows and
-    the registry landed but meta.json (gid counter + epoch mark) did not
-    — simulated by restoring the pre-attempt meta bytes. The replay must
-    detect the intent, restore the registry snapshot, scrub the orphan
-    gids, and re-apply the epoch exactly once."""
-    import json
-    import os
+def test_stream_add_recovers_at_start_after_crash_before_commit(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A micro-batch dies after its parquet append, at its catalog
+    write: the epoch is unrecorded and its rows are on disk. A restarted
+    stream_add runs recover() before any epoch replays, so the replayed
+    epoch lands every row exactly once."""
+    from vectorsearch_spark.index import catalog
 
-    from vectorsearch_spark.streaming.ingest import (
-        _write_intent,
-        recover_interrupted_epoch,
+    src = str(tmp_path_factory.mktemp("rs_src"))
+    ckpt = str(tmp_path_factory.mktemp("rs_ckpt"))
+    idx_path = str(tmp_path_factory.mktemp("rs_idx"))
+    _write_batch(spark, src, [(i, [float(i), 0.0]) for i in range(12)])
+    _write_batch(spark, src, [(i, [float(i), 1.0]) for i in range(12, 20)])
+    idx = VectorIndex.create(
+        spark, idx_path,
+        IndexConfig(name="rs", dimension=2, max_segment_size=10, pq_m=2, pq_k=4),
     )
+    real = catalog.write_file_atomic
+
+    def failing(dir_path, name, data):
+        if name == "meta.json" and '"applied_epochs":{"s":1}' in data:
+            raise RuntimeError("injected at epoch 1's catalog write")
+        return real(dir_path, name, data)
+
+    monkeypatch.setattr(catalog, "write_file_atomic", failing)
+    stream = spark.readStream.schema(EMB_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+    q = stream_add(idx, stream, order_col="row_id", checkpoint_dir=ckpt, stream_id="s")
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+        q.processAllAvailable()
+    monkeypatch.setattr(catalog, "write_file_atomic", real)
+    assert idx.next_gid == 12
+    assert spark.read.parquet(idx.vectors_path).count() == 20  # 8 orphans
+
+    idx2 = VectorIndex.open(spark, idx_path)
+    stream2 = spark.readStream.schema(EMB_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+    q2 = stream_add(idx2, stream2, order_col="row_id", checkpoint_dir=ckpt, stream_id="s")
+    q2.awaitTermination(120)
+    raw = spark.read.parquet(idx2.vectors_path).collect()
+    assert sorted(r["gid"] for r in raw) == list(range(20))  # every row exactly once
+    assert len({(r["seg_id"], r["vec_id"]) for r in raw}) == 20
+    assert idx2.next_gid == 20
+
+
+def test_stream_add_scrub_after_crash_before_commit(spark, tmp_path_factory):
+    """Failure injection BEFORE the atomic catalog commit: parquet rows
+    landed but meta.json (registry, gid counter and epoch mark) did not
+    — simulated by restoring the pre-attempt meta bytes. recover() at
+    writer start-up must scrub the orphan gids, leave the registry as
+    committed, and the replayed epoch must apply exactly once."""
+    import json
 
     idx_path = str(tmp_path_factory.mktemp("scrub_idx"))
     idx = VectorIndex.create(
@@ -243,9 +282,8 @@ def test_stream_add_scrub_after_crash_before_commit(spark, tmp_path_factory):
         meta_before = f.read()
     segs_before = idx._segment_rows()
 
-    # epoch 1 attempt: intent → full add → then crash JUST BEFORE the
-    # meta rename (simulated by restoring the old meta bytes)
-    _write_intent(idx, "s", 1)
+    # epoch 1 attempt: full add → then crash JUST BEFORE the meta
+    # rename (simulated by restoring the old meta bytes)
     batch1 = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(15, 28)], EMB_SCHEMA)
     idx.add(batch1, order_col="row_id", meta_extra={"applied_epochs": {"s": 1}})
     with open(idx.meta_path, "w") as f:
@@ -255,7 +293,7 @@ def test_stream_add_scrub_after_crash_before_commit(spark, tmp_path_factory):
     idx2 = VectorIndex.open(spark, idx_path)
     raw = spark.read.parquet(idx2.vectors_path)
     assert raw.count() == 28  # 13 orphans present on disk
-    scrubbed = recover_interrupted_epoch(idx2, "s", 1)
+    scrubbed = idx2.recover()["orphans_scrubbed"]
     assert scrubbed == 13
     assert idx2._segment_rows() == segs_before
     assert sorted(r["gid"] for r in idx2.vectors().collect()) == list(range(15))
@@ -270,46 +308,10 @@ def test_stream_add_scrub_after_crash_before_commit(spark, tmp_path_factory):
     assert len(idx2.search(qdf, k=3).collect()) == 3
 
 
-def test_stream_recovery_crash_after_intent_only(spark, tmp_path_factory):
-    """Crash point (a): the intent file was written but NO mutation
-    followed — recovery is a no-op and the epoch applies cleanly."""
-    from vectorsearch_spark.streaming.ingest import (
-        _write_intent,
-        recover_interrupted_epoch,
-    )
-
-    idx_path = str(tmp_path_factory.mktemp("ionly_idx"))
-    idx = VectorIndex.create(
-        spark, idx_path,
-        IndexConfig(name="io", dimension=2, max_segment_size=10, pq_m=2, pq_k=4),
-    )
-    idx.add(
-        spark.createDataFrame([(i, [float(i), 0.0]) for i in range(5)], EMB_SCHEMA),
-        order_col="row_id", meta_extra={"applied_epochs": {"s": 0}},
-    )
-    segs_before = idx._segment_rows()
-    _write_intent(idx, "s", 1)  # crash immediately after
-    idx2 = VectorIndex.open(spark, idx_path)
-    assert recover_interrupted_epoch(idx2, "s", 1) == 0  # nothing to scrub
-    assert idx2._segment_rows() == segs_before
-    idx2.add(
-        spark.createDataFrame([(i, [float(i), 1.0]) for i in range(5, 9)], EMB_SCHEMA),
-        order_col="row_id", meta_extra={"applied_epochs": {"s": 1}},
-    )
-    assert sorted(r["gid"] for r in idx2.vectors().collect()) == list(range(9))
-
-
 def test_stream_recovery_crash_after_parquet_only(spark, tmp_path_factory):
-    """Crash point (b): parquet rows committed but NEITHER the registry
-    nor meta advanced — recovery scrubs the orphans from the intent's
-    gid watermark alone."""
-    import shutil
-
-    from vectorsearch_spark.streaming.ingest import (
-        _write_intent,
-        recover_interrupted_epoch,
-    )
-
+    """Crash point: parquet rows committed but the catalog did not
+    advance — recovery scrubs the orphans from the committed next_gid
+    alone."""
     idx_path = str(tmp_path_factory.mktemp("ponly_idx"))
     idx = VectorIndex.create(
         spark, idx_path,
@@ -320,21 +322,17 @@ def test_stream_recovery_crash_after_parquet_only(spark, tmp_path_factory):
         order_col="row_id", meta_extra={"applied_epochs": {"s": 0}},
     )
     meta_before = open(idx.meta_path).read()
-    segs_before = open(idx.segments_path).read()
-    _write_intent(idx, "s", 1)
     idx.add(
         spark.createDataFrame([(i, [float(i), 1.0]) for i in range(7, 18)], EMB_SCHEMA),
         order_col="row_id", meta_extra={"applied_epochs": {"s": 1}},
     )
-    # crash simulated just after the parquet job commit: roll back BOTH
-    # driver-state files to their pre-epoch bytes
+    # crash simulated just after the parquet job commit: roll the
+    # catalog back to its pre-epoch bytes
     with open(idx.meta_path, "w") as f:
         f.write(meta_before)
-    with open(idx.segments_path, "w") as f:
-        f.write(segs_before)
     idx2 = VectorIndex.open(spark, idx_path)
     assert spark.read.parquet(idx2.vectors_path).count() == 18  # orphans on disk
-    assert recover_interrupted_epoch(idx2, "s", 1) == 11
+    assert idx2.recover()["orphans_scrubbed"] == 11
     assert sorted(r["gid"] for r in idx2.vectors().collect()) == list(range(7))
     idx2.add(
         spark.createDataFrame([(i, [float(i), 1.0]) for i in range(7, 18)], EMB_SCHEMA),
@@ -355,11 +353,6 @@ def test_build_and_orphan_scrub_leave_partition_overwrite_mode_alone(
     partition, and the rebuild after it."""
     from pyspark.sql.conf import RuntimeConfig
 
-    from vectorsearch_spark.streaming.ingest import (
-        _write_intent,
-        recover_interrupted_epoch,
-    )
-
     keys = []
     real_set = RuntimeConfig.set
 
@@ -379,8 +372,6 @@ def test_build_and_orphan_scrub_leave_partition_overwrite_mode_alone(
     )
     assert idx.build() == [0]
     meta_before = open(idx.meta_path).read()
-    segs_before = open(idx.segments_path).read()
-    _write_intent(idx, "s", 1)
     idx.add(
         spark.createDataFrame([(i, [float(i), 1.0]) for i in range(15, 28)], EMB_SCHEMA),
         order_col="row_id", meta_extra={"applied_epochs": {"s": 1}},
@@ -388,10 +379,8 @@ def test_build_and_orphan_scrub_leave_partition_overwrite_mode_alone(
     # crash just after the parquet commit: seg 1 is half orphans
     with open(idx.meta_path, "w") as f:
         f.write(meta_before)
-    with open(idx.segments_path, "w") as f:
-        f.write(segs_before)
     idx2 = VectorIndex.open(spark, idx_path)
-    assert recover_interrupted_epoch(idx2, "s", 1) == 13
+    assert idx2.recover()["orphans_scrubbed"] == 13
     assert sorted(r["gid"] for r in idx2.vectors().collect()) == list(range(15))
     idx2.add(
         spark.createDataFrame([(i, [float(i), 1.0]) for i in range(15, 28)], EMB_SCHEMA),
@@ -1083,11 +1072,12 @@ _FOLDS = [
      [({"bins": 1}, "bins"), ({"lo": 1.0, "hi": 0.0}, "lo < hi")]),
     ("sketch", "fold_group_value_histogram_batch", ("g", "v"), "",
      [({"bins": 1}, "bins"), ({"lo": 1.0}, "lo < hi")]),
-    ("sketch", "fold_distinct_count_batch", ("doc_id",), "", [({"lgk": 3}, "lgk")]),
+    ("sketch", "fold_distinct_count_batch", ("doc_id",), "",
+     [({"lgk": 3}, "lgk"), ({"col": "v"}, "distinct-count sketch")]),
     ("sketch", "fold_group_heavy_hitters_batch", ("g", "text"), "",
      [({"capacity": 0}, "capacity")]),
     ("sketch", "fold_group_distinct_count_batch", ("g", "doc_id"), "",
-     [({"lgk": 22}, "lgk")]),
+     [({"lgk": 22}, "lgk"), ({"col": "v"}, "distinct-count sketch")]),
     ("incremental", "fold_rollup_batch", (["g"], "v"), "", []),
     ("incremental", "fold_scd2_batch", ("doc_id",), "dim", []),
 ]
@@ -1105,6 +1095,7 @@ def test_fold_replay_guard(
     on the replayed epoch (argument checks run before the guard). No
     fold body runs, so the replay launches no Spark job."""
     import importlib
+    import inspect
     import json
     import os
 
@@ -1130,8 +1121,11 @@ def test_fold_replay_guard(
     with pytest.raises(ValueError, match="epoch regression"):
         fn(batch, 1, state, *args)
     for bad, match in bad_args:
+        # a bad kwarg may replace one of the positional args
+        call = inspect.signature(fn).bind(batch, 2, state, *args)
+        call.arguments.update(bad)
         with pytest.raises(ValueError, match=match):
-            fn(batch, 2, state, *args, **bad)
+            fn(*call.args, **call.kwargs)
     assert listing() == before
 
 

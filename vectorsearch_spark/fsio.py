@@ -3,8 +3,9 @@ epoch markers, fold state dirs, staged swaps (r13, r12 VERDICT #6).
 
 Every streaming fold and incremental-state protocol in this repo
 (operators/incremental.py, operators/urls.py, operators/dedup.py,
-operators/sketch.py, streaming/ingest.py) keeps its exactly-once
-metadata as driver-local files: an applied-epoch marker committed by
+operators/sketch.py) and the index catalog (index/catalog.py, whose
+one meta.json also carries stream_add's epoch marks) keep their
+exactly-once metadata as driver-local files: an applied-epoch marker committed by
 atomic file replace, per-epoch parquet dirs discovered by listing, and
 staged dirs published by atomic rename. Those protocols are correct
 ONLY under the atomicity contract spelled out per method below — POSIX

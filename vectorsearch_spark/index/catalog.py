@@ -3,25 +3,30 @@ public API facade (the Spark re-expression of ``api/VectorIndex.java``).
 
 Layout under one root path (SURVEY §1.4 mapping of FdbDirectories):
 
-    <root>/meta.json      config JSON + next_gid/max_seg_id counters
-    <root>/segments.json  registry: (seg_id, state, count,
-                          deleted_count, created_at_ms, last_vacuum_at_ms)
-    <root>/vectors/       parquet partitioned by seg_id:
-                          (gid, vec_id, embedding, deleted, payload)
-    <root>/codebooks/     parquet: (seg_id, m, k, sub_dim, centroids flat)
-    <root>/codes/         parquet partitioned by seg_id: (vec_id, codes)
-    <root>/adjacency/     parquet partitioned by seg_id: (vec_id, neighbor_ids)
+    <root>/meta.json   the catalog: config JSON, the next_gid/max_seg_id
+                       counters, the active segment, and the ``segments``
+                       registry (seg_id, state, count, deleted_count,
+                       created_at_ms, last_vacuum_at_ms)
+    <root>/vectors/    parquet partitioned by seg_id:
+                       (gid, vec_id, embedding, deleted, payload)
+    <root>/artifacts/  parquet partitioned by (seg_id, kind): codebooks,
+                       PQ codes and adjacency as a tagged union
 
-Metadata is a driver-side JSON log, NOT a Spark table: the registry is
-O(#segments) — thousands of rows at 100 TB — so running distributed
+The catalog is a driver-side JSON file, NOT a Spark table: the registry
+is O(#segments) — thousands of rows at 100 TB — so running distributed
 jobs to touch it is pure overhead (it cost ~2/3 of index-build wall
-time as tiny parquet jobs). Writes go through atomic temp+rename, the
+time as tiny parquet jobs). Every logical step commits the whole
+catalog in ONE atomic temp+rename (``update_segment_states``), the
 same single-writer transaction-log shape Delta Lake uses for its
-`_delta_log` JSON; on object storage this slot would be a metastore or
-a conditional-put log. Row data (vectors/codes/adjacency) stays in
-distributed parquet.
+`_delta_log` JSON and the one-transaction add of the reference
+(gid counter, rows and segment meta together,
+``fdb/FdbVectorStore.java:425-492``); on object storage this slot
+would be a metastore or a conditional-put log. Row data stays in
+distributed parquet. Vector rows whose gid is at or above the
+committed ``next_gid`` belong to an add that never committed;
+``recover()`` scrubs them.
 
-The `segments` registry is the source of truth for visibility: readers
+The registry is the source of truth for visibility: readers
 always semi-join against registered seg_ids, so a WRITING destination's
 files are invisible until the registry swap (the Spark analog of
 ``fdb/FdbVectorIndex.java:646-649`` + the compaction swap at
@@ -39,7 +44,6 @@ from __future__ import annotations
 
 import itertools
 import json
-import os
 import time
 from dataclasses import dataclass
 
@@ -64,8 +68,9 @@ from vectorsearch_spark.staging import hadoop_exists
 # On-disk layout version, stamped into meta.json at create and checked
 # at open. v2: unified artifacts table (codebooks/codes/adjacency as a
 # tagged union partitioned by (seg_id, kind)) replacing three separate
-# tables — pre-v2 indexes must rebuild.
-LAYOUT_VERSION = 2
+# tables. v3: the segment registry lives in meta.json, so one rename
+# commits registry and counters together. Older indexes must rebuild.
+LAYOUT_VERSION = 3
 
 SEGMENTS_SCHEMA = T.StructType(
     [
@@ -162,7 +167,6 @@ class VectorIndex:
         self.path = path.rstrip("/")
         self.config = config
         self._meta_cache: dict | None = None
-        self._segments_cache: list[dict] | None = None
         # the handle's one search cache (the SegmentCaches analog,
         # cache/SegmentCaches.java): the persisted, segment-bucketed
         # searchable side, codebooks included (see searchable_side)
@@ -172,10 +176,6 @@ class VectorIndex:
     @property
     def meta_path(self) -> str:
         return f"{self.path}/meta.json"
-
-    @property
-    def segments_path(self) -> str:
-        return f"{self.path}/segments.json"
 
     @property
     def vectors_path(self) -> str:
@@ -200,15 +200,17 @@ class VectorIndex:
         idx = cls(spark, path, config)
         # a create starts from NOTHING: never seed carried-through keys
         # from a stale meta.json at the same path
-        idx._meta_cache = {}
-        idx._write_meta(
-            next_gid=0,
-            max_seg_id=-1,
-            active_seg_id=None,
-            active_fill=0,
-            layout=LAYOUT_VERSION,
-        )
-        idx._overwrite_segments([])
+        idx._meta_cache = {
+            "layout": LAYOUT_VERSION,
+            "config_json": config.to_json(),
+            "next_gid": 0,
+            "max_seg_id": -1,
+            "has_payload": False,
+            "active_seg_id": None,
+            "active_fill": 0,
+            "segments": [],
+        }
+        idx.update_segment_states({})
         return idx
 
     @classmethod
@@ -243,63 +245,6 @@ class VectorIndex:
         idx._meta_cache = meta
         return idx
 
-    @staticmethod
-    def _atomic_write_json(path: str, obj) -> None:
-        """Marker/metadata publish through the state-FS seam
-        (vectorsearch_spark.fsio — atomic co-located replace)."""
-        get_state_fs().makedirs(os.path.dirname(path))
-        write_file_atomic(
-            os.path.dirname(path), os.path.basename(path), json.dumps(obj)
-        )
-
-    _KEEP = object()  # sentinel: "preserve the stored value"
-
-    def _write_meta(
-        self,
-        next_gid: int,
-        max_seg_id: int,
-        has_payload: bool | None = None,
-        active_seg_id: "int | None" = _KEEP,
-        active_fill: int = _KEEP,
-        **extra,
-    ) -> None:
-        """next_gid / max_seg_id are the monotonic counters of the
-        reference (FdbDirectories.java:87-88): gids are never reused and
-        neither are seg_ids — BOTH ingest rotation and compaction
-        destinations allocate from the same max_seg_id counter, so the
-        two can never collide (the reference's single maxSegmentId).
-        ``active_seg_id``/``active_fill`` track the segment currently
-        accepting writes and its fill high-water mark (never decremented
-        by delete/vacuum, so appended vec_ids never collide with holes).
-        ``has_payload`` is sticky-true once any batch ingested payloads —
-        it lets search skip the payload-attach join entirely for
-        payload-free indexes. Unknown keys already in the meta (and any
-        ``extra`` kwargs, e.g. streaming epoch bookkeeping) are carried
-        through — seeded from the meta FILE (not just the cache), so a
-        fresh handle that writes before reading never drops stored keys."""
-        try:
-            prev = self._meta()
-        except FileNotFoundError:  # create(): no meta yet
-            prev = {}
-        if has_payload is None:
-            has_payload = bool(prev.get("has_payload", False))
-        meta = dict(prev)
-        meta.update(
-            {
-                "config_json": self.config.to_json(),
-                "next_gid": int(next_gid),
-                "max_seg_id": int(max_seg_id),
-                "has_payload": bool(has_payload),
-            }
-        )
-        if active_seg_id is not self._KEEP:
-            meta["active_seg_id"] = None if active_seg_id is None else int(active_seg_id)
-        if active_fill is not self._KEEP:
-            meta["active_fill"] = int(active_fill)
-        meta.update(extra)
-        self._atomic_write_json(self.meta_path, meta)
-        self._meta_cache = meta
-
     def _meta(self) -> dict:
         if self._meta_cache is None:
             self._meta_cache = json.loads(get_state_fs().read_text(self.meta_path))
@@ -315,22 +260,22 @@ class VectorIndex:
 
     @property
     def has_payload(self) -> bool:
-        # default True for metas predating the flag: always-attach is safe
-        return bool(self._meta().get("has_payload", True))
+        """Sticky-true once any batch ingested payloads — lets search
+        skip the payload-attach join entirely for payload-free indexes."""
+        return self._meta()["has_payload"]
 
     @property
     def active_seg_id(self) -> int | None:
         """Segment currently accepting writes; None → the next ingest
-        allocates a fresh segment from max_seg_id (metas predating the
-        field also resolve to None — safe, never collides)."""
-        return self._meta().get("active_seg_id")
+        allocates a fresh segment from max_seg_id."""
+        return self._meta()["active_seg_id"]
 
     @property
     def active_fill(self) -> int:
         """Rows ever written to the active segment (fill high-water mark;
         monotone — delete/vacuum never lower it, so appended vec_ids are
         always fresh)."""
-        return int(self._meta().get("active_fill", 0) or 0)
+        return self._meta()["active_fill"]
 
     # -- registry ------------------------------------------------------
     def segments(self) -> DataFrame:
@@ -339,49 +284,40 @@ class VectorIndex:
         ]
         return self.spark.createDataFrame(rows, SEGMENTS_SCHEMA)
 
-    def _overwrite_segments(self, rows: list[dict]) -> None:
-        self._atomic_write_json(self.segments_path, rows)
-        self._segments_cache = [dict(r) for r in rows]
-        # the actual mutation choke point — EVERY registry write (incl.
-        # streaming crash recovery's snapshot restore) drops the
-        # searchable side here, not just update_segment_states
-        self.drop_searchable_side()
-
     def _segment_rows(self) -> list[dict]:
-        if self._segments_cache is None:
-            self._segments_cache = json.loads(
-                get_state_fs().read_text(self.segments_path)
-            )
-        return [dict(r) for r in self._segments_cache]
+        return [dict(r) for r in self._meta()["segments"]]
 
-    def update_segment_states(self, updates: dict[int, dict]) -> None:
-        """Apply per-seg_id field updates to the registry; a seg mapped to
-        None is dropped (compaction source clear)."""
-        existing = self._segment_rows()
+    def update_segment_states(self, updates: dict[int, dict | None], **fields) -> None:
+        """The one catalog writer: apply per-seg_id field updates to the
+        registry (a seg mapped to None is dropped — compaction source
+        clear) and set the top-level ``fields`` (counters, active
+        segment, streaming epoch bookkeeping) in ONE atomic replace of
+        meta.json. ``next_gid``/``max_seg_id`` are the monotonic
+        counters of the reference (FdbDirectories.java:87-88): gids are
+        never reused and neither are seg_ids — ingest rotation and
+        compaction destinations both allocate from max_seg_id, so the
+        two never collide. Unknown keys already in the meta are
+        carried through, seeded from the file when this handle has not
+        read it yet. Every catalog write drops the searchable side
+        here, the mutation choke point."""
+        meta = {**self._meta(), **fields}
         rows = []
-        for r in existing:
-            if r["seg_id"] in updates:
-                u = updates[r["seg_id"]]
-                if u is None:
-                    continue
-                r.update(u)
-            rows.append(r)
-        new_ids = set(updates) - {r["seg_id"] for r in existing}
-        for sid in sorted(new_ids):
-            u = updates[sid]
-            if u is None:
+        for r in meta["segments"]:
+            u = updates.get(r["seg_id"], {})
+            if u is not None:
+                rows.append({**r, **u})
+        known = {r["seg_id"] for r in meta["segments"]}
+        for sid, u in updates.items():
+            if sid in known or u is None:
                 continue
-            rows.append(
-                {
-                    "seg_id": sid,
-                    "state": u.get("state", WRITING),
-                    "count": u.get("count", 0),
-                    "deleted_count": u.get("deleted_count", 0),
-                    "created_at_ms": u.get("created_at_ms", int(time.time() * 1000)),
-                    "last_vacuum_at_ms": u.get("last_vacuum_at_ms"),
-                }
-            )
-        self._overwrite_segments(sorted(rows, key=lambda r: r["seg_id"]))
+            new = {"seg_id": sid, "state": WRITING, "count": 0, "deleted_count": 0,
+                   "created_at_ms": int(time.time() * 1000), "last_vacuum_at_ms": None}
+            rows.append({**new, **u})
+        meta["segments"] = sorted(rows, key=lambda r: r["seg_id"])
+        get_state_fs().makedirs(self.path)
+        write_file_atomic(self.path, "meta.json", json.dumps(meta, separators=(",", ":")))
+        self._meta_cache = meta
+        self.drop_searchable_side()
 
     def registered_seg_ids(self, states: tuple[str, ...] | None = None) -> list[int]:
         return [
@@ -516,9 +452,9 @@ class VectorIndex:
         order_col: str | None = None,
         meta_extra: dict | None = None,
     ) -> int:
-        """``meta_extra`` keys ride the add's final meta write — one
-        atomic rename commits both (streaming uses this to mark an epoch
-        applied in the same transaction as its rows)."""
+        """``meta_extra`` keys ride the add's one catalog commit — the
+        same rename makes the rows visible (streaming uses this to mark
+        an epoch applied in the same transaction as its rows)."""
         from vectorsearch_spark.index.ingest import add_vectors
 
         return add_vectors(self, df, embedding_col, payload_col, order_col, meta_extra)
@@ -583,8 +519,9 @@ class VectorIndex:
     def recover(self) -> dict:
         """Writer-restart crash recovery (see maintenance.recover):
         restores interrupted partition swaps, rolls back WRITING /
-        COMPACTING registry leftovers, GCs orphaned dirs. Single-writer
-        contract — call before issuing new maintenance ops."""
+        COMPACTING registry leftovers, GCs orphaned dirs, scrubs the
+        rows of uncommitted adds. Single-writer contract — call before
+        issuing new writes."""
         from vectorsearch_spark.index.maintenance import recover
 
         return recover(self)

@@ -26,8 +26,6 @@ task.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,9 +123,7 @@ def add_vectors(
     if n == 0:
         persisted.unpersist()
         if meta_extra:  # an empty epoch still commits its bookkeeping
-            index._write_meta(
-                next_gid=start, max_seg_id=index.max_seg_id, **meta_extra
-            )
+            index.update_segment_states({}, **meta_extra)
         return start
 
     # -- segment placement (decoupled from gid arithmetic) -------------
@@ -171,7 +167,6 @@ def add_vectors(
 
     # registry update: full segments → PENDING (rotated), tail → ACTIVE
     end = start + n  # exclusive
-    now = int(time.time() * 1000)
     touched: list[tuple[int, int, int]] = []  # (seg_id, rows_added, end_fill)
     if into_active:
         touched.append((active, into_active, fill + into_active))
@@ -179,28 +174,21 @@ def add_vectors(
         rows_i = min(cap, rem - i * cap)
         touched.append((first_new + i, rows_i, rows_i))
     updates: dict[int, dict] = {}
-    existing = {r["seg_id"]: r for r in index._segment_rows()}
+    counts = {r["seg_id"]: r["count"] for r in index._segment_rows()}
     new_active: int | None = None
     new_fill = 0
     for sid, added, end_fill in touched:
-        prev = existing.get(sid)
-        total = (prev["count"] if prev else 0) + added
         if end_fill < cap:  # only ever the last touched segment
             state = ACTIVE
             new_active, new_fill = sid, end_fill
         else:
             state = PENDING
-        updates[sid] = {
-            "state": state,
-            "count": total,
-            "deleted_count": prev["deleted_count"] if prev else 0,
-            "created_at_ms": prev["created_at_ms"] if prev else now,
-            "last_vacuum_at_ms": prev["last_vacuum_at_ms"] if prev else None,
-        }
-    index.update_segment_states(updates)
-    index._write_meta(
+        updates[sid] = {"state": state, "count": counts.get(sid, 0) + added}
+    # the commit point: registry, counters and meta_extra in one rename
+    index.update_segment_states(
+        updates,
         next_gid=end,
-        max_seg_id=max(index.max_seg_id, first_new + n_new - 1) if n_new else index.max_seg_id,
+        max_seg_id=first_new + n_new - 1,
         has_payload=index.has_payload or payload_col is not None,
         active_seg_id=new_active,
         active_fill=new_fill,

@@ -18,9 +18,9 @@ Reference semantics:
 
 Spark shape: every rewrite is a *partition* rewrite through the staged
 swap of vectorsearch_spark.staging (only touched seg_id partitions are
-replaced);
-"atomic registry swap" is one overwrite of the tiny segments table,
-which is the single source of truth for visibility. Planner arithmetic
+replaced); the "atomic registry swap" is one atomic replace of the
+catalog file (index/catalog.py), whose registry is the single source of
+truth for visibility. Planner arithmetic
 is a pure DataFrame aggregation. Nothing driver-side ever holds row
 data — only registry rows and seg_id lists.
 """
@@ -95,6 +95,12 @@ def delete_gids(index: VectorIndex, gids: list[int]) -> int:
 # F4/M3: vacuum gating
 # ---------------------------------------------------------------------------
 
+def _below_vacuum_ratio(seg: dict, min_deleted_ratio: float) -> bool:
+    """deleted/(count+deleted) under the gate, or an empty segment."""
+    total = seg["count"] + seg["deleted_count"]
+    return total == 0 or seg["deleted_count"] / total < min_deleted_ratio
+
+
 def vacuum_due(
     index: VectorIndex,
     min_deleted_ratio: float = 0.25,
@@ -106,8 +112,7 @@ def vacuum_due(
     now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
     out = []
     for r in index._segment_rows():
-        total = r["count"] + r["deleted_count"]
-        if total == 0 or r["deleted_count"] / total < min_deleted_ratio:
+        if _below_vacuum_ratio(r, min_deleted_ratio):
             continue
         last = r["last_vacuum_at_ms"]
         if last is not None and now_ms - last < cooldown_ms:
@@ -133,8 +138,7 @@ def vacuum_segment(
     seg = rows.get(seg_id)
     if seg is None:
         return False
-    total = seg["count"] + seg["deleted_count"]
-    if not force and (total == 0 or seg["deleted_count"] / total < min_deleted_ratio):
+    if not force and _below_vacuum_ratio(seg, min_deleted_ratio):
         return False
     if seg["deleted_count"] > 0:
         spark = index.spark
@@ -293,25 +297,22 @@ def find_compaction_candidates(
 def compact_segments(index: VectorIndex, seg_ids: list[int]) -> int:
     """Merge the live rows of ``seg_ids`` into one fresh segment.
 
-    Steps (tasks/MaintenanceService.java:248-417): CAS sources SEALED →
-    COMPACTING (still searchable); reserve a fresh dest seg_id,
-    registered WRITING (invisible); copy live rows with new dense
+    Steps (tasks/MaintenanceService.java:248-417): one catalog commit
+    reserves the move — sources SEALED → COMPACTING (still searchable),
+    a fresh dest seg_id registered WRITING (invisible) and the
+    max_seg_id counter advanced; copy live rows with new dense
     (seg_id, vec_id) but STABLE gids; rebuild artifacts; swap: dest →
-    SEALED, sources dropped from the registry in the same overwrite.
+    SEALED, sources dropped from the registry in the same commit.
     Returns the new seg_id.
     """
     states = {r["seg_id"]: r["state"] for r in index._segment_rows()}
     for s in seg_ids:
         if states.get(s) != SEALED:
             raise ValueError(f"segment {s} is not SEALED (state={states.get(s)})")
-    index.update_segment_states({s: {"state": COMPACTING} for s in seg_ids})
-
     dest = index.max_seg_id + 1
-    now = int(time.time() * 1000)
-    index.update_segment_states(
-        {dest: {"state": WRITING, "count": 0, "deleted_count": 0, "created_at_ms": now}}
-    )
-    index._write_meta(next_gid=index.next_gid, max_seg_id=dest)
+    reserve = {s: {"state": COMPACTING} for s in seg_ids}
+    reserve[dest] = {"state": WRITING}
+    index.update_segment_states(reserve, max_seg_id=dest)
 
     live = (
         index.spark.read.schema(VECTORS_SCHEMA)
@@ -378,18 +379,26 @@ def recover(index: VectorIndex) -> dict:
        from their still-registered sources); COMPACTING segments return
        to SEALED (their data was never mutated — compaction copies);
     3. physical GC of now-unregistered partitions;
-    4. counter reconciliation: one groupBy(seg_id) aggregate over the
-       vectors of registered segments re-derives (count, deleted_count)
-       from physical truth — a crash between a partition swap and its
-       registry update leaves counters stale, and the normal fast paths
-       deliberately trust counters instead of re-counting (a rerun of
-       the crashed delete would see its tombstones as already-applied
-       and never repair the drift; caught by the delete crash test).
+    4. one groupBy(seg_id) aggregate over the raw vectors table counts
+       live, dead and uncommitted rows per partition:
+       - uncommitted rows (gid ≥ the committed next_gid) are an add's
+         leftovers from before its catalog commit — a partition of
+         nothing else is deleted (the next add reallocates its seg_id),
+         a partly uncommitted one (the then-ACTIVE segment) is
+         rewritten keeping its committed rows;
+       - the live/dead counts re-derive (count, deleted_count) of every
+         registered segment from physical truth — a crash between a
+         partition swap and its registry update leaves counters stale,
+         and the normal fast paths deliberately trust counters instead
+         of re-counting (a rerun of the crashed delete would see its
+         tombstones as already-applied and never repair the drift;
+         caught by the delete crash test).
        This scan job is fine here: recovery is the rare path.
     """
+    spark = index.spark
     actions: dict = {"swaps": [], "writing_dropped": [], "compacting_reset": []}
     for path in (index.vectors_path, index.artifacts_path):
-        actions["swaps"] += recover_partial_swaps(index.spark, path)
+        actions["swaps"] += recover_partial_swaps(spark, path)
     # the swap recovery rewrites the tables without a registry write:
     # drop the cached searchable side here, not only at the choke point
     index.drop_searchable_side()
@@ -405,16 +414,27 @@ def recover(index: VectorIndex) -> dict:
         index.update_segment_states(updates)
     if actions["writing_dropped"]:
         actions["gc"] = gc(index)
-    truth = {
-        r["seg_id"]: (r["live"], r["dead"])
-        for r in index.vectors()
-        .groupBy("seg_id")
-        .agg(
-            F.count(F.when(~F.col("deleted"), 1)).alias("live"),
-            F.count(F.when(F.col("deleted"), 1)).alias("dead"),
-        )
-        .collect()
-    }
+    truth: dict[int, tuple[int, int]] = {}
+    scrubbed, rewrite = 0, []
+    if hadoop_exists(spark, index.vectors_path):
+        raw = spark.read.schema(VECTORS_SCHEMA).parquet(index.vectors_path)
+        committed = F.col("gid") < index.next_gid
+        for r in raw.groupBy("seg_id").agg(
+            F.count(F.when(committed & ~F.col("deleted"), 1)).alias("live"),
+            F.count(F.when(committed & F.col("deleted"), 1)).alias("dead"),
+            F.count(F.when(~committed, 1)).alias("orphans"),
+        ).collect():
+            sid = r["seg_id"]
+            truth[sid] = (r["live"], r["dead"])
+            scrubbed += r["orphans"]
+            if r["orphans"] and r["live"] + r["dead"] == 0:
+                _hadoop_delete(spark, f"{index.vectors_path}/seg_id={sid}")
+            elif r["orphans"]:
+                rewrite.append(sid)
+        if rewrite:
+            keep = raw.filter(F.col("seg_id").isin(rewrite) & committed)
+            staged_partition_rewrite(spark, keep, index.vectors_path, "seg_id")
+    actions["orphans_scrubbed"] = scrubbed
     fixes: dict[int, dict] = {}
     for r in index._segment_rows():
         live, dead = truth.get(r["seg_id"], (0, 0))

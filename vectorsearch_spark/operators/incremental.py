@@ -51,8 +51,8 @@ steps, all defined in this module:
 
 External readers load only epochs at or below ``committed_epoch``.
 ``start_fold_stream`` runs a fold over a stream until its source is
-drained. The streaming index ingest (``streaming/ingest.py``) keeps its
-own write-ahead-intent protocol.
+drained. The streaming index ingest (``streaming/ingest.py``) commits its epoch
+mark in the index catalog instead, with the add's rows.
 """
 
 from __future__ import annotations

@@ -41,6 +41,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectorsearch_spark.fsio import epoch_ids
 from vectorsearch_spark.operators.incremental import (
@@ -905,6 +906,24 @@ def stream_group_value_histogram(
 # ---------------------------------------------------------------------------
 
 
+# the value types hll_sketch_agg takes: TINYINT and SMALLINT are not
+# widened to INT, and FLOAT, DOUBLE and DECIMAL are refused
+_HLL_TYPES = (T.IntegerType, T.LongType, T.StringType, T.BinaryType)
+
+
+def _check_distinct_count_args(batch_df: DataFrame, col: str, lgk: int) -> None:
+    """The distinct-count folds' argument checks, run before the replay
+    guard; the column type comes from the analyzed schema (no job)."""
+    if not 4 <= int(lgk) <= 21:
+        raise ValueError("lgk must be in [4, 21]")
+    dtype = batch_df.select(col).schema[0].dataType
+    if not isinstance(dtype, _HLL_TYPES):
+        raise ValueError(
+            f"col {col!r} is {dtype.simpleString()}; a distinct-count sketch "
+            "takes INT, BIGINT, STRING or BINARY values"
+        )
+
+
 def fold_distinct_count_batch(
     batch_df: DataFrame,
     epoch_id: int,
@@ -936,8 +955,7 @@ def fold_distinct_count_batch(
     lifetime raises (sketch configs must match to union losslessly).
     Read with ``read_distinct_count_state``.
     """
-    if not 4 <= int(lgk) <= 21:
-        raise ValueError("lgk must be in [4, 21]")
+    _check_distinct_count_args(batch_df, col, lgk)
     spark = batch_df.sparkSession
     if epoch_already_applied(state_path, epoch_id):
         return
@@ -1244,8 +1262,7 @@ def fold_group_distinct_count_batch(
     ``fold_distinct_count_batch``. Read with
     ``read_group_distinct_count_state``.
     """
-    if not 4 <= int(lgk) <= 21:
-        raise ValueError("lgk must be in [4, 21]")
+    _check_distinct_count_args(batch_df, col, lgk)
     spark = batch_df.sparkSession
     if epoch_already_applied(state_path, epoch_id):
         return

@@ -1,9 +1,9 @@
 """Staged partition rewrite with a rename-based swap + crash recovery.
 
 Shared by every rewrite of the index tables — the build's artifacts
-write (index/build.py), the maintenance rewrites (index/maintenance.py)
-and the streaming orphan scrub (streaming/ingest.py) — and by the keyed
-MERGE operator (operators/merge.py).
+write (index/build.py), the maintenance rewrites and the recovery's
+orphan scrub (index/maintenance.py) — and by the keyed MERGE operator
+(operators/merge.py).
 
 Why not dynamic-partition overwrite: parquet cannot overwrite a path it
 is reading, so every rewrite must stage first — but the previous
